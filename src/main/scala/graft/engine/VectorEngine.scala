@@ -70,7 +70,7 @@ final class VectorEngine(
 
   // Per-library INDEX-RESOLUTION cache (ADVICE r14): `auto` dispatch used
   // to re-probe up to 8 tables (a store.exists + an isEmpty Spark action
-  // each) on EVERY search/annJoin/searchBatchAnn call, and the hnsw walk
+  // each) on EVERY search/annJoin call, and the hnsw walk
   // re-collected its layer list + max-level entry node per query. Both
   // change only when the library's index state changes, so they live here
   // keyed by libId and are dropped wherever that state mutates: catalog
@@ -104,9 +104,11 @@ final class VectorEngine(
       scala.collection.mutable.HashMap.empty,
     val cellPosts: scala.collection.mutable.HashMap[Int, Option[IndexedSeq[String]]] =
       scala.collection.mutable.HashMap.empty,
-    // None = not probed yet; Some(None) = too many centroids to cache
-    // (callers keep the distributed TakeOrdered); Some(Some(arr)) = the
-    // (centroid_id asc)-sorted (id, vector) pairs
+    // The coarse centroids every single-query probe (probeCells) and
+    // graph entry cell reads. None = not probed yet; Some(None) = too
+    // many centroids to cache (callers keep the distributed
+    // TakeOrdered); Some(Some(arr)) = the (centroid_id asc)-sorted
+    // (id, vector) pairs
     var centroids: Option[Option[IndexedSeq[(Int, Array[Float])]]] = None,
     // Whole-table warm-load markers (optimization r16): None = not
     // attempted, Some(true) = the WHOLE table is cached (a map miss is
@@ -130,9 +132,11 @@ final class VectorEngine(
   private val WalkCacheCap = 1 << 17
 
   /** annJoin batches at or below this size run the per-query cached-
-    * cursor walk (the bounded local finish); larger sets keep the
-    * distributed frontier-join walk. 1024 queries x beam x rounds of
-    * driver state is the same order as one collected search result.
+    * cursor walk (the bounded local finish) and broadcast their N x k
+    * top-k rows into the hydration join; larger sets keep the
+    * distributed frontier-join walk and a planner-chosen join. 1024
+    * queries x beam x rounds of driver state is the same order as one
+    * collected search result.
     */
   private val LocalAnnJoinCap = 1024
 
@@ -1562,7 +1566,8 @@ final class VectorEngine(
     // lazy plan once, exactly as before. Batch-bounded by the verb
     // contract, so the checkpoint footprint is O(batch) at any scale.
     val graphReuse = (config.indexType == "nsw_det" ||
-      config.indexType == "hnsw_det") && store.exists("ivf_centroids")
+      config.indexType == "hnsw_det") &&
+      store.hasLibraryPartition("ivf_centroids", libId)
     val ckpt = nPrior > 0L || graphReuse
     val merged = if (ckpt) merged0.localCheckpoint() else merged0
     // identical id set either way (merged only rewrites
@@ -2025,8 +2030,7 @@ final class VectorEngine(
     val (dim, config, _) = getLibrary(libId)
     if (query.length != dim)
       throw new ValidationError(s"query dim ${query.length} != library dim $dim")
-    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
-    similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
+    requireTopK(k, metric)
 
     val libChunks = chunks.filter(col("library_id") === libId)
     val isZero = query.forall(_ == 0f)
@@ -2037,50 +2041,43 @@ final class VectorEngine(
     // the ids passing the filters, BEFORE oversample caps and top-k — so a
     // pre-filtered query returns k rows whenever k matching candidates
     // exist (the documented deviation from quirk Q5).
-    val allowedIds: Option[DataFrame] =
-      if (preFilter && filters.isDefined)
-        Some(applyPost(libChunks.withColumnRenamed("id", "chunk_id"), filters)
-          .select("chunk_id"))
-      else None
-    def restrict(cands: DataFrame): DataFrame =
-      allowedIds.fold(cands)(a => cands.join(a, Seq("chunk_id"), "left_semi"))
+    val allowedIds = allowedIdsOf(libChunks, filters, preFilter)
+    def restrict(cands: DataFrame): DataFrame = restrictTo(allowedIds, cands)
+    // the full (pre-filtered) flat scan: the flat family, and every index
+    // family whose structures are not built yet (reference ivf.py:96-99)
+    def flat(): DataFrame =
+      flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+    // top-nprobe cells (ids + centroid vectors) for the normalized query:
+    // the driver argmax over the cached centroids — the posting/code
+    // probes below become `isin` literal filters that push into the
+    // parquet scan and prune partitions, with no join on the probe path
+    def probe(qn: Array[Float]): Array[(Int, Array[Float])] =
+      probeCells(libId, qn, math.max(1, config.ivfNprobe))
+    // exact rerank of hydrated candidates: the <= cap candidate side is
+    // broadcast against the partition-pruned chunk scan (quirk Q1)
+    def rerankHydrated(cands: DataFrame): DataFrame =
+      rerank(candidateNorms(broadcast(cands), libChunks, perCandidate = true),
+        query, metric)
 
     val effectiveType = effectiveIndexType(libId, config)
 
     // candidate (chunk_id, score) per index type
     val scored: DataFrame = effectiveType match {
-      case "flat" =>
-        flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+      case "flat" => flat()
       case "lsh" | "lsh_det" =>
         if (isZero) return emptyHits()
         val planes =
           if (!store.exists("lsh_planes")) Nil
           else LshIndex.collectPlanes(lshPlanes(libId))
-        if (planes.isEmpty)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (planes.isEmpty) flat()
         else {
           val cands = LshIndex.candidates(restrict(lshBuckets(libId)), query, planes, k)
           rerank(cands, query, metric)
         }
       case "ivf" | "ivf_det" =>
         if (isZero) return emptyHits()
-        val qn = LshIndex.normalizeDriver(query).get
-        // top-nprobe centroid ids resolved DRIVER-side (one TakeOrdered
-        // over k centroid rows — metadata-scale): the posting probe below
-        // becomes an `isin` literal filter that pushes into the parquet
-        // scan and prunes partitions, instead of an isEmpty job plus a
-        // broadcast-join stage
-        val topIds =
-          if (!store.exists("ivf_centroids")) Array.empty[Int]
-          else ivfCentroids(libId)
-            .select(col("centroid_id"),
-              dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-            .orderBy(col("cscore").desc, col("centroid_id").asc)
-            .limit(math.max(1, config.ivfNprobe))
-            .collect().map(_.getInt(0))
-        if (topIds.isEmpty)
-          // no centroids yet -> full flat scan (reference ivf.py:96-99)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        val topIds = probe(LshIndex.normalizeDriver(query).get).map(_._1)
+        if (topIds.isEmpty) flat()
         else {
           val cands = restrict(ivfPostings(libId))
             .filter(col("centroid_id").isin(topIds.toIndexedSeq.map(Int.box): _*))
@@ -2115,16 +2112,14 @@ final class VectorEngine(
             // entry cell was emptied by deletes, or no allowed node is
             // reachable): full (pre-filtered) flat scan, as the other
             // families' not-built paths
-            flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+            flat()
         }
       case "pq" | "pq_trained" =>
         if (isZero) return emptyHits()
         val cb =
           if (!store.exists("pq_codebooks")) Array.empty[Array[Array[Float]]]
           else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty)
-          // codebooks not built yet -> full flat scan (as the IVF path)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (cb.isEmpty) flat()
         else {
           // ADC candidate generation over the codes scan (integer
           // micro-unit distances, cap 6k), then the exact rerank the
@@ -2137,161 +2132,79 @@ final class VectorEngine(
       case "ivfbq" =>
         if (isZero) return emptyHits()
         val qn = LshIndex.normalizeDriver(query).get
-        // top-nprobe cells resolved driver-side (one TakeOrdered over
-        // metadata-scale centroid rows — the ivf probe), pushed as a
-        // literal isin into the packed-code scan: candidates touch
-        // nprobe/K of the inverted lists, no join on the probe path
-        val topIds =
-          if (!store.exists("ivf_centroids")) Array.empty[Int]
-          else ivfCentroids(libId)
-            .select(col("centroid_id"),
-              dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-            .orderBy(col("cscore").desc, col("centroid_id").asc)
-            .limit(math.max(1, config.ivfNprobe))
-            .collect().map(_.getInt(0))
+        // the probed cells prune the packed-code scan: candidates touch
+        // nprobe/K of the inverted lists
+        val topIds = probe(qn).map(_._1)
         val ibqDf = if (store.exists("ivfbq_codes")) ivfbqCodes(libId) else null
-        if (topIds.isEmpty || ibqDf == null || ibqDf.isEmpty)
-          // not built yet -> full flat scan (as the other paths)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
-        else {
-          val cands = BqIndex.candidates(
-            restrict(ibqDf
-              .filter(col("centroid_id")
-                .isin(topIds.toIndexedSeq.map(Int.box): _*))),
-            BqIndex.encodeQuery(qn), k)
-          val hydrated = broadcast(cands)
-            .join(libChunks.filter(col("embedding").isNotNull)
-                .select(col("id").as("chunk_id"), col("embedding")),
-              "chunk_id")
-            .select(col("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated, query, metric)
-        }
+        if (topIds.isEmpty || ibqDf == null || ibqDf.isEmpty) flat()
+        else rerankHydrated(BqIndex.candidates(
+          restrict(ibqDf
+            .filter(col("centroid_id")
+              .isin(topIds.toIndexedSeq.map(Int.box): _*))),
+          BqIndex.encodeQuery(qn), k))
       case "bq" =>
         if (isZero) return emptyHits()
         val codesDf = if (store.exists("bq_codes")) bqCodes(libId) else null
-        if (codesDf == null || codesDf.isEmpty)
-          // codes not built yet -> full flat scan (as the other paths)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (codesDf == null || codesDf.isEmpty) flat()
         else {
           // packed-word scan: xor+popcount hamming in integer units
           // against the driver-packed query code, cap 6k, then hydrate
           // ONLY the capped candidates and exact-rerank (quirk Q1)
           val qn = LshIndex.normalizeDriver(query).get
-          val cands = BqIndex.candidates(restrict(codesDf),
-            BqIndex.encodeQuery(qn), k)
-          val hydrated = broadcast(cands)
-            .join(libChunks.filter(col("embedding").isNotNull)
-                .select(col("id").as("chunk_id"), col("embedding")),
-              "chunk_id")
-            .select(col("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated, query, metric)
+          rerankHydrated(BqIndex.candidates(restrict(codesDf),
+            BqIndex.encodeQuery(qn), k))
         }
       case "sq8" =>
         if (isZero) return emptyHits()
         val p =
           if (!store.exists("sq8_params")) Array.empty[(Double, Double)]
           else Sq8Index.collectParams(sq8Params(libId))
-        if (p.isEmpty)
-          // ranges not built yet -> full flat scan (as the other paths)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (p.isEmpty) flat()
         else {
           // byte-code scan: decode-approx L2 in integer micro-units
           // against plan-literal ranges, cap 6k, then hydrate ONLY the
           // capped candidates from the chunk store and exact-rerank
           val qn = LshIndex.normalizeDriver(query).get
-          val cands = Sq8Index.candidates(restrict(sq8Codes(libId)), p, qn, k)
-          val hydrated = broadcast(cands)
-            .join(libChunks.filter(col("embedding").isNotNull)
-                .select(col("id").as("chunk_id"), col("embedding")),
-              "chunk_id")
-            .select(col("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated, query, metric)
+          rerankHydrated(Sq8Index.candidates(restrict(sq8Codes(libId)), p, qn, k))
         }
       case "ivfpq" | "ivfpq_trained" =>
         if (isZero) return emptyHits()
         val qn = LshIndex.normalizeDriver(query).get
-        // top-nprobe cells WITH their centroid vectors (the ADC tables
-        // need the cell's residual origin) — still one driver-side
-        // TakeOrdered over metadata-scale centroid rows
-        val topCents: Array[(Int, Array[Float])] =
-          if (!store.exists("ivf_centroids")) Array.empty
-          else ivfCentroids(libId)
-            .select(col("centroid_id"), col("vector"),
-              dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-            .orderBy(col("cscore").desc, col("centroid_id").asc)
-            .limit(math.max(1, config.ivfNprobe))
-            .collect()
-            .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        // the probed cells WITH their centroid vectors: the ADC tables
+        // need each cell's residual origin
+        val topCents = probe(qn)
         val cb =
           if (topCents.isEmpty || !store.exists("pq_codebooks"))
             Array.empty[Array[Array[Float]]]
           else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty)
-          // not built yet -> full flat scan (as the IVF/PQ paths)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (cb.isEmpty) flat()
         else {
           // byte-compressed inverted lists: centroid-pruned codes scan,
           // integer micro-unit ADC over residual codes, cap 6k — then
           // hydrate the exact vectors for ONLY the capped candidates
           // from the primary chunk store (the codes table stores no
           // vectors) and rerank per the engine's scoring contract
-          val cands = IvfPqIndex.candidates(restrict(ivfpqCodes(libId)),
-            topCents, cb, qn, k)
-          // embedding.isNotNull mirrors flatScore: codes-table provenance
-          // already guarantees embedded chunks, but the invariant should
-          // be local, not implied by another table
-          val hydrated = broadcast(cands)
-            .join(libChunks.filter(col("embedding").isNotNull)
-                .select(col("id").as("chunk_id"), col("embedding")),
-              "chunk_id")
-            .select(col("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated, query, metric)
+          rerankHydrated(IvfPqIndex.candidates(restrict(ivfpqCodes(libId)),
+            topCents, cb, qn, k))
         }
       case "ivfsq8" =>
         if (isZero) return emptyHits()
         val qn = LshIndex.normalizeDriver(query).get
-        // top-nprobe cells WITH their centroid vectors (the per-cell
-        // query residuals need the cell's origin) — one driver-side
-        // TakeOrdered over metadata-scale centroid rows, as ivfpq
-        val topCents: Array[(Int, Array[Float])] =
-          if (!store.exists("ivf_centroids")) Array.empty
-          else ivfCentroids(libId)
-            .select(col("centroid_id"), col("vector"),
-              dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-            .orderBy(col("cscore").desc, col("centroid_id").asc)
-            .limit(math.max(1, config.ivfNprobe))
-            .collect()
-            .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        // the probed cells WITH their centroid vectors: the per-cell
+        // query residuals need each cell's origin
+        val topCents = probe(qn)
         val pmap =
           if (topCents.isEmpty || !store.exists("ivfsq8_params"))
             Map.empty[Int, Array[(Double, Double)]]
           else IvfSq8Index.collectParams(ivfsq8Params(libId))
-        if (pmap.isEmpty)
-          // not built yet -> full flat scan (as the other paths)
-          flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+        if (pmap.isEmpty) flat()
         else {
           // centroid-pruned byte-code inverted lists: per probed cell a
           // decode-approx L2 against the cell's plan-literal ranges and
           // the query residual, cap 6k union-wide — then hydrate the
           // exact vectors for ONLY the capped candidates and rerank
-          val cands = IvfSq8Index.candidates(restrict(ivfsq8Codes(libId)),
-            pmap, topCents, qn, k)
-          val hydrated = broadcast(cands)
-            .join(libChunks.filter(col("embedding").isNotNull)
-                .select(col("id").as("chunk_id"), col("embedding")),
-              "chunk_id")
-            .select(col("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated, query, metric)
+          rerankHydrated(IvfSq8Index.candidates(restrict(ivfsq8Codes(libId)),
+            pmap, topCents, qn, k))
         }
     }
 
@@ -2687,12 +2600,12 @@ final class VectorEngine(
   /** Batch kNN: N query vectors answered in ONE distributed pass — the
     * Spark-native throughput shape the reference's per-request API cannot
     * express (its README benchmarks one query at a time). Queries are
-    * broadcast against the partition-pruned chunk scan; per-query top-k
-    * via a window over (query_id), post-filters per quirk Q5. Returns the
-    * search hit shape plus a leading `query_id` column.
+    * broadcast against the partition-pruned chunk scan; per-query top-k,
+    * hydration and post-filters (quirk Q5) are the shared batch tail.
+    * Returns the search hit shape plus a leading `query_id` column.
     *
-    * Flat/exact only (each query of an LSH/IVF batch would probe different
-    * buckets; loop `search` for those), which is also the reference's only
+    * Flat/exact only, whatever the library's index (index-routed batches
+    * are `searchBatchAnn`/`annJoin`), which is also the reference's only
     * metric-exact path.
     */
   def searchBatch(libIdOrAlias: String, queries: Seq[(Long, Array[Float])], k: Int,
@@ -2703,8 +2616,7 @@ final class VectorEngine(
       if (q.length != dim)
         throw new ValidationError(s"query $qid dim ${q.length} != library dim $dim")
     }
-    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
-    similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
+    requireTopK(k, metric)
     val qRows = queries.map { case (qid, q) => Row(qid, q.toSeq) }
     val qDf = spark.createDataFrame(
       spark.sparkContext.parallelize(qRows, 1),
@@ -2719,25 +2631,29 @@ final class VectorEngine(
       .crossJoin(broadcast(qDf))
       .select(col("query_id"), col("id").as("chunk_id"),
         similarity(metric)(col("embedding"), col("qvec")).as("score"))
-    batchTopKHydrate(scored, libChunks, k, filters)
+    batchTopKHydrate(scored, libChunks, k, filters, queries.length)
   }
 
-  /** Shared batch tail: per-query top-k via the k-bounded PARTIAL
-    * aggregator, not a window — the map side reduces each partition to
-    * <= k rows per query BEFORE the shuffle (k*N rows total), where the
-    * window formulation shuffles and sorts the full candidate set — then
-    * the broadcast hydration join, post-filters (quirk Q5), and the hit
-    * projection with a leading query_id.
+  /** The one batch result tail (searchBatch, searchBatchAnn, annJoin):
+    * per-query top-k via the k-bounded PARTIAL aggregator, not a window —
+    * the map side reduces each partition to <= k rows per query BEFORE the
+    * shuffle (k*N rows total), where the window formulation shuffles and
+    * sorts the full candidate set — then the hydration join, post-filters
+    * (quirk Q5), and the hit projection with a leading query_id. The
+    * top-k side is broadcast (a map-side hydration) only while the known
+    * query count `nq` is driver-bounded (<= LocalAnnJoinCap); at
+    * DataFrame-scale N the N x k rows must not be forced into every
+    * executor's memory, so the planner picks the join.
     */
   private def batchTopKHydrate(scored: DataFrame, libChunks: DataFrame,
-      k: Int, filters: Option[SearchFilters]): DataFrame = {
+      k: Int, filters: Option[SearchFilters], nq: Long): DataFrame = {
     import spark.implicits._
     val topk = scored.as[(Long, String, Double)]
       .groupByKey(_._1)
       .agg(graft.functions.TopKAggregator.topKStr(k).toColumn)
       .flatMap { case (qid, hits) => hits.map(h => (qid, h._2, h._1)) }
       .toDF("query_id", "chunk_id", "score")
-    val hydrated = broadcast(topk)
+    val hydrated = (if (nq <= LocalAnnJoinCap) broadcast(topk) else topk)
       .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id")
     applyPost(hydrated, filters)
       .select(col("query_id"), col("chunk_id"), col("document_id"),
@@ -2746,421 +2662,46 @@ final class VectorEngine(
       .orderBy(col("query_id").asc, col("score").desc, col("chunk_id").asc)
   }
 
-  /** Batch kNN routed through the library's INDEX — the 100 TB pipeline
-    * shape a training-data run actually executes (millions of queries x an
-    * IVFPQ corpus), answered in one distributed pass with no per-query
-    * driver round-trips. Row-for-row equal to N single `search` calls on
-    * every index family (EngineSpec asserts it); returns the hit shape
-    * with a leading `query_id`, ordered (query_id, score desc, chunk_id).
-    *
-    * Batching per family:
-    *   - flat: broadcast cross-score (the exact `searchBatch` shape);
-    *   - lsh: per-query probe signatures computed driver-side (the planes
-    *     are already driver-resident metadata), ONE bucket equi-join on
-    *     (table_id, signature) for ALL queries, per-query multiplicity
-    *     rank + oversample cap via the k-bounded partial aggregator, and
-    *     the reference's <k pad replayed per deficient query;
-    *   - ivf: ONE broadcast centroid join + per-query top-nprobe partial
-    *     aggregation (instead of N driver TakeOrdereds), then a
-    *     (centroid_id) equi-join of the probe pairs against the
-    *     isin-pruned postings scan;
-    *   - pq / ivfpq: per-(query[, cell]) ADC tables computed driver-side —
-    *     N x nprobe x M x K longs, metadata-scale for API batches — and
-    *     JOINED to the (pruned) codes scan by centroid_id, per-query
-    *     candidate cap, exact rerank hydrated from the chunk store.
-    *
-    * Zero-vector queries contribute no rows on index paths (single-query
-    * `search` returns empty for them, quirk Q4) and all-zero scores on
-    * flat.
+  /** Batch kNN routed through the library's INDEX for a driver-side query
+    * Seq — a driver-validated front end to [[annJoin]]: a query whose
+    * dimension differs from the library's, or a duplicate query id,
+    * throws ValidationError here (annJoin silently drops mismatched rows),
+    * and k and the metric are checked. The Seq becomes a local
+    * (query_id, qvec) frame run through annJoin's one batch pipeline,
+    * with the query count known up front, so the front end adds no Spark
+    * job. Row-for-row equal to N single `search` calls on every index
+    * family (EngineSpec asserts it); returns the hit shape with a leading
+    * `query_id`, ordered (query_id, score desc, chunk_id). Zero-vector
+    * queries contribute no rows on index paths (single `search` returns
+    * empty for them, quirk Q4) and all-zero scores on flat.
     */
   def searchBatchAnn(libIdOrAlias: String, queries: Seq[(Long, Array[Float])], k: Int,
       metric: String = "cosine", filters: Option[SearchFilters] = None,
       preFilter: Boolean = false): DataFrame = {
     val libId = resolveLibrary(libIdOrAlias)
-    val (dim, config, _) = getLibrary(libId)
+    val (dim, _, _) = getLibrary(libId)
     queries.foreach { case (qid, q) =>
       if (q.length != dim)
         throw new ValidationError(s"query $qid dim ${q.length} != library dim $dim")
     }
     // duplicate ids would silently mix candidates/scores across the rows
-    // sharing the id (qnorms.toMap keeps only the last vector for
-    // probe/ADC while the rerank joins every raw qvec per id) — reject
+    // sharing the id (the probe/ADC stages key on query_id) — reject
     if (queries.map(_._1).distinct.length != queries.length)
       throw new ValidationError("searchBatchAnn query set has duplicate query_ids")
-    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
-    similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
+    requireTopK(k, metric)
     import spark.implicits._
-
-    val libChunks = chunks.filter(col("library_id") === libId)
-    val effType = effectiveIndexType(libId, config)
-    val live =
-      if (effType == "flat") queries
-      else queries.filterNot(_._2.forall(_ == 0f))
-    if (live.isEmpty) return emptyBatchHits()
-
-    // (query_id, qvec): the RAW query vectors — index-path rerank scores
-    // normalized stored vectors against the UNNORMALIZED query (quirk Q1)
-    lazy val qDf = live.map { case (qid, q) => (qid, q.toSeq) }
-      .toDF("query_id", "qvec")
-    // normalized queries for candidate generation (probe/signature/ADC)
-    lazy val qnorms: Seq[(Long, Array[Float])] =
-      live.map { case (qid, q) => (qid, LshIndex.normalizeDriver(q).get) }
-
-    // preFilter restricts candidate generation, as in single `search`
-    val allowedIds: Option[DataFrame] =
-      if (preFilter && filters.isDefined)
-        Some(applyPost(libChunks.withColumnRenamed("id", "chunk_id"), filters)
-          .select("chunk_id"))
-      else None
-    def restrict(cands: DataFrame): DataFrame =
-      allowedIds.fold(cands)(a => cands.join(a, Seq("chunk_id"), "left_semi"))
-
-    // `qids = None` scores every live query; `Some(ids)` restricts the
-    // broadcast query side to a subset — the per-query fallback the
-    // nsw branch uses when SOME walks come back empty (ADVICE r13)
-    def flatBatchFor(qids: Option[Seq[Long]]): DataFrame = {
-      val side = qids.fold(qDf)(ids =>
-        qDf.filter(col("query_id").isin(ids.map(Long.box): _*)))
-      applyPre(libChunks, filters, preFilter)
-        .filter(col("embedding").isNotNull)
-        .crossJoin(broadcast(side))
-        .select(col("query_id"), col("id").as("chunk_id"),
-          similarity(metric)(col("embedding"), col("qvec")).as("score"))
-    }
-    def flatBatch(): DataFrame = flatBatchFor(None)
-
-    // exact rerank of (query_id, chunk_id, embedding_norm) candidates
-    def rerankBatch(cands: DataFrame): DataFrame =
-      cands.join(broadcast(qDf), Seq("query_id"))
-        .select(col("query_id"), col("chunk_id"),
-          similarity(metric)(col("embedding_norm"), col("qvec")).as("score"))
-
-    // ONE broadcast centroid join + per-query top-nprobe partial agg:
-    // (cscore desc, centroid_id asc) per query, the single-path order
-    def probePairs(cents: DataFrame, nprobe: Int): Array[(Long, Int)] = {
-      val qnDf = qnorms.map { case (qid, qn) => (qid, qn.toSeq) }
-        .toDF("query_id", "qnorm")
-      qnDf.crossJoin(broadcast(cents.select(col("centroid_id"), col("vector"))))
-        .select(col("query_id"), col("centroid_id").cast("long"),
-          dotProduct(col("vector"), col("qnorm")).as("cscore"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .agg(graft.functions.TopKAggregator.topK(nprobe).toColumn)
-        .flatMap { case (qid, cs) => cs.map(c => (qid, c._2.toInt)) }
-        .collect()
-    }
-
-    // per-query candidate cap via the partial aggregator; `scoreCol` must
-    // encode the family's candidate order as (scoreCol desc, chunk_id asc)
-    def capPerQuery(cands: DataFrame, scoreCol: Column, cap: Int): DataFrame =
-      cands.select(col("query_id"), col("chunk_id"), scoreCol.cast("double"))
-        .as[(Long, String, Double)]
-        .groupByKey(_._1)
-        .agg(graft.functions.TopKAggregator.topKStr(cap).toColumn)
-        .flatMap { case (qid, hs) => hs.map(h => (qid, h._2)) }
-        .toDF("query_id", "chunk_id")
-
-    val scored: DataFrame = effType match {
-      case "flat" => flatBatch()
-
-      case "lsh" | "lsh_det" =>
-        val planes =
-          if (!store.exists("lsh_planes")) Nil
-          else LshIndex.collectPlanes(lshPlanes(libId))
-        if (planes.isEmpty) flatBatch()
-        else {
-          // per-query multi-probe keys (base signature + Hamming-1 flips),
-          // driver-side over the already-resident planes
-          val probeDf = qnorms.flatMap { case (qid, qn) =>
-            planes.flatMap { case (t, ps) =>
-              val s = LshIndex.signatureOf(qn, ps)
-              (s +: ps.indices.map(i => s ^ (1L << i))).map(sig => (qid, t, sig))
-            }
-          }.toDF("query_id", "table_id", "signature")
-          val buckets = restrict(lshBuckets(libId))
-          val ranked = buckets
-            .join(broadcast(probeDf), Seq("table_id", "signature"))
-            .groupBy(col("query_id"), col("chunk_id"))
-            .agg(count(lit(1)).as("n_matches"))
-          // multiplicity rank + oversample cap, per query; materialized so
-          // the pad count + anti-join + rerank reuse one bucket-join run
-          val capped = graft.Caches.track(capPerQuery(ranked, col("n_matches"),
-            LshIndex.Oversample * k).localCheckpoint())
-          val norms = buckets.select(col("chunk_id"), col("embedding_norm"))
-            .dropDuplicates("chunk_id")
-          // the reference's <k fallback pad (lsh.py:101-110): deficient
-          // queries take the lowest-id indexed chunks up to 2k total
-          val haveMap = capped.groupBy("query_id").count().collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val deficient = live.map(_._1).filter(haveMap.getOrElse(_, 0L) < k)
-          val withPad =
-            if (deficient.isEmpty) capped
-            else {
-              val needMap = deficient.map(q =>
-                q -> (2 * k - haveMap.getOrElse(q, 0L).toInt).max(0)).toMap
-              val defDf = deficient.map(Tuple1(_)).toDF("query_id")
-              val pad = norms.select("chunk_id").crossJoin(broadcast(defDf))
-                .join(broadcast(capped), Seq("query_id", "chunk_id"), "left_anti")
-                .select(col("query_id"), col("chunk_id"), lit(0.0).as("s"))
-                .as[(Long, String, Double)]
-                .groupByKey(_._1)
-                .agg(graft.functions.TopKAggregator.topKStr(2 * k).toColumn)
-                .flatMap { case (qid, hs) =>
-                  hs.take(needMap.getOrElse(qid, 0)).map(h => (qid, h._2)) }
-                .toDF("query_id", "chunk_id")
-              capped.unionAll(pad)
-            }
-          rerankBatch(norms.join(broadcast(withPad), Seq("chunk_id")))
-        }
-
-      case "ivf" | "ivf_det" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
-        cents match {
-          case None => flatBatch()
-          case Some(c) =>
-            val pairs = probePairs(c, math.max(1, config.ivfNprobe))
-            val cids = pairs.map(_._2).distinct.toIndexedSeq
-            val pairsDf = pairs.toSeq.toDF("query_id", "centroid_id")
-            val cands = restrict(ivfPostings(libId))
-              .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-              .join(broadcast(pairsDf), Seq("centroid_id"))
-              .select(col("query_id"), col("chunk_id"), col("embedding_norm"))
-              .dropDuplicates("query_id", "chunk_id") // as single-path IVF
-            rerankBatch(cands)
-        }
-
-      case "nsw_det" | "hnsw_det" =>
-        // the beam walk is inherently per-query-iterative; this Seq API
-        // runs one bounded walk per query (API-sized batches — a
-        // corpus-scale query SET goes through annJoin's frontier-join
-        // walk, which keeps all per-query beams in one distributed frame)
-        if (!store.exists("nsw_edges")) flatBatch()
-        else {
-          val posts = ivfPostings(libId)
-          val walkAllowed = if (preFilter) allowedIds else None
-          // Some(Nil) — the query's entry cell emptied by deletes, a
-          // reachable state (NswSpec) — falls back to the flat scan for
-          // THAT query, exactly as single `search` does; only the
-          // queries whose walk found ids go through the index rerank
-          // (batch/single parity, ADVICE r13)
-          val walked: Seq[(Long, Option[Seq[String]])] =
-            qnorms.map { case (qid, qnv) =>
-              val w =
-                if (effType == "hnsw_det")
-                  hnswWalkIds(libId, config, qnv, k, None, walkAllowed)
-                else nswWalkIds(libId, config, qnv, k, None, walkAllowed)
-              (qid, w.filter(_.nonEmpty))
-            }
-          val hit = walked.collect { case (qid, Some(ids)) =>
-            posts.filter(col("chunk_id").isin(ids: _*))
-              .select(lit(qid).as("query_id"), col("chunk_id"),
-                col("embedding_norm"))
-          }
-          val missed = walked.collect { case (qid, None) => qid }
-          val parts = Seq(
-            if (hit.isEmpty) None
-            else Some(rerankBatch(restrict(hit.reduce(_ unionAll _)))),
-            if (missed.isEmpty) None else Some(flatBatchFor(Some(missed)))
-          ).flatten
-          parts.reduce(_ unionAll _)
-        }
-
-      case "pq" | "pq_trained" =>
-        val cb =
-          if (!store.exists("pq_codebooks")) Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flatBatch()
-        else {
-          val dtabDf = qnorms.map { case (qid, qn) =>
-            (qid, PqIndex.dtabFlat(qn, cb).toSeq)
-          }.toDF("query_id", "dtab")
-          val dists = restrict(pqCodes(libId))
-            .crossJoin(broadcast(dtabDf))
-            .select(col("query_id"), col("chunk_id"),
-              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u"))
-          // (dist asc, chunk_id asc) == (-dist desc, chunk_id asc)
-          val capped = capPerQuery(dists, -col("dist_u"), PqIndex.Oversample * k)
-          val norms = pqCodes(libId).select(col("chunk_id"), col("embedding_norm"))
-          rerankBatch(norms.join(broadcast(capped), Seq("chunk_id")))
-        }
-
-      case "ivfbq" =>
-        val ibqCents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
-        val ibqDf = if (store.exists("ivfbq_codes")) ivfbqCodes(libId) else null
-        if (ibqCents.isEmpty || ibqDf == null || ibqDf.isEmpty) flatBatch()
-        else {
-          // cell-pruned batch hamming: the union of probed cells prunes
-          // the packed scan via a literal isin, pair membership and the
-          // driver-packed query codes join as broadcast tables
-          val pairs = probePairs(ibqCents.get, math.max(1, config.ivfNprobe))
-          val cids = pairs.map(_._2).distinct.toIndexedSeq
-          val qcDf = qnorms.map { case (qid, qnv) =>
-            (qid, BqIndex.encodeQuery(qnv).toSeq)
-          }.toDF("query_id", "qcode")
-          val pairsDf = pairs.toIndexedSeq.toDF("query_id", "centroid_id")
-          val dists = restrict(ibqDf)
-            .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-            .join(broadcast(pairsDf), Seq("centroid_id"))
-            .join(broadcast(qcDf), Seq("query_id"))
-            .select(col("query_id"), col("chunk_id"),
-              BqIndex.hammingExpr(BqIndex.words(dim),
-                w => element_at(col("qcode"), w + 1)).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"),
-            IvfBqIndex.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(broadcast(capped), Seq("chunk_id"))
-          rerankBatch(hydrated)
-        }
-
-      case "bq" =>
-        val bqDf = if (store.exists("bq_codes")) bqCodes(libId) else null
-        if (bqDf == null || bqDf.isEmpty) flatBatch()
-        else {
-          // driver-packed query codes (|queries| x ceil(dim/64) longs) as
-          // a broadcast table; xor+popcount hamming per (query, code) row
-          val qcDf = qnorms.map { case (qid, qnv) =>
-            (qid, BqIndex.encodeQuery(qnv).toSeq)
-          }.toDF("query_id", "qcode")
-          val dists = restrict(bqDf)
-            .crossJoin(broadcast(qcDf))
-            .select(col("query_id"), col("chunk_id"),
-              BqIndex.hammingExpr(BqIndex.words(dim),
-                w => element_at(col("qcode"), w + 1)).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), BqIndex.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(broadcast(capped), Seq("chunk_id"))
-          rerankBatch(hydrated)
-        }
-
-      case "sq8" =>
-        val p =
-          if (!store.exists("sq8_params")) Array.empty[(Double, Double)]
-          else Sq8Index.collectParams(sq8Params(libId))
-        if (p.isEmpty) flatBatch()
-        else {
-          // queries as a broadcast table; the per-dim decode uses the
-          // SAME plan-literal ranges as the single-query path, with the
-          // query side read from the broadcast row instead of a literal
-          val qnDf = qnorms.map { case (qid, qn) => (qid, qn.toSeq) }
-            .toDF("query_id", "qnorm")
-          val dists = restrict(sq8Codes(libId))
-            .crossJoin(broadcast(qnDf))
-            .select(col("query_id"), col("chunk_id"),
-              Sq8Index.distExpr(p,
-                i => element_at(col("qnorm"), i + 1).cast("double")).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), Sq8Index.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(broadcast(capped), Seq("chunk_id"))
-          rerankBatch(hydrated)
-        }
-
-      case "ivfpq" | "ivfpq_trained" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
-        val cb =
-          if (cents.isEmpty || !store.exists("pq_codebooks"))
-            Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flatBatch()
-        else {
-          val c = cents.get
-          val pairs = probePairs(c, math.max(1, config.ivfNprobe))
-          val cids = pairs.map(_._2).distinct.toIndexedSeq
-          // cell centroid vectors (metadata-scale) for the per-(query,
-          // cell) residual ADC tables
-          val cvec: Map[Int, Array[Float]] = c
-            .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-            .select(col("centroid_id"), col("vector")).collect()
-            .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-          val qnMap = qnorms.toMap
-          val probeDf = pairs.map { case (qid, cid) =>
-            (qid, cid, IvfPqIndex.dtabForCell(qnMap(qid), cvec(cid), cb).toSeq)
-          }.toSeq.toDF("query_id", "centroid_id", "dtab")
-          val dists = restrict(ivfpqCodes(libId))
-            .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-            .join(broadcast(probeDf), Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"),
-              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), IvfPqIndex.Oversample * k)
-          // hydrate exact vectors for ONLY the capped candidates from the
-          // primary chunk store (the codes table stores no vectors)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(broadcast(capped), Seq("chunk_id"))
-          rerankBatch(hydrated)
-        }
-
-      case "ivfsq8" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
-        val pmap =
-          if (cents.isEmpty || !store.exists("ivfsq8_params"))
-            Map.empty[Int, Array[(Double, Double)]]
-          else IvfSq8Index.collectParams(ivfsq8Params(libId))
-        if (pmap.isEmpty) flatBatch()
-        else {
-          val c = cents.get
-          val pairs = probePairs(c, math.max(1, config.ivfNprobe))
-          val cids = pairs.map(_._2).distinct.toIndexedSeq
-          // per-(query, cell) FLOAT query residual (the encode arithmetic
-          // verbatim), broadcast beside the probe pairs; the candidate
-          // rows decode against the cell's map-literal ranges
-          val cvec: Map[Int, Array[Float]] = c
-            .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-            .select(col("centroid_id"), col("vector")).collect()
-            .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-          val qnMap = qnorms.toMap
-          val probeDf = pairs.map { case (qid, cid) =>
-            val cv = cvec(cid); val qv = qnMap(qid)
-            (qid, cid, qv.indices.map(i => (qv(i) - cv(i)).toDouble))
-          }.toSeq.toDF("query_id", "centroid_id", "qres")
-          val dists = restrict(ivfsq8Codes(libId))
-            .filter(col("centroid_id").isin(cids.map(Int.box): _*))
-            .join(broadcast(probeDf), Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"),
-              IvfSq8Index.adcDistExpr(pmap).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), IvfSq8Index.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(broadcast(capped), Seq("chunk_id"))
-          rerankBatch(hydrated)
-        }
-    }
-    batchTopKHydrate(scored, libChunks, k, filters)
+    val q = queries.map { case (qid, v) => (qid, v.toSeq) }.toDF("query_id", "qvec")
+    annJoinOn(libId, q, queries.length.toLong, k, metric, filters, preFilter)
   }
 
-  private def emptyBatchHits(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
-      StructField("query_id", LongType) +: emptyHits().schema.fields.toIndexedSeq))
-  }
-
-  /** ANN TOP-K SIMILARITY JOIN — queries as a DATAFRAME. `searchBatchAnn`
-    * takes a driver-side Seq, which caps the batch at driver memory; the
-    * pipeline shape a 100 TB training-data run actually executes is
-    * millions of query vectors x an indexed corpus, and that query set
-    * must itself be distributed. Input: (query_id: long, qvec:
-    * array<float>); output: the batch hit shape. NOTHING query-dependent
-    * ever lands on the driver:
+  /** ANN TOP-K SIMILARITY JOIN — queries as a DATAFRAME, and the engine's
+    * ONE batch ANN pipeline (`searchBatchAnn` is its driver-validated
+    * front end for a Seq). The pipeline shape a 100 TB training-data run
+    * actually executes is millions of query vectors x an indexed corpus,
+    * and that query set must itself be distributed. Input: (query_id:
+    * long, qvec: array<float>); output: the batch hit shape. Nothing
+    * query-dependent lands on the driver, except the graph families'
+    * bounded local finish below:
     *
     *   - flat: corpus x queries cross-score (exact — inherently the
     *     cartesian), per-query k-bounded partial top-k;
@@ -3168,11 +2709,10 @@ final class VectorEngine(
     *     partial agg -> postings equi-join on centroid_id;
     *   - ivfpq: probe join as ivf, then the per-(query, cell) ADC
     *     distance TABLE materialized on executors by the AdcDtab codegen
-    *     kernel (IvfPqIndex.adcDtabExpr — the same tables searchBatchAnn
-    *     builds driver-side, computed where the probe pairs live) and
-    *     each candidate row summing M lookups; same micro-unit floor
-    *     convention, so ranks (and the spec-asserted results) are
-    *     bit-identical;
+    *     kernel (IvfPqIndex.adcDtabExpr — the same micro-unit floors as
+    *     the single-query driver dtab) and each candidate row summing M
+    *     lookups, so ranks (and the spec-asserted results) are
+    *     bit-identical to `search`;
     *   - lsh: per-query multi-probe signatures as EXPRESSIONS (the same
     *     sign-bit pack the bucket build codegens, planes as literals;
     *     flips are xors over the bound base signature), ONE bucket
@@ -3182,17 +2722,21 @@ final class VectorEngine(
     *     set (2k + capped ids always cover any query's deficit), so no
     *     per-query driver counts exist;
     *   - pq: flat-ADC against the codebook literal with the query itself
-    *     as the residual (no coarse quantizer) — the batch path's
-    *     driver-side dtabs never materialize; identical micro-unit
-    *     floors, identical ranks.
+    *     as the residual (no coarse quantizer), the single-query
+    *     PqIndex.dtabFlat floors computed on executors;
+    *   - nsw_det / hnsw_det: up to LocalAnnJoinCap queries run the
+    *     lockstep cached-cursor walks on the driver (with or without
+    *     `preFilter`); larger sets the distributed frontier-join walk.
     *
     * Rows whose qvec dimension mismatches the library contribute no
     * rows. Zero-vector queries contribute no rows on INDEX paths
-    * (normalize -> null, quirk Q4) but score all-zero on flat — the
-    * same contract as `searchBatchAnn`/`searchBatch` (the flat branch
-    * scores the raw, un-normalized query, quirk Q1). Duplicate
-    * query_ids are rejected (ValidationError) — one eager metadata-agg
-    * over the query set, the only action this method runs. Post-filters
+    * (normalize -> null, quirk Q4; also when an unbuilt index falls back
+    * to the flat scan) but score all-zero on flat — the same contract as
+    * `search`/`searchBatch` (the flat branch scores the raw,
+    * un-normalized query, quirk Q1). Duplicate query_ids are rejected
+    * (ValidationError) — one eager metadata-agg over the query set, the
+    * only action this method runs, which also yields the query count the
+    * local finish and the result tail size themselves by. Post-filters
     * per quirk Q5; `preFilter = true` restricts candidate generation
     * first, as in `search`.
     */
@@ -3200,23 +2744,8 @@ final class VectorEngine(
       metric: String = "cosine", filters: Option[SearchFilters] = None,
       preFilter: Boolean = false): DataFrame = {
     val libId = resolveLibrary(libIdOrAlias)
-    val (dim, config, _) = getLibrary(libId)
-    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
-    similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
-    import spark.implicits._
-
-    val libChunks = chunks.filter(col("library_id") === libId)
-    val effType = effectiveIndexType(libId, config)
-
-    // preFilter restricts candidate generation, as in single `search`
-    val allowedIds: Option[DataFrame] =
-      if (preFilter && filters.isDefined)
-        Some(applyPost(libChunks.withColumnRenamed("id", "chunk_id"), filters)
-          .select("chunk_id"))
-      else None
-    def restrict(cands: DataFrame): DataFrame =
-      allowedIds.fold(cands)(a => cands.join(a, Seq("chunk_id"), "left_semi"))
-
+    val (dim, _, _) = getLibrary(libId)
+    requireTopK(k, metric)
     val q = queries.select(col("query_id").cast("long").as("query_id"),
         col("qvec"))
       .filter(size(col("qvec")) === dim)
@@ -3227,6 +2756,23 @@ final class VectorEngine(
     if (nq != nqd)
       throw new ValidationError(
         s"annJoin query set has duplicate query_ids ($nq rows, $nqd distinct)")
+    annJoinOn(libId, q, nq, k, metric, filters, preFilter)
+  }
+
+  /** annJoin's body over a validated (query_id, qvec) frame of `nq`
+    * distinct, library-dimension queries.
+    */
+  private def annJoinOn(libId: String, q: DataFrame, nq: Long, k: Int,
+      metric: String, filters: Option[SearchFilters],
+      preFilter: Boolean): DataFrame = {
+    import spark.implicits._
+    val (dim, config, _) = getLibrary(libId)
+    val libChunks = chunks.filter(col("library_id") === libId)
+    val effType = effectiveIndexType(libId, config)
+
+    // preFilter restricts candidate generation, as in single `search`
+    val allowedIds = allowedIdsOf(libChunks, filters, preFilter)
+    def restrict(cands: DataFrame): DataFrame = restrictTo(allowedIds, cands)
     // float-normalized queries (zero vectors -> null -> dropped), the
     // same arithmetic as LshIndex.normalizeDriver
     val qn = q.select(col("query_id"),
@@ -3258,25 +2804,50 @@ final class VectorEngine(
           math.max(1, config.ivfNprobe)).toColumn)
         .flatMap { case (qid, cs) => cs.map(c => (qid, c._2.toInt)) }
         .toDF("query_id", "centroid_id")
+    // the probe pairs with each pair's FLOAT query residual against its
+    // cell centroid (zip_with — the encode arithmetic verbatim)
+    def probeResiduals(cents: DataFrame): DataFrame =
+      probePairs(cents)
+        .join(broadcast(cents.select(col("centroid_id"), col("vector"))),
+          Seq("centroid_id"))
+        .join(qn, Seq("query_id"))
+        .select(col("query_id"), col("centroid_id"),
+          zip_with(col("qnorm"), col("vector"), (a, b) => a - b).as("qres"))
 
-    // `qside` defaults to the full query set; the nsw branch passes the
-    // subset whose walks found nothing (per-query fallback, ADVICE r13)
+    // per-query cap of (query_id, chunk_id, dist_u) rows by (dist_u asc,
+    // chunk_id asc), then hydrate ONLY the capped candidates from the
+    // chunk store (the codes tables store no vectors) and exact-rerank
+    def capRerank(dists: DataFrame, oversample: Int): DataFrame =
+      rerank(candidateNorms(capPerQuery(dists, -col("dist_u"), oversample * k),
+        libChunks, perCandidate = false))
+
+    // binary families: query codes packed EXECUTOR-side from the qnorm
+    // column (the encode arithmetic verbatim), and the xor+popcount
+    // hamming of a packed code row against the row's `qcode`
+    def queryCodes: DataFrame = qn.select(col("query_id"),
+      array(BqIndex.packExprs(dim,
+        i => element_at(col("qnorm"), i + 1)): _*).as("qcode"))
+    def hammingU: Column = BqIndex.hammingExpr(BqIndex.words(dim),
+      w => element_at(col("qcode"), w + 1)).as("dist_u")
+
+    // `qside` is the query set, minus its zero vectors when an index
+    // family falls back because its structures are not built (quirk Q4
+    // holds on the fallback too); the graph branch passes the subset
+    // whose walks found nothing (per-query fallback, ADVICE r13)
     def flatScoredFor(qside: DataFrame): DataFrame =
       applyPre(libChunks, filters, preFilter)
         .filter(col("embedding").isNotNull)
         .crossJoin(qside)
         .select(col("query_id"), col("id").as("chunk_id"),
           similarity(metric)(col("embedding"), col("qvec")).as("score"))
-    def flatScored(): DataFrame = flatScoredFor(q)
+    def flatScored(): DataFrame = flatScoredFor(
+      if (effType == "flat") q else q.filter(exists(col("qvec"), _ =!= 0f)))
 
     val scored: DataFrame = effType match {
       case "flat" => flatScored()
 
       case "ivf" | "ivf_det" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
-        cents match {
+        centroidsOf(libId) match {
           case None => flatScored()
           case Some(c) =>
             val cands = restrict(ivfPostings(libId))
@@ -3301,16 +2872,16 @@ final class VectorEngine(
         // queries); the layered descent is the single-query SERVING
         // entry, where one near entry point per query is worth one
         // driver round-trip per layer.
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+        val cents = centroidsOf(libId)
+        val walkAllowed = if (preFilter) allowedIds else None
         val localWalked: Option[Seq[(Long, Seq[String])]] =
           if (cents.isEmpty || !store.exists("nsw_edges") ||
-              nq > LocalAnnJoinCap || preFilter) None
+              nq > LocalAnnJoinCap) None
           else {
             // BOUNDED LOCAL FINISH (optimization r16, the CC/pagerank
             // local-finish discipline): an API-sized batch — nq is known
-            // exactly from the duplicate-id validation above — runs the
+            // exactly (annJoin's duplicate-id agg, or the Seq length
+            // searchBatchAnn passes) — runs the
             // LOCKSTEP cached-cursor walks (walkIdsMany: the per-query
             // protocol, one combined cursor fetch per round across all
             // beams) instead of materializing the distributed descent +
@@ -3319,13 +2890,15 @@ final class VectorEngine(
             // promised (the oracle replays the per-query walk for the
             // annJoin entries); per-query flat fallback and zero-vector
             // exclusion mirror the distributed path's `missing` anti-join
-            // on qn. Corpus-scale query sets (> LocalAnnJoinCap), preFilter
-            // batches (their allowed gate is a corpus-scale semi-join per
-            // round), over-cap centroid sets and giant entry cells all
-            // keep the distributed frontier-join walk below.
+            // on qn. A preFilter batch gates the walks as the single-query
+            // walk does (one id-pushed semi probe per round over all
+            // beams). Corpus-scale query sets (> LocalAnnJoinCap),
+            // over-cap centroid sets and giant entry cells keep the
+            // distributed frontier-join walk below.
             val qRows = qn.collect()
               .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-            walkIdsMany(libId, config, k, qRows, hnsw = effType == "hnsw_det")
+            walkIdsMany(libId, config, k, qRows, hnsw = effType == "hnsw_det",
+              walkAllowed)
           }
         if (cents.isEmpty || !store.exists("nsw_edges")) flatScored()
         else if (localWalked.isDefined) {
@@ -3441,39 +3014,24 @@ final class VectorEngine(
         }
 
       case "ivfpq" | "ivfpq_trained" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+        val cents = centroidsOf(libId)
         val cb =
           if (cents.isEmpty || !store.exists("pq_codebooks"))
             Array.empty[Array[Array[Float]]]
           else PqIndex.collectCodebooks(pqCodebooks(libId))
         if (cb.isEmpty) flatScored()
         else {
-          val c = cents.get
-          // residual per probe pair (float subtraction, the dtab
-          // arithmetic verbatim), folded straight into the per-pair ADC
+          // each pair's residual folded straight into the per-pair ADC
           // TABLE by the codegen kernel — candidate rows below do M
           // lookups each, never a dot
-          val pairsFull = probePairs(c)
-            .join(broadcast(c.select(col("centroid_id"), col("vector"))),
-              Seq("centroid_id"))
-            .join(qn, Seq("query_id"))
+          val pairsFull = probeResiduals(cents.get)
             .select(col("query_id"), col("centroid_id"),
-              IvfPqIndex.adcDtabExpr(
-                zip_with(col("qnorm"), col("vector"), (a, b) => a - b), cb)
-                .as("dtab"))
-          val dists = restrict(ivfpqCodes(libId))
+              IvfPqIndex.adcDtabExpr(col("qres"), cb).as("dtab"))
+          capRerank(restrict(ivfpqCodes(libId))
             .join(pairsFull, Seq("centroid_id"))
             .select(col("query_id"), col("chunk_id"),
-              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), IvfPqIndex.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(capped, Seq("chunk_id"))
-          rerank(hydrated)
+              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u")),
+            IvfPqIndex.Oversample)
         }
 
       case "lsh" | "lsh_det" =>
@@ -3516,16 +3074,19 @@ final class VectorEngine(
           val norms = buckets.select(col("chunk_id"), col("embedding_norm"))
             .dropDuplicates("chunk_id")
           // the reference's <k fallback pad (lsh.py:101-110), DISTRIBUTED:
-          // deficient queries and their deficits are a DataFrame, and the
-          // pad pool is the globally-lowest (2k + Oversample*k) indexed ids
-          // — a bounded broadcastable set that always covers a query's
-          // need (need + excluded <= pool size), so unlike searchBatchAnn
-          // no per-query counts ever land on the driver
-          val have = capped.groupBy(col("query_id")).count()
-          val deficient = qn.select(col("query_id"))
-            .join(have, Seq("query_id"), "left_outer")
-            .select(col("query_id"),
-              coalesce(col("count"), lit(0L)).as("have"))
+          // deficient queries and their deficits are a DataFrame (one
+          // aggregation over the live query ids unioned with the cap, so
+          // zero-candidate queries count too), and the pad pool is the
+          // globally-lowest (2k + Oversample*k) indexed ids — a bounded
+          // broadcastable set that always covers a query's need (need +
+          // excluded <= pool size), so no per-query counts ever land on
+          // the driver. The pad is planned only when some query is short
+          // of k candidates (one isEmpty probe over the checkpointed cap):
+          // a full-cap batch skips the pool sort, cross join and window.
+          val deficient = qn.select(col("query_id"), lit(0L).as("one"))
+            .unionAll(capped.select(col("query_id"), lit(1L).as("one")))
+            .groupBy(col("query_id"))
+            .agg(sum(col("one")).as("have"))
             .filter(col("have") < k)
             .withColumn("need", lit(2L * k) - col("have"))
           val pool = norms.select(col("chunk_id"))
@@ -3538,7 +3099,8 @@ final class VectorEngine(
             .withColumn("rn", row_number().over(padW))
             .filter(col("rn") <= col("need"))
             .select(col("query_id"), col("chunk_id"))
-          rerank(norms.join(capped.unionAll(pad), Seq("chunk_id")))
+          val withPad = if (deficient.isEmpty) capped else capped.unionAll(pad)
+          rerank(norms.join(withPad, Seq("chunk_id")))
         }
 
       case "pq" | "pq_trained" =>
@@ -3550,8 +3112,8 @@ final class VectorEngine(
           // flat-ADC: the query residual IS the normalized query (no
           // coarse quantizer); its per-query distance table carries the
           // same per-subspace micro-unit floors as the driver dtab
-          // (PqIndex.dtabFlat), so ranks are bit-identical to the batch
-          // path — and the codes x queries cross is the inherent flat-PQ
+          // (PqIndex.dtabFlat), so ranks are bit-identical to single
+          // `search` — and the codes x queries cross is the inherent flat-PQ
           // scan shape (every code row is M table lookups per query)
           val qrs = qn.select(col("query_id"),
             IvfPqIndex.adcDtabExpr(col("qnorm"), cb).as("dtab"))
@@ -3569,55 +3131,29 @@ final class VectorEngine(
         }
 
       case "ivfbq" =>
-        val ibqCents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+        val ibqCents = centroidsOf(libId)
         val ibqDf = if (store.exists("ivfbq_codes")) ivfbqCodes(libId) else null
         if (ibqCents.isEmpty || ibqDf == null || ibqDf.isEmpty) flatScored()
         else {
-          // executor-packed query codes joined onto the (query, cell)
-          // probe pairs — the inverted-list equi-join does the pruning;
-          // nothing query-dependent touches the driver
-          val qc = qn.select(col("query_id"),
-            array(BqIndex.packExprs(dim,
-              i => element_at(col("qnorm"), i + 1)): _*).as("qcode"))
-          val pairsQc = probePairs(ibqCents.get).join(qc, Seq("query_id"))
-          val dists = restrict(ibqDf)
+          // query codes joined onto the (query, cell) probe pairs — the
+          // inverted-list equi-join does the pruning
+          val pairsQc = probePairs(ibqCents.get).join(queryCodes, Seq("query_id"))
+          capRerank(restrict(ibqDf)
             .join(broadcast(pairsQc), Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"),
-              BqIndex.hammingExpr(BqIndex.words(dim),
-                w => element_at(col("qcode"), w + 1)).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"),
-            IvfBqIndex.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated.join(capped, Seq("chunk_id")))
+            .select(col("query_id"), col("chunk_id"), hammingU),
+            IvfBqIndex.Oversample)
         }
 
       case "bq" =>
         val bqDf = if (store.exists("bq_codes")) bqCodes(libId) else null
         if (bqDf == null || bqDf.isEmpty) flatScored()
         else {
-          // query codes packed EXECUTOR-side from the qnorm column (the
-          // encode arithmetic verbatim — nothing query-dependent touches
-          // the driver), then xor+popcount hamming against the packed
-          // scan; broadcast the query frame explicitly, as the pq branch
-          val qc = qn.select(col("query_id"),
-            array(BqIndex.packExprs(dim,
-              i => element_at(col("qnorm"), i + 1)): _*).as("qcode"))
-          val dists = restrict(bqDf)
-            .crossJoin(broadcast(qc))
-            .select(col("query_id"), col("chunk_id"),
-              BqIndex.hammingExpr(BqIndex.words(dim),
-                w => element_at(col("qcode"), w + 1)).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), BqIndex.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated.join(capped, Seq("chunk_id")))
+          // hamming against the packed scan; broadcast the query frame
+          // explicitly, as the pq branch
+          capRerank(restrict(bqDf)
+            .crossJoin(broadcast(queryCodes))
+            .select(col("query_id"), col("chunk_id"), hammingU),
+            BqIndex.Oversample)
         }
 
       case "sq8" =>
@@ -3632,74 +3168,36 @@ final class VectorEngine(
           // from the qnorm column; the codes x queries cross is the
           // inherent flat-scan shape (every code row scores every query)
           // broadcast the query frame explicitly, as the pq branch above
-          val dists = restrict(sq8Codes(libId))
+          capRerank(restrict(sq8Codes(libId))
             .crossJoin(broadcast(qn))
             .select(col("query_id"), col("chunk_id"),
               Sq8Index.distExpr(p,
-                i => element_at(col("qnorm"), i + 1).cast("double")).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), Sq8Index.Oversample * k)
-          // the codes table stores no vectors: hydrate only the capped
-          // candidates from the primary chunk store
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-          rerank(hydrated.join(capped, Seq("chunk_id")))
+                i => element_at(col("qnorm"), i + 1).cast("double")).as("dist_u")),
+            Sq8Index.Oversample)
         }
 
       case "ivfsq8" =>
-        val cents =
-          if (!store.exists("ivf_centroids")) None
-          else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+        val cents = centroidsOf(libId)
         val pmap =
           if (cents.isEmpty || !store.exists("ivfsq8_params"))
             Map.empty[Int, Array[(Double, Double)]]
           else IvfSq8Index.collectParams(ivfsq8Params(libId))
         if (pmap.isEmpty) flatScored()
         else {
-          val c = cents.get
-          // per probe pair the FLOAT query residual is computed on
-          // executors (zip_with — the encode arithmetic verbatim), so
-          // NOTHING query-dependent lands on the driver; candidate rows
-          // decode against the cell's metadata-scale map-literal ranges
-          val pairsFull = probePairs(c)
-            .join(broadcast(c.select(col("centroid_id"), col("vector"))),
-              Seq("centroid_id"))
-            .join(qn, Seq("query_id"))
-            .select(col("query_id"), col("centroid_id"),
-              zip_with(col("qnorm"), col("vector"), (a, b) => a - b).as("qres"))
-          val dists = restrict(ivfsq8Codes(libId))
-            .join(pairsFull, Seq("centroid_id"))
+          // candidate rows decode against the cell's metadata-scale
+          // map-literal ranges and the pair's query residual
+          capRerank(restrict(ivfsq8Codes(libId))
+            .join(probeResiduals(cents.get), Seq("centroid_id"))
             .select(col("query_id"), col("chunk_id"),
-              IvfSq8Index.adcDistExpr(pmap).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), IvfSq8Index.Oversample * k)
-          val hydrated = libChunks.filter(col("embedding").isNotNull)
-            .select(col("id").as("chunk_id"),
-              transform(l2Normalize(col("embedding")), _.cast("float"))
-                .as("embedding_norm"))
-            .join(capped, Seq("chunk_id"))
-          rerank(hydrated)
+              IvfSq8Index.adcDistExpr(pmap).as("dist_u")),
+            IvfSq8Index.Oversample)
         }
 
       case other =>
         throw new ValidationError(s"annJoin: unknown index type '$other'")
     }
 
-    // per-query top-k partial agg, then a NON-broadcast hydration join —
-    // the top-k side is N x k rows, which at DataFrame-scale N must not
-    // be forced into every executor's memory (AQE picks the strategy)
-    val topk = scored.as[(Long, String, Double)]
-      .groupByKey(_._1)
-      .agg(graft.functions.TopKAggregator.topKStr(k).toColumn)
-      .flatMap { case (qid, hits) => hits.map(h => (qid, h._2, h._1)) }
-      .toDF("query_id", "chunk_id", "score")
-    val hydrated = topk
-      .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id")
-    applyPost(hydrated, filters)
-      .select(col("query_id"), col("chunk_id"), col("document_id"),
-        col("score"), col("text"), col("position"), col("metadata"),
-        col("created_at"), col("updated_at"))
-      .orderBy(col("query_id").asc, col("score").desc, col("chunk_id").asc)
+    batchTopKHydrate(scored, libChunks, k, filters, nq)
   }
 
   /** STREAMING ANN through the index tables (the 100 TB online-serving
@@ -3735,8 +3233,7 @@ final class VectorEngine(
       metric: String = "cosine"): DataFrame = {
     val libId = resolveLibrary(libIdOrAlias)
     val (dim, config, _) = getLibrary(libId)
-    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
-    similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
+    requireTopK(k, metric)
     import spark.implicits._
     val effType = effectiveIndexType(libId, config)
     if (!Set("ivfpq", "ivfpq_trained", "ivfsq8").contains(effType))
@@ -3793,18 +3290,13 @@ final class VectorEngine(
 
     val codes = (if (isIvfSq8) ivfsq8Codes(libId) else ivfpqCodes(libId))
       .select(col("centroid_id"), col("chunk_id"), col("codes"))
-    val norms = chunks.filter(col("library_id") === libId)
-      .filter(col("embedding").isNotNull)
-      .select(col("id").as("chunk_id"),
-        transform(l2Normalize(col("embedding")), _.cast("float"))
-          .as("embedding_norm"))
     val distU =
       if (isIvfSq8) IvfSq8Index.adcDistExpr(pmap)
       else IvfPqIndex.adcDistExpr(cb.length, cb(0).length)
     val oversample =
       if (isIvfSq8) IvfSq8Index.Oversample else IvfPqIndex.Oversample
-    val cands = probed.join(codes, Seq("centroid_id"))
-      .join(norms, Seq("chunk_id"))
+    val cands = candidateNorms(probed.join(codes, Seq("centroid_id")),
+        chunks.filter(col("library_id") === libId), perCandidate = false)
       .select(col("query_id"), col("chunk_id"), distU.as("dist_u"),
         similarity(metric)(col("embedding_norm"), col("qvec")).as("score"))
     cands.as[(Long, String, Long, Double)]
@@ -4212,6 +3704,57 @@ final class VectorEngine(
         x => x.getField("ctext")), " ").as("text"))
   }
 
+  /** The search verbs' shared argument check: k in 1..1000, and the
+    * metric name validated eagerly (before any plan is built).
+    */
+  private def requireTopK(k: Int, metric: String): Unit = {
+    if (k <= 0 || k > 1000) throw new ValidationError(s"k out of range: $k")
+    similarity(metric)(lit(0), lit(0))
+  }
+
+  /** The ids passing `filters` when `preFilter` asks candidate generation
+    * to be restricted (the documented deviation from quirk Q5); None
+    * leaves candidates unrestricted.
+    */
+  private def allowedIdsOf(libChunks: DataFrame, filters: Option[SearchFilters],
+      preFilter: Boolean): Option[DataFrame] =
+    if (preFilter && filters.isDefined)
+      Some(applyPost(libChunks.withColumnRenamed("id", "chunk_id"), filters)
+        .select("chunk_id"))
+    else None
+
+  private def restrictTo(allowed: Option[DataFrame], cands: DataFrame): DataFrame =
+    allowed.fold(cands)(a => cands.join(a, Seq("chunk_id"), "left_semi"))
+
+  /** The exact-rerank input of the families whose index stores no
+    * vectors (bq, ivfbq, sq8, ivfsq8, ivfpq): `cands` joined to the
+    * library's embeddings, with the float-normalized vector as
+    * `embedding_norm`; every column of `cands` is kept, and the caller
+    * decides whether `cands` is broadcast. The normalize is the costly
+    * step (l2Normalize re-folds the norm for every element). With
+    * `perCandidate` it runs after the join, so only a single query's
+    * <= cap candidates pay it; a batch's candidate rows repeat chunks
+    * across queries and outnumber the library in a self-join (library x
+    * cap), so batches and streams normalize the library side before the
+    * join.
+    */
+  private def candidateNorms(cands: DataFrame, libChunks: DataFrame,
+      perCandidate: Boolean): DataFrame = {
+    val emb = libChunks.filter(col("embedding").isNotNull)
+      .select(col("id").as("chunk_id"), col("embedding"))
+    def normalized(df: DataFrame): DataFrame =
+      df.withColumn("embedding_norm",
+          transform(l2Normalize(col("embedding")), _.cast("float")))
+        .drop("embedding")
+    if (perCandidate) normalized(cands.join(emb, "chunk_id"))
+    else normalized(emb).join(cands, "chunk_id")
+  }
+
+  /** The library's coarse-quantizer centroid table, None when not built. */
+  private def centroidsOf(libId: String): Option[DataFrame] =
+    if (!store.exists("ivf_centroids")) None
+    else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+
   /** Flat scoring: raw stored vectors (quirk Q1). */
   private def flatScore(libChunks: DataFrame, query: Array[Float],
       metric: String): DataFrame =
@@ -4237,18 +3780,7 @@ final class VectorEngine(
       qn: Array[Float], k: Int,
       beamOverride: Option[Int] = None,
       allowed: Option[DataFrame] = None): Option[Seq[String]] = {
-    // entry cell via the cached centroids (bit-identical driver argmax:
-    // dotDriver + (dot desc, centroid_id asc)); the distributed
-    // TakeOrdered remains the over-cap path
-    val topCell: Array[Int] = topCellsDriver(libId, qn, 1).getOrElse {
-      if (!store.exists("ivf_centroids")) Array.empty[Int]
-      else ivfCentroids(libId)
-        .select(col("centroid_id"),
-          dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-        .orderBy(col("cscore").desc, col("centroid_id").asc)
-        .limit(1)
-        .collect().map(_.getInt(0))
-    }
+    val topCell = probeCells(libId, qn, 1).map(_._1)
     if (topCell.isEmpty || !store.exists("nsw_edges")) None
     else {
       val beamW = math.max(beamOverride.getOrElse(config.nswBeam), k)
@@ -4638,17 +4170,29 @@ final class VectorEngine(
     }
   }
 
-  /** Top-n probe cells for a float-normalized query by (dot desc,
-    * centroid_id asc) — the driver twin of every family's centroid
-    * TakeOrdered (bit-identical: dotDriver + the same tie order). None
-    * when the centroids are uncached (too many) or absent.
+  /** Top-n probe cells (id + centroid vector) for ONE float-normalized
+    * query by (dot desc, centroid_id asc) — every single-query family's
+    * probe and the graph walks' entry cell. Served by the driver argmax
+    * over the cached centroids (bit-identical to the centroid
+    * TakeOrdered: dotDriver + the same tie order); a centroid set too
+    * large to cache keeps that distributed TakeOrdered. Empty when no
+    * centroids are built.
     */
-  private def topCellsDriver(libId: String, qn: Array[Float],
-      n: Int): Option[Array[Int]] =
-    centroidArr(libId).map { cents =>
-      cents.map { case (cid, v) => (cid, dotDriver(v, qn)) }
-        .sortBy { case (cid, s) => (-s, cid) }
-        .take(n).map(_._1).toArray
+  private def probeCells(libId: String, qn: Array[Float],
+      n: Int): Array[(Int, Array[Float])] =
+    centroidArr(libId) match {
+      case Some(cents) =>
+        cents.map { case (cid, v) => (cid, v, dotDriver(v, qn)) }
+          .sortBy { case (cid, _, s) => (-s, cid) }
+          .take(n).map { case (cid, v, _) => (cid, v) }.toArray
+      case None =>
+        ivfCentroids(libId)
+          .select(col("centroid_id"), col("vector"),
+            dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
+          .orderBy(col("cscore").desc, col("centroid_id").asc)
+          .limit(n)
+          .collect()
+          .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
     }
 
   /** The subset of `ids` present in the allowed set — one id-pushed
@@ -4709,15 +4253,7 @@ final class VectorEngine(
     // the beam cut keeps the best of both seed families. Served from the
     // cellPosts/adj caches when the cell fits the cap; a giant cell keeps
     // the distributed pool (never collected).
-    val topCell: Array[Int] = topCellsDriver(libId, qn, 1).getOrElse {
-      if (!store.exists("ivf_centroids")) Array.empty[Int]
-      else ivfCentroids(libId)
-        .select(col("centroid_id"),
-          dotProduct(col("vector"), typedLit(qn.toSeq)).as("cscore"))
-        .orderBy(col("cscore").desc, col("centroid_id").asc)
-        .limit(1)
-        .collect().map(_.getInt(0))
-    }
+    val topCell = probeCells(libId, qn, 1).map(_._1)
     val beamW = math.max(beamOverride.getOrElse(config.nswBeam), k)
     val descentIds: IndexedSeq[String] = cur +: adjOf(libId, Seq(cur))(cur)
     val seedTop =
@@ -4747,13 +4283,17 @@ final class VectorEngine(
     * every round's cursor reads ACROSS queries: one combined
     * adjacency+vector fetch serves all beams at the same round, and the
     * greedy descents advance in lockstep one layer at a time (VERDICT
-    * r15 #6: same rounds, fewer jobs). Returns None when the batch must
-    * stay distributed: uncacheable centroids or a cell past the cache
-    * cap (never collected).
+    * r15 #6: same rounds, fewer jobs). `allowed` is the pre-filter gate
+    * of [[beamWalkDriver]], applied with one [[allowedSubset]] probe over
+    * all queries' seed pools and one over each round's combined
+    * frontier: membership is per id, so every query gates exactly the
+    * ids its own walk would. Returns None when the batch must stay
+    * distributed: uncacheable centroids or a cell past the cache cap
+    * (never collected).
     */
   private def walkIdsMany(libId: String, config: IndexConfig, k: Int,
-      queries: Seq[(Long, Array[Float])],
-      hnsw: Boolean): Option[Seq[(Long, Seq[String])]] = {
+      queries: Seq[(Long, Array[Float])], hnsw: Boolean,
+      allowed: Option[DataFrame]): Option[Seq[(Long, Seq[String])]] = {
     if (queries.isEmpty) return Some(Nil)
     val beamW = math.max(config.nswBeam, k)
     val cents = centroidArr(libId) match {
@@ -4761,9 +4301,9 @@ final class VectorEngine(
       case None => return None // over-cap centroid set: keep distributed
     }
     if (cents.isEmpty) return Some(queries.map { case (qid, _) => (qid, Nil) })
-    def argCell(qn: Array[Float]): Int =
-      cents.map { case (cid, v) => (cid, dotDriver(v, qn)) }
-        .minBy { case (cid, s) => (-s, cid) }._1
+    // the ids of `ids` the walk may score (all of them without a filter)
+    def gate(ids: Seq[String]): String => Boolean =
+      allowed.fold[String => Boolean](_ => true)(a => allowedSubset(ids, a))
     // greedy descents in lockstep (hnsw only): all live cursors advance
     // one round per fetch; per-query fixed points stop early exactly as
     // the single-query `moved` rule does
@@ -4804,7 +4344,7 @@ final class VectorEngine(
     // per-query hybrid seed pools: entry cell (∪ descent neighborhood for
     // hnsw), every distinct cell fetched once through the bounded cache
     val cellOf: Map[Long, Int] = queries.map { case (qid, qn) =>
-      qid -> argCell(qn) }.toMap
+      qid -> probeCells(libId, qn, 1).head._1 }.toMap
     val cellIds: Map[Int, IndexedSeq[String]] =
       cellOf.values.toSeq.distinct.map { c =>
         cellMembers(libId, c) match {
@@ -4819,10 +4359,14 @@ final class VectorEngine(
     // batching the read never mixes beams)
     val visited = scala.collection.mutable.Map.empty[Long,
       scala.collection.mutable.HashMap[String, Double]]
-    var beams: Map[Long, Seq[String]] = queries.map { case (qid, qn) =>
-      val pool = (cellIds(cellOf(qid)) ++
+    val pools: Map[Long, IndexedSeq[String]] = queries.map { case (qid, _) =>
+      qid -> (cellIds(cellOf(qid)) ++
         (if (hnsw) descent(qid) +: descentAdj(descent(qid))
          else IndexedSeq.empty)).distinct
+    }.toMap
+    val poolOk = gate(pools.valuesIterator.flatten.toSeq.distinct)
+    var beams: Map[Long, Seq[String]] = queries.map { case (qid, qn) =>
+      val pool = pools(qid).filter(poolOk)
       val vs = vecsOf(libId, pool)
       val top = pool.iterator
         .flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qn)))))
@@ -4840,13 +4384,14 @@ final class VectorEngine(
       val adj = adjOf(libId,
         beams.valuesIterator.flatten.toSeq.distinct)
       val frontierAll = beams.valuesIterator.flatten.flatMap(adj(_)).toSeq.distinct
-      val vs = vecsOf(libId, frontierAll)
+      val ok = gate(frontierAll)
+      val vs = vecsOf(libId, frontierAll.filter(ok))
       beams = beams.map { case (qid, beam) =>
         if (beam.isEmpty) qid -> beam
         else {
           val qn = qvecAll(qid)
           val vm = visited(qid)
-          beam.iterator.flatMap(adj(_)).toSeq.distinct.foreach { id =>
+          beam.iterator.flatMap(adj(_)).toSeq.distinct.filter(ok).foreach { id =>
             vs(id).foreach(v => vm(id) = norm0(dotDriver(v, qn)))
           }
           qid -> vm.toSeq.sortBy { case (id, s) => (-s, id) }

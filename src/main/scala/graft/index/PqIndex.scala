@@ -165,10 +165,13 @@ object PqIndex {
   }
 
   /** The query's ADC distance table to EVERY codeword, flattened m-major
-    * (index = m*K + k), in integer micro-units — the one implementation
-    * both the single-query `candidates` and the batched engine path
-    * (`VectorEngine.searchBatchAnn`) ship to executors, so the two can
-    * never diverge arithmetically.
+    * (index = m*K + k), in integer micro-units — the single-query
+    * `candidates` (and, per cell residual, `IvfPqIndex.dtabForCell`)
+    * ship it to executors as a literal. The batch path
+    * (`VectorEngine.annJoin`) computes the same table on executors with
+    * the AdcDtab kernel (`IvfPqIndex.adcDtabExpr`), which PipelineOpsSpec
+    * pins bit for bit against this function, so the two paths can never
+    * diverge arithmetically.
     */
   def dtabFlat(qnorm: Array[Float], cb: Array[Array[Array[Float]]]): Array[Long] = {
     val subDim = cb(0)(0).length

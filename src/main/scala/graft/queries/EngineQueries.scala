@@ -1144,10 +1144,12 @@ object EngineQueries {
 
   /** BATCHED index-path search through the engine (VERDICT r4 #3):
     * queries vec 0, 1, 2 against the shared ivfpq fixture in ONE
-    * distributed pass (`searchBatchAnn` — batched nprobe probe,
+    * distributed pass (`searchBatchAnn` — the driver-validated Seq front
+    * end to `annJoin`'s batch pipeline: broadcast-centroid probe,
     * per-(query, cell) ADC dtab join, k-bounded rerank). The md5-seed
     * family is pure arithmetic for ANY query set, so the DuckDB oracle
-    * replays the batched pipeline per query and hash-checks all 30 hits.
+    * replays the batched pipeline per query and hash-checks all 30 hits;
+    * the `_annjoin` twin runs the same path from a query table.
     */
   /** (query_id, vec_id, rounded score) projection of engine batch hits —
     * unsorted, for consumers that aggregate rather than emit.
@@ -1388,9 +1390,9 @@ object EngineQueries {
   private def ivfSq8Ndcg(s: SparkSession, d: String): DataFrame =
     ndcgOf(s, d, IndexConfig("ivfsq8", ivfNumCentroids = 8, ivfNprobe = 2))
 
-  /** The searchBatchAnn (driver probe-pair) path through ivfsq8 — same
-    * query set and oracle as the annJoin entry, so one replay
-    * hash-checks both batched execution paths.
+  /** The searchBatchAnn (Seq front end to annJoin) path through ivfsq8
+    * — same query set and oracle as the annJoin entry, so one replay
+    * hash-checks both batch surfaces over the one pipeline.
     */
   private def engineIvfSq8Batch(s: SparkSession, d: String): DataFrame = {
     val (eng, lib, _) = engineFixture(s, d,
@@ -1636,8 +1638,9 @@ object EngineQueries {
   }
 
   /** Batched lsh_det search — second hash-checked family through
-    * `searchBatchAnn` (one probe-signature broadcast join for all
-    * queries, per-query multiplicity rank + cap).
+    * `searchBatchAnn`, the Seq front end to `annJoin` (one
+    * probe-signature join for all queries, per-query multiplicity rank +
+    * cap, the <k pad only when some query is short).
     */
   private def engineLshDetBatch(s: SparkSession, d: String): DataFrame = {
     val (eng, lib, _) = engineFixture(s, d,
@@ -2380,8 +2383,8 @@ object EngineQueries {
 
   // Batched lsh_det replay (x_engine_lshdet_batch): the same corpus CTEs
   // with the signature probe / multiplicity rank / cap / rerank tail
-  // PARTITIONED BY query_id — the SQL mirror of searchBatchAnn's LSH
-  // branch for queries vec 0, 1, 2. (The <k pad never triggers at this
+  // PARTITIONED BY query_id — the SQL mirror of the batch pipeline's
+  // (annJoin's) LSH branch for queries vec 0, 1, 2. (The <k pad never triggers at this
   // L=4/H=4 config on the sf corpus: every query's multi-probe buckets
   // hold far more than the 60-candidate cap.)
   private val lshDetBatchSql =
@@ -3559,8 +3562,8 @@ object EngineQueries {
 
   // Batched replay (x_engine_ivfpq_batch): the same corpus CTEs, with the
   // probe/ADC/cap/rerank tail PARTITIONED BY query_id — the SQL mirror of
-  // VectorEngine.searchBatchAnn's one-pass batched pipeline for queries
-  // vec 0, 1, 2.
+  // VectorEngine.annJoin's one-pass batched pipeline (searchBatchAnn is
+  // its Seq front end) for queries vec 0, 1, 2.
   private val ivfpqBatchSql = ivfpqBatchSqlFor(3)
 
   private def ivfpqBatchSqlFor(nQueries: Int, candPred: String = "TRUE"): String =

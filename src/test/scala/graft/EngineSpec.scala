@@ -762,7 +762,7 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("annJoin: DataFrame-scale batch equals searchBatchAnn on every family") {
+  test("annJoin: DataFrame-scale batch equals N single searches on every family") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     val dim = 8
@@ -773,6 +773,16 @@ class EngineSpec extends AnyFunSuite {
       (0L until 4L).map(i => i -> Array.fill(dim)(rnd.nextGaussian().toFloat)) :+
         (9L -> Array.fill(dim)(0f))
     val eng = freshEngine()
+    // (query_id, chunk_id, score) rows of N single `search` calls, in the
+    // batch order (query_id, score desc, chunk_id)
+    def singles(lib: String, k: Int, filters: Option[SearchFilters],
+        preFilter: Boolean): Seq[(Long, String, Double)] =
+      qs.sortBy(_._1).flatMap { case (qid, q) =>
+        eng.search(lib, q, k, filters = filters, preFilter = preFilter)
+          .collect().map(r => (qid, r.getString(0), r.getDouble(2)))
+      }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).toSeq
     for (cfg <- Seq(
         IndexConfig("flat"),
         IndexConfig("ivf_det", ivfNumCentroids = 4, ivfNprobe = 2),
@@ -782,26 +792,34 @@ class EngineSpec extends AnyFunSuite {
         // high-H det config drives some queries under k candidates -> pad path
         IndexConfig("lsh_det", lshNumTables = 2, lshHyperplanesPerTable = 12),
         IndexConfig("pq", pqSubspaces = 2, pqCodewords = 8),
-        IndexConfig("sq8"))) {
+        IndexConfig("sq8"),
+        IndexConfig("ivfbq", ivfNumCentroids = 4, ivfNprobe = 2),
+        IndexConfig("bq"),
+        IndexConfig("ivfsq8", ivfNumCentroids = 4, ivfNprobe = 2),
+        // the graph families' pre-filtered batches run the gated
+        // lockstep walk (walkIdsMany), pinned against the gated
+        // single-query walk below
+        IndexConfig("nsw_det", ivfNumCentroids = 4, ivfNprobe = 2,
+          nswDegree = 4, nswBeam = 6, nswRounds = 2),
+        IndexConfig("hnsw_det", ivfNumCentroids = 4, ivfNprobe = 2,
+          nswDegree = 4, nswBeam = 6, nswRounds = 2))) {
       val lib = eng.createLibrary("aj-" + cfg.indexType, dim, cfg)
       val doc = eng.createDocument(lib)
       eng.upsertChunks(lib, doc, chunksIn)
       if (cfg.indexType != "flat") eng.rebuildIndex(lib)
       val qDf = qs.map { case (qid, v) => (qid, v.toSeq) }.toDF("query_id", "qvec")
       val filters = Some(SearchFilters(author = Some("a0")))
-      val viaDf = eng.annJoin(lib, qDf, k = 5, filters = filters)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).toSeq
-      val viaSeq = eng.searchBatchAnn(lib, qs, k = 5, filters = filters)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).toSeq
-      assert(viaDf == viaSeq, s"${cfg.indexType}: annJoin diverged from searchBatchAnn")
+      val viaDf = rows(eng.annJoin(lib, qDf, k = 5, filters = filters))
+      assert(viaDf == singles(lib, 5, filters, preFilter = false),
+        s"${cfg.indexType}: annJoin diverged from single search")
       assert(viaDf.nonEmpty, s"${cfg.indexType}: fixture should produce hits")
-      // preFilter deviation batched identically on both surfaces
+      // the zero-vector query (9) scores all-zero on flat, no rows on index paths
+      assert(viaDf.exists(_._1 == 9L) == (cfg.indexType == "flat"))
+      // preFilter deviation batched identically to the single path
       val pf = Some(SearchFilters(author = Some("a2")))
-      val preDf = eng.annJoin(lib, qDf, k = 3, filters = pf, preFilter = true)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).toSeq
-      val preSeq = eng.searchBatchAnn(lib, qs, k = 3, filters = pf, preFilter = true)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).toSeq
-      assert(preDf == preSeq, s"${cfg.indexType}: annJoin preFilter diverged")
+      val preDf = rows(eng.annJoin(lib, qDf, k = 3, filters = pf, preFilter = true))
+      assert(preDf == singles(lib, 3, pf, preFilter = true),
+        s"${cfg.indexType}: annJoin preFilter diverged from single search")
       // dim-mismatched rows are dropped, not scored
       val bad = Seq((7L, Seq(1f, 2f))).toDF("query_id", "qvec")
       assert(eng.annJoin(lib, bad, k = 3).collect().isEmpty)
@@ -818,6 +836,12 @@ class EngineSpec extends AnyFunSuite {
     intercept[ValidationError] {
       eng.searchBatchAnn(flatLib,
         dupQ.map { case (i, v) => (i, v.toArray) }, 3)
+    }
+    // searchBatchAnn's driver contract: a wrong-dimension query throws,
+    // where annJoin silently drops the row
+    intercept[ValidationError] {
+      eng.searchBatchAnn(flatLib,
+        Seq(0L -> Array.fill(dim)(1f), 1L -> Array.fill(dim - 1)(1f)), 3)
     }
   }
 

@@ -11,21 +11,46 @@ that is slow in ONE run of the pair but not the other is host noise
 pair is a real change to investigate. Also prints pair-internal spread and
 family sums so a drifting family is visible even when no single entry
 trips the threshold.
+
+Each artifact is either a Bench artifact ({"queries": {name: sec}}) or a
+ProfileBench artifact ({"queries": {name: {"sec": s, "jobs": n}}}). When
+the prior and run A both carry job counts, every entry whose count
+changed is listed with its prior -> runA (runB) counts; Spark job counts
+are deterministic per entry, so any change there is a real plan change.
 """
 import json, sys
 
 
 def load(p):
+    """(seconds per entry, Spark jobs per entry — empty for Bench artifacts)"""
     d = json.load(open(p))
     if not isinstance(d, dict) or not isinstance(d.get("queries"), dict):
         sys.exit(f"{p}: not a bench artifact (expected a JSON object with a "
                  f"'queries' map; got top-level keys "
                  f"{sorted(d) if isinstance(d, dict) else type(d).__name__})")
-    return d["queries"]
+    q = d["queries"]
+    secs = {k: v["sec"] if isinstance(v, dict) else v for k, v in q.items()}
+    jobs = {k: v["jobs"] for k, v in q.items()
+            if isinstance(v, dict) and "jobs" in v}
+    return secs, jobs
+
+
+def print_job_changes(prior, a, b):
+    common = sorted(set(prior) & set(a))
+    changed = [k for k in common if a[k] != prior[k]]
+    up = [k for k in changed if a[k] > prior[k]]
+    print(f"\nSpark job counts over {len(common)} common entries: prior "
+          f"{sum(prior[k] for k in common)}, runA {sum(a[k] for k in common)}; "
+          f"{len(changed)} changed, {len(up)} went up")
+    if changed:
+        print(f"{'entry':<36}{'prior':>7}{'runA':>7}{'runB':>7}{'A-prior':>9}")
+    for k in changed:
+        rb = str(b[k]) if k in b else "-"
+        print(f"{k:<36}{prior[k]:>7}{a[k]:>7}{rb:>7}{a[k] - prior[k]:>+9}")
 
 
 def main(prior_p, a_p, b_p, thr=1.5):
-    prior, a, b = load(prior_p), load(a_p), load(b_p)
+    (prior, prior_j), (a, a_j), (b, b_j) = load(prior_p), load(a_p), load(b_p)
     common = sorted(set(prior) & set(a) & set(b))
     print(f"common entries: {len(common)}  "
           f"(prior {len(prior)}, runA {len(a)}, runB {len(b)})")
@@ -67,6 +92,8 @@ def main(prior_p, a_p, b_p, thr=1.5):
     med = statistics.median(a[k] / max(prior[k], 1e-9) for k in common)
     print(f"\nmedian per-entry A/prior ratio: {med:.3f}; "
           f"{faster}/{len(common)} entries faster than prior")
+    if prior_j and a_j:
+        print_job_changes(prior_j, a_j, b_j)
 
 
 if __name__ == "__main__":
