@@ -5,11 +5,13 @@ import org.apache.spark.sql.{GraftJobBridge, SparkSession}
 /** Measurement-only companion to [[Bench]] (guide §1: measure first).
   *
   * Runs the same queries with the same methodology, but additionally
-  * records the number of Spark jobs each entry submits — at bench scale
-  * (sf0.1 is ~17 MB) per-entry seconds are dominated by FIXED costs
-  * (driver round-trips, job scheduling, parquet commits), so the job
-  * count is the profile: an entry burning 8s over 300 jobs is
-  * driver-bound, one burning 8s over 10 jobs is compute- or plan-bound.
+  * records the number of Spark jobs each entry submits and the number of
+  * tasks that end during it — at bench scale (sf0.1 is ~17 MB) per-entry
+  * seconds are dominated by FIXED costs (driver round-trips, job and
+  * task scheduling, parquet commits), so the job count is the profile:
+  * an entry burning 8s over 300 jobs is driver-bound, one burning 8s
+  * over 10 jobs is compute- or plan-bound, and one whose few jobs run
+  * thousands of tasks is paying per-partition overhead.
   *
   * Never part of the driver contract; output goes to the path in
   * SPARK_GRAFT_PROFILE_OUT (default target/profile.json).
@@ -51,18 +53,20 @@ object ProfileBench {
     val results = selected.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       val j0 = GraftJobBridge.jobsSubmitted(spark.sparkContext)
+      val k0 = GraftJobBridge.tasksEnded(spark.sparkContext)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       val dt = (System.nanoTime() - t0) / 1e9
       val dj = GraftJobBridge.jobsSubmitted(spark.sparkContext) - j0
-      (name, dt, dj)
+      val dk = GraftJobBridge.tasksEnded(spark.sparkContext) - k0
+      (name, dt, dj, dk)
     }
     def s3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val out = sys.env.getOrElse("SPARK_GRAFT_PROFILE_OUT",
       "/root/repo/target/profile.json")
-    val body = results.map { case (k, t, j) =>
-      s"""  "$k": {"sec": ${s3(t)}, "jobs": $j}"""
+    val body = results.map { case (k, t, j, n) =>
+      s"""  "$k": {"sec": ${s3(t)}, "jobs": $j, "tasks": $n}"""
     }.mkString(",\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       s"""{\n"sf": "$sfDir",\n"total_sec": ${s3(results.map(_._2).sum)},\n"queries": {\n$body\n}\n}\n""")

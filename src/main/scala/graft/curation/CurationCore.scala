@@ -109,6 +109,13 @@ object CurationCore {
     if (withText) grouped else grouped.drop("ctext")
   }
 
+  /** Edge bound for a driver-side finish over a dup-candidate graph
+    * (2^18 edges, a few MB on the driver): [[connectedComponents]]'
+    * local union-find and `d_pagerank`'s local supersteps run only
+    * under it, and larger graphs keep their distributed rounds.
+    */
+  private[graft] val LocalFinishCap: Long = 1L << 18
+
   /** CONNECTED COMPONENTS over pair edges by ALTERNATING STAR CONTRACTION
     * (large-star / small-star, Kiveris et al., "Connected Components in
     * MapReduce and Beyond") — shared by the text (minhash) and embedding
@@ -139,7 +146,7 @@ object CurationCore {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxRounds: Int = 50,
-      localFinishCap: Long = 1L << 18): DataFrame = {
+      localFinishCap: Long = LocalFinishCap): DataFrame = {
     import GraftRddBridge.unpersistLocalCheckpoint
     // localCheckpoint materializes the DATA but copies the checkpointed
     // plan's ESTIMATED statistics onto the LogicalRDD — in an iterative

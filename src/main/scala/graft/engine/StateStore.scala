@@ -140,11 +140,19 @@ final class StateStore(spark: SparkSession, root: String) {
     * listing: metadata-scale, zero Spark jobs). 0 when the table or
     * partition doesn't exist.
     */
-  def partitionFileCount(table: String, libraryId: String): Int = {
-    val cur = currentVersion(table).getOrElse(return 0)
+  def partitionFileCount(table: String, libraryId: String): Int =
+    partitionFiles(table, libraryId).size
+
+  /** The parquet data files of the current snapshot of one library's
+    * partition (driver-side listing; empty when the table or partition
+    * doesn't exist).
+    */
+  private[graft] def partitionFiles(table: String,
+      libraryId: String): Seq[Path] = {
+    val cur = currentVersion(table).getOrElse(return Nil)
     val dir = Paths.get(tableDir(table), s"v$cur", s"library_id=$libraryId")
-    if (!Files.exists(dir)) 0
-    else listDir(dir).count(p => !Files.isDirectory(p) &&
+    if (!Files.exists(dir)) Nil
+    else listDir(dir).filter(p => !Files.isDirectory(p) &&
       p.getFileName.toString.endsWith(".parquet"))
   }
 
@@ -198,17 +206,29 @@ final class StateStore(spark: SparkSession, root: String) {
     // small-files problem). Past the file threshold the append FOLDS the
     // delta into a coalesced full-partition rewrite instead — the LSM
     // compaction discipline, amortized O(partition/threshold) per append.
-    // Crucially it is the SAME single version bump as the plain append
-    // (never a separate compaction version), so version arithmetic
-    // (time travel, snapshot CDC) observes identical history either way.
-    if (partitionFileCount(table, libraryId) >= AutoCompactFileThreshold) {
+    // The rewrite writes one file per `spark.sql.files.maxPartitionBytes`
+    // of the listed partition bytes (at least one), so a large partition
+    // is not funnelled through a single task, and the threshold counts
+    // the files BEYOND that byte-sized count (48 files in all for a
+    // partition that rewrites to one file): a rewrite of 48 or more
+    // files is never itself over the threshold, so the next append is a
+    // plain delta again, not another full rewrite. Crucially it is the
+    // SAME single version bump as the plain append (never a separate
+    // compaction version), so version arithmetic (time travel, snapshot
+    // CDC) observes identical history either way.
+    val files = partitionFiles(table, libraryId)
+    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val bytes = files.map(Files.size).sum
+    val nFiles = math.max(1L, (bytes + maxBytes - 1) / maxBytes).toInt
+    if (files.size >= nFiles + AutoCompactFileThreshold - 1) {
       val cur = currentVersion(table).get // threshold > 0 ⇒ partition exists
       val partDir = Paths.get(tableDir(table), s"v$cur",
         s"library_id=$libraryId")
       val existing = spark.read.parquet(partDir.toString)
       val delta = deltaRows.drop("library_id")
       return writeCompactedPartition(table, libraryId,
-        existing.unionByName(delta).coalesce(1))
+        existing.unionByName(delta).coalesce(nFiles))
     }
     val cur = currentVersion(table)
     val next = cur.getOrElse(0L) + 1
@@ -238,9 +258,10 @@ final class StateStore(spark: SparkSession, root: String) {
   }
 
   /** Delta-file bound per library partition before an append folds into a
-    * coalesced rewrite (see [[appendLibraryPartition]]). 48 keeps read
-    * plans a few dozen files per partition at worst while amortizing the
-    * rewrite over that many appends.
+    * byte-sized coalesced rewrite (see [[appendLibraryPartition]]): the
+    * files a partition may hold beyond the rewrite's file count, plus one.
+    * 48 keeps read plans a few dozen delta files per partition at worst
+    * while amortizing the rewrite over that many appends.
     */
   private val AutoCompactFileThreshold = 48
 

@@ -3330,8 +3330,15 @@ final class VectorEngine(
     * within ranges keyed by a sampled RANGE-PARTITION id (monotone in
     * chunk id, so range order is compatible with the global chunk-id
     * packing order), plus an exclusive driver-side prefix over the range
-    * totals — global state is a constant [[VectorEngine.PackRangeCount]]
-    * longs at any corpus size.
+    * totals. The range count is the partition count of the checkpointed
+    * flag frame, capped at [[VectorEngine.PackRangeCount]]. That frame
+    * ends in a join, so the count follows the session's
+    * `spark.sql.shuffle.partitions` (after AQE coalescing), not the
+    * corpus size. Global state is at most the cap in longs at any corpus
+    * size, and a session with few shuffle partitions runs only that many
+    * range tasks. The packing does not depend on the count: offsets are
+    * the running sum in chunk-id order whatever the range boundaries
+    * (CurateSpec pins 1 and 7 ranges equal).
     *
     * `mixture` / `dsirTarget` (VERDICT r6 #4) extend the DAG with the two
     * corpus-assembly stages: temperature-scaled mixture sampling
@@ -3501,20 +3508,29 @@ final class VectorEngine(
 
     // pack the survivors: two-phase prefix sum in chunk-id order.
     // Range key = sampled range-partition id (Spark's own RangePartitioner
-    // via repartitionByRange), NOT a fixed-length id prefix: the range
-    // COUNT is the constant `PackRangeCount` whatever the corpus size or
-    // id format (VERDICT r7 #2 — the prefix rule collected O(distinct
-    // prefixes) driver rows), the boundaries adapt to the actual id
-    // distribution, and range-partition order is monotone in id, so range
-    // order stays compatible with the global chunk-id packing order. The
-    // localCheckpoint freezes the sampled boundaries so the totals job
-    // and the packed-rows job see the SAME rng assignment (the sampler's
-    // seed varies per RDD, so an unmaterialized plan could re-draw
-    // different boundaries between the two actions).
+    // via repartitionByRange), NOT a fixed-length id prefix: the id-prefix
+    // rule collected O(distinct prefixes) driver rows, whereas the range
+    // boundaries adapt to the actual id distribution, and range-partition
+    // order is monotone in id, so range order stays compatible with the
+    // global chunk-id packing order. The range COUNT is the partition
+    // count Spark gave `flagged` (a checkpointed frame, so reading it runs
+    // no job), at least 1 and at most `PackRangeCount`. `flagged` ends in
+    // a join, so that count is the session's shuffle partition count
+    // (AQE-coalesced), not a measure of the corpus. Every range is one
+    // task in each of the checkpoint, totals and write jobs, so a fixed
+    // 1,024 ran thousands of near-empty tasks on a small corpus, while
+    // the cap bounds the totals collect and the offset-map literal in a
+    // session that runs more shuffle partitions. The localCheckpoint
+    // freezes the sampled boundaries so the totals job and the
+    // packed-rows job see the SAME rng assignment (the sampler's seed
+    // varies per RDD, so an unmaterialized plan could re-draw different
+    // boundaries between the two actions).
+    val packRanges = math.min(VectorEngine.PackRangeCount,
+      math.max(1, flagged.rdd.getNumPartitions))
     val survivors = graft.Caches.track(
       flagged.filter(surv === lit(1))
         .select(col("id"), col("n_tok"))
-        .repartitionByRange(VectorEngine.PackRangeCount, col("id"))
+        .repartitionByRange(packRanges, col("id"))
         .withColumn("rng", spark_partition_id())
         .localCheckpoint())
     val totals = survivors.groupBy(col("rng"))
@@ -4856,10 +4872,12 @@ object VectorEngine {
   val StripSubL = 20
   val StripSubC = 1024
 
-  /** Range count for the `curateLibrary` packing prefix sum — a CONSTANT
-    * so the driver-side range-totals collect and the plan's offset-map
-    * literal stay ~this many entries at ANY corpus size (the per-range
-    * window grows instead, and windows spill).
+  /** CAP on the range count of the `curateLibrary` packing prefix sum.
+    * The actual count is the partition count of the curation flag frame,
+    * which follows the session's shuffle partition count; the cap keeps
+    * the driver-side range-totals collect and the plan's offset-map
+    * literal at most this many entries at ANY corpus size (past it the
+    * per-range window grows instead, and windows spill).
     */
   val PackRangeCount = 1024
 }

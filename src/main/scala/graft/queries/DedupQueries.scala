@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.curation.CurationCore
 import graft.functions.TextFunctions._
 import graft.queries.Det.{rnd, rndSql}
 
@@ -156,7 +157,7 @@ object DedupQueries {
     */
   private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxRounds: Int = 50,
-      localFinishCap: Long = 1L << 18): DataFrame =
+      localFinishCap: Long = CurationCore.LocalFinishCap): DataFrame =
     graft.curation.CurationCore.connectedComponents(nodes, pairs, idCol,
       maxRounds, localFinishCap)
 
@@ -1000,7 +1001,7 @@ object DedupQueries {
     "d_span_strip_multi" -> (spanStripMulti _),
     "d_minhash_eval"    -> (minhashEval _),
     "d_weighted_sample" -> (weightedSample _),
-    "d_pagerank"        -> (pageRank _),
+    "d_pagerank"        -> ((s: SparkSession, d: String) => pageRank(s, d)),
     "d_exact_norm"      -> (exactNorm _),
     "d_edit_dedup"      -> (editDedup _),
     "d_greedy_cover"    -> (greedyCover _),
@@ -1176,23 +1177,30 @@ object DedupQueries {
     * scale each superstep's rank frame would be checkpointed exactly as
     * the CC rounds are.
     */
-  private def pageRank(s: SparkSession, d: String): DataFrame = {
+  private[graft] def pageRank(s: SparkSession, d: String,
+      localEdgeCap: Long = CurationCore.LocalFinishCap): DataFrame = {
     val pairs = candidatePairs(s, d)
-    // The cap check is a distributed count — node ids are only ever
-    // collected INSIDE the capped branch, so an over-cap corpus never
-    // pulls corpus-scale data onto the driver.
-    val n = docs(s, d).select(col("doc_id")).count()
+    // The cap checks are one distributed aggregation that counts the
+    // nodes and the candidate edges together — node ids and edges are
+    // only ever collected INSIDE the capped branch, so an over-cap graph
+    // never pulls graph-scale data onto the driver.
+    val counts = docs(s, d).select(lit(true).as("node"))
+      .unionAll(pairs.select(lit(false).as("node")))
+      .agg(count(when(col("node"), 1)), count(when(!col("node"), 1))).head()
+    val (n, m) = (counts.getLong(0), counts.getLong(1))
     val jump = (15L * PrMass) / (100L * n)
     // BOUNDED LOCAL SUPERSTEPS (optimization r15, the CC local-finish
     // discipline): the dup-candidate graph is the already-bounded band
     // output; under a hard cap the 10 integer supersteps run on the
     // driver with the identical floor arithmetic — the 10-round lazily
-    // chained join plan (and its one giant execution) disappears.
-    // Larger graphs keep the distributed rounds below.
+    // chained join plan (and its one giant execution) disappears. The
+    // cap bounds both counts: nodes <= 2^20 and edges <= `localEdgeCap`
+    // (the connected-components local-finish cap). Larger graphs keep
+    // the distributed rounds below.
     val pairRows = pairs.select(col("doc_a"), col("doc_b"))
-    if (n <= (1L << 20)) {
-      val nodeIds = docs(s, d).select(col("doc_id")).collect().map(_.getLong(0))
+    if (n <= (1L << 20) && m <= localEdgeCap) {
       val es = pairRows.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val nodeIds = docs(s, d).select(col("doc_id")).collect().map(_.getLong(0))
       val edges = es ++ es.map(t => (t._2, t._1)) // bidirected
       val odeg = scala.collection.mutable.HashMap.empty[Long, Long]
       edges.foreach { case (a, _) => odeg.update(a, odeg.getOrElse(a, 0L) + 1) }

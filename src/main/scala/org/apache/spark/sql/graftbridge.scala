@@ -121,30 +121,44 @@ object GraftScanBridge {
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan.toString
 }
 
-/** Monotone count of jobs STARTED on a context since this bridge first
-  * observed it: one lazily-registered SparkListener per context, with
-  * the read synchronized through the listener bus's own
+/** Monotone counts of jobs STARTED and tasks ENDED on a context since
+  * this bridge first observed it: one lazily-registered SparkListener per
+  * context, with the read synchronized through the listener bus's own
   * `waitUntilEmpty` (`private[spark]`, hence the bridge) so a delta
   * taken around a verb is exact, not racing the async event queue.
-  * Specs diff it to assert a verb's driver-job budget (the EngineSpec
-  * auto-dispatch cache assertion: repeated searches must not re-run the
-  * table-existence probes).
+  * Specs diff the job count to assert a verb's driver-job budget (the
+  * EngineSpec auto-dispatch cache assertion: repeated searches must not
+  * re-run the table-existence probes); ProfileBench records both per
+  * entry, since a plan can keep its job count and still run thousands
+  * of near-empty tasks.
   */
 object GraftJobBridge {
+  private final class Counts {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicLong()
+  }
   private val counters = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.SparkContext, java.util.concurrent.atomic.AtomicInteger]()
-  def jobsSubmitted(sc: org.apache.spark.SparkContext): Int = {
+    org.apache.spark.SparkContext, Counts]()
+  private def counts(sc: org.apache.spark.SparkContext): Counts = {
     val c = counters.computeIfAbsent(sc, s => {
-      val a = new java.util.concurrent.atomic.AtomicInteger()
+      val fresh = new Counts
       s.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          a.incrementAndGet(); ()
+          fresh.jobs.incrementAndGet(); ()
+        }
+        override def onTaskEnd(
+            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          fresh.tasks.incrementAndGet(); ()
         }
       })
-      a
+      fresh
     })
     sc.listenerBus.waitUntilEmpty()
-    c.get()
+    c
   }
+  def jobsSubmitted(sc: org.apache.spark.SparkContext): Int =
+    counts(sc).jobs.get()
+  def tasksEnded(sc: org.apache.spark.SparkContext): Long =
+    counts(sc).tasks.get()
 }

@@ -69,6 +69,70 @@ class CurateSpec extends AnyFunSuite {
     graft.Caches.releaseAll()
   }
 
+  test("curateLibrary packing is invariant to the range count") {
+    val root = graft.TempDirs.scratch("graft-curate-ranges").toString
+    val eng = new VectorEngine(spark, root)
+    val lib = eng.createLibrary("curated-ranges", 4)
+    val doc = eng.createDocument(lib)
+    eng.bulkIngest(lib, doc, graft.queries.Tables.documents(spark, sfDir)
+      .select(format_string("d%05d", col("doc_id")).as("id"), col("text")))
+    val store = new graft.engine.StateStore(spark, eng.storeRoot)
+    val budget = 64 // small enough that some chunks straddle sequences
+    // the range count follows the partitions of the curation flag frame:
+    // with partition coalescing and broadcast joins off, the last join
+    // gives it exactly `spark.sql.shuffle.partitions` partitions
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    // the packed rows in chunk-id order, and how many files hold them
+    def packedWith(ranges: Int)
+        : (Seq[(String, Long, Long, Long, Long, Boolean)], Long) =
+      try {
+        spark.conf.set("spark.sql.shuffle.partitions", ranges.toString)
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val sc = spark.sparkContext
+        val tasks0 = org.apache.spark.sql.GraftJobBridge.tasksEnded(sc)
+        eng.curateLibrary(lib, packBudget = budget).collect()
+        // every pack range is one task in each of the survivors
+        // checkpoint, the range totals and the packed write: the whole
+        // verb stays under the cap only when the count follows the input
+        val tasks = org.apache.spark.sql.GraftJobBridge.tasksEnded(sc) - tasks0
+        assert(tasks < VectorEngine.PackRangeCount,
+          s"curateLibrary ran $tasks tasks over $ranges partitions")
+        val files = store.partitionFileCount("curated_sequences", lib)
+        assert(files >= 1 && files <= ranges,
+          s"$ranges ranges wrote $files packed files")
+        (eng.curatedSequences(lib).orderBy(col("chunk_id").asc).collect()
+          .map(r => (r.getAs[String]("chunk_id"), r.getAs[Long]("n_tokens"),
+            r.getAs[Long]("start_off"), r.getAs[Long]("seq_id"),
+            r.getAs[Long]("end_seq"), r.getAs[Boolean]("straddles"))).toSeq,
+          eng.curatedSequences(lib).select(input_file_name()).distinct().count())
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val (one, _) = packedWith(1)
+    val (seven, sevenFiles) = packedWith(7)
+    // the packing window hash-partitions the write by range id, so all
+    // of a range's rows land in one file: rows in two or more files
+    // prove the second run really packed over more than one range
+    assert(sevenFiles > 1, s"7 partitions packed rows into $sevenFiles file(s)")
+    // driver-side reference: the survivors' running sum in chunk-id order
+    var off = 0L
+    val reference = one.map { case (id, n, _, _, _, _) =>
+      val start = off; off += n
+      val seq = start / budget
+      val end = (start + math.max(n, 1L) - 1) / budget
+      (id, n, start, seq, end, seq != end)
+    }
+    assert(one.nonEmpty && reference.exists(_._6))
+    assert(one == reference, "1-range packing diverged from the running sum")
+    assert(seven == reference, "7-range packing diverged from the running sum")
+    graft.Caches.releaseAll()
+  }
+
   test("curateLibrary with mixture+DSIR matches the 7-stage d_pipeline_full") {
     val root = graft.TempDirs.scratch("graft-curate-full").toString
     val eng = new VectorEngine(spark, root)

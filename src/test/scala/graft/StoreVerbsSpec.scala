@@ -452,4 +452,49 @@ class StoreVerbsSpec extends AnyFunSuite {
     assert(rows.select(col("src_id")).as[String].collect().sorted.toSeq ==
       (0 until n).map(i => s"s$i").sorted)
   }
+
+  test("appendLibraryPartition: auto-compact sizes its output by bytes") {
+    import spark.implicits._
+    val store = new StateStore(spark,
+      graft.TempDirs.scratch("graft-verbs-compact-bytes").toString)
+    // rows [from, until) of libA's `nsw_edges`, written as `parts` files
+    def rows(from: Int, until: Int, parts: Int): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        (from until until).map(i => org.apache.spark.sql.Row(
+          "libA", f"s$i%06d", f"d$i%06d-${i * 7919L}%012d")), parts),
+        Schemas.nswEdges)
+    def fileNames: Set[String] =
+      store.partitionFiles("nsw_edges", "libA").map(_.getFileName.toString).toSet
+    // one append of 200 files of 200 rows each: far past the 48-file
+    // threshold at any target that splits the partition
+    store.appendLibraryPartition("nsw_edges", "libA", rows(0, 40000, 200))
+    val written = fileNames
+    assert(written.size == 200)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    // a target of about three delta files: the rewrite is some 67 files,
+    // 48 or more, so a raw 48-file trigger would rewrite it again on the
+    // very next append
+    val target = store.partitionFiles("nsw_edges", "libA")
+      .map(java.nio.file.Files.size).sum * 3 / 200
+    spark.conf.set(key, target.toString)
+    try {
+      store.appendLibraryPartition("nsw_edges", "libA", rows(40000, 40001, 1))
+      val compacted = fileNames
+      assert(compacted.intersect(written).isEmpty,
+        "the append over the threshold did not compact")
+      assert(compacted.size >= 48 && compacted.size < 200,
+        s"compaction at a $target-byte target wrote ${compacted.size} files")
+      // the next append writes a plain delta: every compacted file is
+      // carried forward and one file is added, with no second rewrite
+      store.appendLibraryPartition("nsw_edges", "libA", rows(40001, 40002, 1))
+      val next = fileNames
+      assert(compacted.subsetOf(next) && next.size == compacted.size + 1,
+        "the append after a compaction rewrote the partition again")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(store.currentVersion("nsw_edges").contains(3L))
+    val read = store.read("nsw_edges", Schemas.nswEdges)
+    assert(read.select(col("src_id")).as[String].collect().sorted.toSeq ==
+      (0 until 40002).map(i => f"s$i%06d"))
+  }
 }

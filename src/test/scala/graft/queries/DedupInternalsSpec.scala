@@ -1,11 +1,13 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** package-private internals of the dedup family: the connected-components
-  * convergence guard and the session-cache lifecycle (release -> no pinned
-  * blocks from these caches -> correct rebuild).
+  * convergence guard, the agreement of pageRank's two superstep paths and
+  * the session-cache lifecycle (release -> no pinned blocks from these
+  * caches -> correct rebuild).
   */
 class DedupInternalsSpec extends AnyFunSuite {
 
@@ -37,6 +39,31 @@ class DedupInternalsSpec extends AnyFunSuite {
         localFinishCap = 0L)
     }
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("pageRank's distributed supersteps equal its driver supersteps") {
+    // the test corpus has no candidate edges; copies of 40 documents
+    // under new ids add one exact-duplicate edge each
+    val dir = graft.TempDirs.scratch("graft-pagerank").toString
+    val src = Tables.documents(spark, sfDir)
+    val dupIds = src.select(col("doc_id")).orderBy(col("doc_id"))
+      .limit(40).collect().map(_.getLong(0)).toSet
+    src.unionByName(src.filter(col("doc_id").isin(dupIds.toSeq: _*))
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+      .write.parquet(s"$dir/documents.parquet")
+    def ranks(cap: Long): Seq[(Long, Long)] =
+      DedupQueries.pageRank(spark, dir, localEdgeCap = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the default cap finishes this graph on the driver; a cap of 0
+    // sends any graph with an edge to the distributed rounds
+    val local = ranks(graft.curation.CurationCore.LocalFinishCap)
+    val distributed = ranks(0L)
+    // the edges decide the ranking: every top document is a duplicated
+    // one or its copy, ranked above the edge-less rest
+    assert(local.size == 20 &&
+      local.forall { case (id, _) => dupIds(id % 1000000L) })
+    assert(distributed == local)
+    graft.Caches.releaseAll()
   }
 
   test("releaseCaches drops this suite's pinned blocks and rebuilds correctly") {

@@ -13,16 +13,21 @@ family sums so a drifting family is visible even when no single entry
 trips the threshold.
 
 Each artifact is either a Bench artifact ({"queries": {name: sec}}) or a
-ProfileBench artifact ({"queries": {name: {"sec": s, "jobs": n}}}). When
-the prior and run A both carry job counts, every entry whose count
-changed is listed with its prior -> runA (runB) counts; Spark job counts
-are deterministic per entry, so any change there is a real plan change.
+ProfileBench artifact ({"queries": {name: {"sec": s, "jobs": n,
+"tasks": t}}}; older ProfileBench artifacts have no "tasks"). When the
+prior and run A both carry job counts, every entry whose job or task
+count changed is listed with its prior -> runA (runB) counts and the
+runA - prior delta of each; Spark job counts are deterministic per entry,
+so any change there is a real plan change, and a task change with an
+unchanged job count is a change in partitioning (a plan that keeps its
+jobs but runs fewer or more tasks per job).
 """
 import json, sys
 
 
 def load(p):
-    """(seconds per entry, Spark jobs per entry — empty for Bench artifacts)"""
+    """(seconds, Spark jobs, Spark tasks per entry; the last two are empty
+    for Bench artifacts, and tasks for ProfileBench artifacts without them)"""
     d = json.load(open(p))
     if not isinstance(d, dict) or not isinstance(d.get("queries"), dict):
         sys.exit(f"{p}: not a bench artifact (expected a JSON object with a "
@@ -32,25 +37,45 @@ def load(p):
     secs = {k: v["sec"] if isinstance(v, dict) else v for k, v in q.items()}
     jobs = {k: v["jobs"] for k, v in q.items()
             if isinstance(v, dict) and "jobs" in v}
-    return secs, jobs
+    tasks = {k: v["tasks"] for k, v in q.items()
+             if isinstance(v, dict) and "tasks" in v}
+    return secs, jobs, tasks
 
 
-def print_job_changes(prior, a, b):
+def print_job_changes(prior, a, b, prior_t, a_t, b_t):
     common = sorted(set(prior) & set(a))
-    changed = [k for k in common if a[k] != prior[k]]
-    up = [k for k in changed if a[k] > prior[k]]
+    has_t = [k for k in common if k in prior_t and k in a_t]
+    changed = [k for k in common if a[k] != prior[k] or
+               (k in has_t and a_t[k] != prior_t[k])]
+    up = [k for k in common if a[k] > prior[k]]
     print(f"\nSpark job counts over {len(common)} common entries: prior "
           f"{sum(prior[k] for k in common)}, runA {sum(a[k] for k in common)}; "
-          f"{len(changed)} changed, {len(up)} went up")
+          f"{sum(1 for k in common if a[k] != prior[k])} changed, "
+          f"{len(up)} went up")
+    if has_t:
+        t_up = [k for k in has_t if a_t[k] > prior_t[k]]
+        print(f"Spark task counts over {len(has_t)} entries: prior "
+              f"{sum(prior_t[k] for k in has_t)}, runA "
+              f"{sum(a_t[k] for k in has_t)}; "
+              f"{sum(1 for k in has_t if a_t[k] != prior_t[k])} changed, "
+              f"{len(t_up)} went up")
     if changed:
-        print(f"{'entry':<36}{'prior':>7}{'runA':>7}{'runB':>7}{'A-prior':>9}")
+        print(f"{'entry':<36}{'prior':>7}{'runA':>7}{'runB':>7}{'A-prior':>9}"
+              f"{'t.prior':>9}{'t.runA':>9}{'t.runB':>9}{'t.A-prior':>11}")
+
+    def cell(d, k):
+        return str(d[k]) if k in d else "-"
+
     for k in changed:
-        rb = str(b[k]) if k in b else "-"
-        print(f"{k:<36}{prior[k]:>7}{a[k]:>7}{rb:>7}{a[k] - prior[k]:>+9}")
+        dt = f"{a_t[k] - prior_t[k]:+}" if k in has_t else "-"
+        print(f"{k:<36}{prior[k]:>7}{a[k]:>7}{cell(b, k):>7}"
+              f"{a[k] - prior[k]:>+9}{cell(prior_t, k):>9}{cell(a_t, k):>9}"
+              f"{cell(b_t, k):>9}{dt:>11}")
 
 
 def main(prior_p, a_p, b_p, thr=1.5):
-    (prior, prior_j), (a, a_j), (b, b_j) = load(prior_p), load(a_p), load(b_p)
+    (prior, prior_j, prior_t), (a, a_j, a_t), (b, b_j, b_t) = (
+        load(prior_p), load(a_p), load(b_p))
     common = sorted(set(prior) & set(a) & set(b))
     print(f"common entries: {len(common)}  "
           f"(prior {len(prior)}, runA {len(a)}, runB {len(b)})")
@@ -93,7 +118,7 @@ def main(prior_p, a_p, b_p, thr=1.5):
     print(f"\nmedian per-entry A/prior ratio: {med:.3f}; "
           f"{faster}/{len(common)} entries faster than prior")
     if prior_j and a_j:
-        print_job_changes(prior_j, a_j, b_j)
+        print_job_changes(prior_j, a_j, b_j, prior_t, a_t, b_t)
 
 
 if __name__ == "__main__":
