@@ -32,14 +32,22 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => SparkEntry.onlySelected(n) }
     val results = selected.map { case (name, fn) =>
+      var failure: Option[Throwable] = None
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() }
+      catch { case e: Throwable => failure = Some(e); -1L }
       val sec = (System.nanoTime() - t0) / 1e9
       // Per-entry visibility (round-16 measurement fix, additions only):
       // one SMALL json line per query as it finishes, so per-query
       // timings are scrapeable from stdout without risking the total
-      // line's parse (each line is well under any capture window).
-      println(s"""{"metric":"query","query":"$name","value":${s3(sec)},"unit":"sec"}""")
+      // line's parse (each line is well under any capture window). A
+      // failed entry still counts its seconds toward the total, as it
+      // always has, but its line says it failed and why.
+      val status = failure.fold(""","status":"ok"""") { e =>
+        s""","status":"error","error":${Verify.jsonString(
+          s"${e.getClass.getName}: ${e.getMessage}".take(200))}"""
+      }
+      println(s"""{"metric":"query","query":"$name","value":${s3(sec)},"unit":"sec"$status}""")
       name -> sec
     }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0

@@ -304,47 +304,95 @@ object Schemas {
     * `layoutTieKey` = true appends the row id (`chunk_id`) to the layout
     * sort so the rewrite is deterministic; the edge tables carry their
     * own full key instead (they have no chunk_id column).
+    *
+    * `families` declares which index families OWN the table, by every
+    * `IndexConfig.indexType` spelling (`_det`/`_trained` included); a
+    * table with no owner is not an index table. The index lifecycle
+    * derives from it: a rebuild writes its family's tables and keeps
+    * exactly those, dropping the library's partition of every other
+    * index table; a library delete or a flat rebuild drops them all;
+    * incremental maintenance touches only tables the library holds.
+    * A SHARED table is listed under every family that reads it —
+    * `ivf_centroids` (the coarse cells of the ivf, graph and ivf-coded
+    * families), `ivf_postings` (ivf and the graph families) and
+    * `pq_codebooks` (pq and ivfpq) — so a rebuild between two of its
+    * owners keeps it.
     */
   final case class TableDef(
       name: String,
       schema: StructType,
       compactable: Boolean = false,
       layoutKeys: Seq[String] = Nil,
-      layoutTieKey: Boolean = false)
+      layoutTieKey: Boolean = false,
+      families: Set[String] = Set.empty) {
+    /** The columns naming the chunk(s) a row stands for: `chunk_id`, or
+      * both endpoints of an edge; empty for per-library parameter tables
+      * (planes, centroids, codebooks, ranges).
+      */
+    def rowIdCols: Seq[String] =
+      Seq("chunk_id", "src_id", "dst_id").filter(schema.fieldNames.contains)
+  }
+
+  private val Lsh = Set("lsh", "lsh_det")
+  private val Ivf = Set("ivf", "ivf_det")
+  private val Graph = Set("nsw_det", "hnsw_det")
+  private val Pq = Set("pq", "pq_trained")
+  private val IvfPq = Set("ivfpq", "ivfpq_trained")
+  private val Cells = Ivf ++ Graph ++ IvfPq ++ Set("ivfbq", "ivfsq8")
 
   val storeTables: Seq[TableDef] = Seq(
     TableDef("libraries", libraries),
     TableDef("documents", documents),
     TableDef("chunks", chunks),
-    TableDef("lsh_planes", lshPlanes),
+    TableDef("lsh_planes", lshPlanes, families = Lsh),
     TableDef("lsh_buckets", lshBuckets, compactable = true,
-      layoutKeys = Seq("table_id", "signature"), layoutTieKey = true),
-    TableDef("ivf_centroids", ivfCentroids),
+      layoutKeys = Seq("table_id", "signature"), layoutTieKey = true,
+      families = Lsh),
+    TableDef("ivf_centroids", ivfCentroids, families = Cells),
     TableDef("ivf_postings", ivfPostings, compactable = true,
-      layoutKeys = Seq("centroid_id"), layoutTieKey = true),
-    TableDef("pq_codebooks", pqCodebooks),
-    TableDef("pq_codes", pqCodes, compactable = true),
+      layoutKeys = Seq("centroid_id"), layoutTieKey = true,
+      families = Ivf ++ Graph),
+    TableDef("pq_codebooks", pqCodebooks, families = Pq ++ IvfPq),
+    TableDef("pq_codes", pqCodes, compactable = true, families = Pq),
     TableDef("ivfpq_codes", ivfpqCodes, compactable = true,
-      layoutKeys = Seq("centroid_id"), layoutTieKey = true),
-    TableDef("sq8_params", sq8Params),
-    TableDef("sq8_codes", sq8Codes, compactable = true),
-    TableDef("bq_codes", bqCodes, compactable = true),
+      layoutKeys = Seq("centroid_id"), layoutTieKey = true, families = IvfPq),
+    TableDef("sq8_params", sq8Params, families = Set("sq8")),
+    TableDef("sq8_codes", sq8Codes, compactable = true, families = Set("sq8")),
+    TableDef("bq_codes", bqCodes, compactable = true, families = Set("bq")),
     TableDef("ivfbq_codes", ivfbqCodes, compactable = true,
-      layoutKeys = Seq("centroid_id"), layoutTieKey = true),
-    TableDef("ivfsq8_params", ivfsq8Params),
+      layoutKeys = Seq("centroid_id"), layoutTieKey = true,
+      families = Set("ivfbq")),
+    TableDef("ivfsq8_params", ivfsq8Params, families = Set("ivfsq8")),
     TableDef("ivfsq8_codes", ivfsq8Codes, compactable = true,
-      layoutKeys = Seq("centroid_id"), layoutTieKey = true),
+      layoutKeys = Seq("centroid_id"), layoutTieKey = true,
+      families = Set("ivfsq8")),
     // NSW adjacency: the walk reads edges by src_id `isin` (one beam per
     // round); the hnsw descent reads (layer, src_id) literals — layer
     // leads its key. No chunk_id column, so the full key is carried here.
+    // hnsw_det's base layer IS nsw_edges; its upper layers are its own.
     TableDef("nsw_edges", nswEdges, compactable = true,
-      layoutKeys = Seq("src_id", "dst_id")),
+      layoutKeys = Seq("src_id", "dst_id"), families = Graph),
     TableDef("hnsw_edges", hnswEdges, compactable = true,
-      layoutKeys = Seq("layer", "src_id", "dst_id")),
+      layoutKeys = Seq("layer", "src_id", "dst_id"),
+      families = Set("hnsw_det")),
     TableDef("curated_sequences", curatedSequences),
     TableDef("cdc_blobs", cdcBlobs),
     TableDef("cdc_manifest", cdcManifest),
     TableDef("aliases", aliases))
+
+  /** The registered tables by name. */
+  val storeTable: Map[String, TableDef] =
+    storeTables.map(t => t.name -> t).toMap
+
+  /** The derived index tables: every table some family owns. */
+  val indexTables: Seq[TableDef] = storeTables.filter(_.families.nonEmpty)
+
+  /** Every valid `IndexConfig.indexType`: the owning families, plus
+    * `flat` (scores the chunk table at query time, owns no table) and
+    * `auto` (resolved to one of the others at rebuild time).
+    */
+  val indexTypes: Set[String] =
+    indexTables.flatMap(_.families).toSet ++ Set("flat", "auto")
 
   /** Catalog-scale tables NOT partitioned by library_id — excluded from
     * per-library partition operations (export/import, partition drops).

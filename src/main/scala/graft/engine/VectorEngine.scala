@@ -824,41 +824,25 @@ final class VectorEngine(
       nFilesAfter = if (due) store.partitionFileCount("chunks", libId) else n)
   }
 
-  private def lshPlanes(libId: String): DataFrame =
-    store.read("lsh_planes", Schemas.lshPlanes).filter(col("library_id") === libId)
-  private def lshBuckets(libId: String): DataFrame =
-    store.read("lsh_buckets", Schemas.lshBuckets).filter(col("library_id") === libId)
-  private def ivfCentroids(libId: String): DataFrame =
-    store.read("ivf_centroids", Schemas.ivfCentroids).filter(col("library_id") === libId)
-  private def ivfPostings(libId: String): DataFrame =
-    store.read("ivf_postings", Schemas.ivfPostings).filter(col("library_id") === libId)
-  private def pqCodebooks(libId: String): DataFrame =
-    store.read("pq_codebooks", Schemas.pqCodebooks).filter(col("library_id") === libId)
-  private def pqCodes(libId: String): DataFrame =
-    store.read("pq_codes", Schemas.pqCodes).filter(col("library_id") === libId)
-  private def sq8Params(libId: String): DataFrame =
-    store.read("sq8_params", Schemas.sq8Params).filter(col("library_id") === libId)
-  private def sq8Codes(libId: String): DataFrame =
-    store.read("sq8_codes", Schemas.sq8Codes).filter(col("library_id") === libId)
-
-  private def bqCodes(libId: String): DataFrame =
-    store.read("bq_codes", Schemas.bqCodes).filter(col("library_id") === libId)
-
-  private def ivfbqCodes(libId: String): DataFrame =
-    store.read("ivfbq_codes", Schemas.ivfbqCodes)
+  /** One library's partition of a registered store table. */
+  private def libPart(table: String, libId: String): DataFrame =
+    store.read(table, Schemas.storeTable(table).schema)
       .filter(col("library_id") === libId)
-  private def ivfpqCodes(libId: String): DataFrame =
-    store.read("ivfpq_codes", Schemas.ivfpqCodes).filter(col("library_id") === libId)
-  private def ivfsq8Params(libId: String): DataFrame =
-    store.read("ivfsq8_params", Schemas.ivfsq8Params).filter(col("library_id") === libId)
-  private def ivfsq8Codes(libId: String): DataFrame =
-    store.read("ivfsq8_codes", Schemas.ivfsq8Codes).filter(col("library_id") === libId)
-  private def nswEdges(libId: String): DataFrame =
-    store.read("nsw_edges", Schemas.nswEdges).filter(col("library_id") === libId)
-
-  private def hnswEdges(libId: String): DataFrame =
-    store.read("hnsw_edges", Schemas.hnswEdges)
-      .filter(col("library_id") === libId)
+  private def lshPlanes(libId: String): DataFrame = libPart("lsh_planes", libId)
+  private def lshBuckets(libId: String): DataFrame = libPart("lsh_buckets", libId)
+  private def ivfCentroids(libId: String): DataFrame = libPart("ivf_centroids", libId)
+  private def ivfPostings(libId: String): DataFrame = libPart("ivf_postings", libId)
+  private def pqCodebooks(libId: String): DataFrame = libPart("pq_codebooks", libId)
+  private def pqCodes(libId: String): DataFrame = libPart("pq_codes", libId)
+  private def sq8Params(libId: String): DataFrame = libPart("sq8_params", libId)
+  private def sq8Codes(libId: String): DataFrame = libPart("sq8_codes", libId)
+  private def bqCodes(libId: String): DataFrame = libPart("bq_codes", libId)
+  private def ivfbqCodes(libId: String): DataFrame = libPart("ivfbq_codes", libId)
+  private def ivfpqCodes(libId: String): DataFrame = libPart("ivfpq_codes", libId)
+  private def ivfsq8Params(libId: String): DataFrame = libPart("ivfsq8_params", libId)
+  private def ivfsq8Codes(libId: String): DataFrame = libPart("ivfsq8_codes", libId)
+  private def nswEdges(libId: String): DataFrame = libPart("nsw_edges", libId)
+  private def hnswEdges(libId: String): DataFrame = libPart("hnsw_edges", libId)
 
   // ---- library CRUD ---------------------------------------------------
 
@@ -1701,18 +1685,7 @@ final class VectorEngine(
     val nChunks = chunkAgg.getLong(0)
     val nEmbedded = if (chunkAgg.isNullAt(1)) 0L else chunkAgg.getLong(1)
     def has(table: String): Boolean =
-      store.exists(table) &&
-        !store.read(table, table match {
-          case "lsh_planes"    => Schemas.lshPlanes
-          case "lsh_buckets"   => Schemas.lshBuckets
-          case "ivf_centroids" => Schemas.ivfCentroids
-          case "pq_codebooks"  => Schemas.pqCodebooks
-          case "pq_codes"      => Schemas.pqCodes
-          case "ivfpq_codes"   => Schemas.ivfpqCodes
-          case "ivfsq8_params" => Schemas.ivfsq8Params
-          case "ivfsq8_codes"  => Schemas.ivfsq8Codes
-          case _               => Schemas.ivfPostings
-        }).filter(col("library_id") === libId).isEmpty
+      store.hasLibraryPartition(table, libId) && !libPart(table, libId).isEmpty
     LibraryStats(libId, config.indexType, nDocs, nChunks, nEmbedded,
       hasLshIndex = has("lsh_planes") && has("lsh_buckets"),
       hasIvfIndex = has("ivf_centroids") && has("ivf_postings"),
@@ -1823,6 +1796,11 @@ final class VectorEngine(
   /** Full rebuild of this library's derived index tables from the chunk
     * snapshot (reference startup replay / rebuild endpoint, `main.py:61-76`).
     * Versioned snapshot write + pointer swap = atomic repoint (C7).
+    * Each family arm writes only its own tables; the library then keeps
+    * exactly the tables its (auto-resolved) family owns in
+    * [[Schemas.storeTables]] — its partition of every other index table
+    * is dropped, and a table shared with the previous family (e.g.
+    * `ivf_centroids` from ivf_det to ivfpq) is rewritten, not dropped.
     */
   def rebuildIndex(libId: String): Unit = {
     val (dim, config0, _) = getLibrary(libId)
@@ -1846,7 +1824,7 @@ final class VectorEngine(
           else "lsh")
       } else config0
     config.indexType match {
-      case "flat" => dropIndexTables(libId) // flat scores at query time
+      case "flat" => () // flat scores the chunk table at query time
       case "lsh" | "lsh_det" =>
         val cappedH = math.min(config.lshHyperplanesPerTable, 63)
         val planes =
@@ -1858,17 +1836,6 @@ final class VectorEngine(
         store.writeLibraryPartition("lsh_planes", libId, planes)
         val buckets = LshIndex.buildBuckets(libChunks, planes, libId)
         store.writeLibraryPartition("lsh_buckets", libId, buckets)
-        // an auto library that outgrew (or re-entered) another tier must
-        // not leave stale tables behind: auto search dispatches on which
-        // tables EXIST for this library
-        dropIvfTables(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "ivf" | "ivf_det" =>
         val (centroids, postings) =
           if (config.indexType == "ivf_det") {
@@ -1878,14 +1845,6 @@ final class VectorEngine(
           } else IvfIndex.build(libChunks, libId, config.ivfNumCentroids)
         store.writeLibraryPartition("ivf_centroids", libId, centroids)
         store.writeLibraryPartition("ivf_postings", libId, postings)
-        dropLshTables(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "nsw_det" | "hnsw_det" =>
         // graph family: seed cells + postings (SHARED relations with the
         // ivf family — cells block the edge build and seed the walk;
@@ -1906,14 +1865,6 @@ final class VectorEngine(
           store.writeLibraryPartition("hnsw_edges", libId,
             graft.index.HnswIndex.buildLayers(libChunks, cents,
               ivfPostings(libId), libId, config.ivfNprobe, config.nswDegree))
-        else dropHnswEdgesOnly(libId) // graph downgrade: base stays, layers go
-        dropLshTables(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "pq" | "pq_trained" =>
         requirePqDivisible(config, dim) // defense in depth; verbs pre-check
         val (codebooks, codes) = PqIndex.build(libChunks, libId, dim,
@@ -1921,14 +1872,6 @@ final class VectorEngine(
           trained = config.indexType == "pq_trained")
         store.writeLibraryPartition("pq_codebooks", libId, codebooks)
         store.writeLibraryPartition("pq_codes", libId, codes)
-        dropLshTables(libId)
-        dropIvfTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "ivfpq" | "ivfpq_trained" =>
         requirePqDivisible(config, dim) // defense in depth; verbs pre-check
         val (centroids, codebooks, codes) = IvfPqIndex.build(libChunks,
@@ -1941,26 +1884,10 @@ final class VectorEngine(
         store.writeLibraryPartition("ivf_centroids", libId, centroids)
         store.writeLibraryPartition("pq_codebooks", libId, codebooks)
         store.writeLibraryPartition("ivfpq_codes", libId, codes)
-        dropLshTables(libId)
-        dropIvfPostingsOnly(libId)
-        dropPqCodesOnly(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "bq" =>
         // stateless sign-bit packing: no params table, one map-side pass
         store.writeLibraryPartition("bq_codes", libId,
           BqIndex.build(libChunks, libId, dim))
-        dropLshTables(libId)
-        dropIvfTables(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropIvfBqCodesOnly(libId)
       case "ivfbq" =>
         // cell-pruned binary codes: md5-seeded deterministic coarse
         // cells (the shared ivf_centroids relation) + the packed code ON
@@ -1970,26 +1897,10 @@ final class VectorEngine(
         store.writeLibraryPartition("ivf_centroids", libId, cents)
         store.writeLibraryPartition("ivfbq_codes", libId,
           IvfBqIndex.build(libChunks, cents, libId, dim))
-        dropLshTables(libId)
-        dropIvfPostingsOnly(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
       case "sq8" =>
         val (params, codes) = Sq8Index.build(libChunks, libId, dim)
         store.writeLibraryPartition("sq8_params", libId, params)
         store.writeLibraryPartition("sq8_codes", libId, codes)
-        dropLshTables(libId)
-        dropIvfTables(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropIvfSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
       case "ivfsq8" =>
         val (centroids, params, codes) = IvfSq8Index.build(libChunks, libId,
           dim, config.ivfNumCentroids)
@@ -1999,16 +1910,12 @@ final class VectorEngine(
         store.writeLibraryPartition("ivf_centroids", libId, centroids)
         store.writeLibraryPartition("ivfsq8_params", libId, params)
         store.writeLibraryPartition("ivfsq8_codes", libId, codes)
-        dropLshTables(libId)
-        dropIvfPostingsOnly(libId)
-        dropPqTables(libId)
-        dropIvfPqTables(libId)
-        dropSq8Tables(libId)
-        dropNswEdgesOnly(libId)
-        dropBqTables(libId)
-        dropIvfBqCodesOnly(libId)
     }
-    invalidateIndexMeta(libId)
+    // keep exactly this family's tables: an auto library that changed
+    // tier, or a library whose config changed family, must not leave
+    // stale tables behind (auto search dispatches on which tables HOLD
+    // rows for this library)
+    dropIndexTables(libId, keep = config.indexType)
   }
 
   // ---- search (the flagship path, §3.1) ------------------------------
@@ -4529,9 +4436,7 @@ final class VectorEngine(
     * 1..1024.
     */
   private def validateConfig(config: IndexConfig): Unit = {
-    if (!Set("flat", "lsh", "ivf", "auto", "lsh_det", "ivf_det",
-        "pq", "pq_trained", "ivfpq", "ivfpq_trained", "sq8",
-        "ivfsq8", "nsw_det", "hnsw_det", "bq", "ivfbq").contains(config.indexType))
+    if (!Schemas.indexTypes(config.indexType))
       throw new ValidationError(s"unknown index type: ${config.indexType}")
     def bound(v: Int, lo: Int, hi: Int, name: String): Unit =
       if (v < lo || v > hi)
@@ -4549,12 +4454,12 @@ final class VectorEngine(
     bound(config.nswRounds, 1, 16, "nsw_rounds")
   }
 
-  /** PQ needs the dim to split evenly into subspaces; checked wherever a
-    * config meets a concrete dim (validateConfig alone never sees one).
+  /** PQ needs the dim to split evenly into subspaces — every family that
+    * owns `pq_codebooks`; checked wherever a config meets a concrete dim
+    * (validateConfig alone never sees one).
     */
   private def requirePqDivisible(config: IndexConfig, dim: Int): Unit =
-    if (Set("pq", "pq_trained", "ivfpq", "ivfpq_trained")
-          .contains(config.indexType) &&
+    if (Schemas.storeTable("pq_codebooks").families(config.indexType) &&
         dim % config.pqSubspaces != 0)
       throw new ValidationError(
         s"embedding_dim $dim not divisible by pq_subspaces ${config.pqSubspaces}")
@@ -4571,44 +4476,40 @@ final class VectorEngine(
     }
 
   /** Incremental index ADD for new/updated chunks (reference
-    * `chunk.py:69-73`): LSH re-hashes, IVF assigns to existing centroids
-    * (no re-cluster between rebuilds), flat needs nothing.
+    * `chunk.py:69-73`), dispatched once on the library's family — for
+    * `auto`, the family whose tables are built for this library, resolved
+    * before this add invalidates the cached resolution. Each arm appends
+    * to its family's tables against the FROZEN build-time state (LSH
+    * hashes with the stored planes, the celled families assign to the
+    * existing centroids, the quantizers encode against the stored
+    * codebooks/ranges: no re-train between rebuilds); flat needs nothing,
+    * and a family whose index is not built yet adds nothing.
     */
   private def addToIndexes(libId: String, newChunks: DataFrame): Unit = {
+    val (dim, config, _) = getLibrary(libId)
+    val family = effectiveIndexType(libId, config)
     // index-state mutation: the cached family resolution / hnsw walk
     // metadata may be about to change (e.g. the first add after a wipe)
     invalidateIndexMeta(libId)
-    val (_, config, _) = getLibrary(libId)
-    val t = config.indexType
-    // "auto" maintains whichever family rebuildIndex built for THIS
-    // library (a guarded match would mis-route when another library's
-    // tables make store.exists true but this library's partition is
-    // empty), falling through LSH -> IVF -> nothing (auto-resolved flat).
-    if (t == "lsh" || t == "lsh_det" || t == "auto") {
-      if (store.exists("lsh_planes")) {
-        val planesDf = lshPlanes(libId)
-        if (!planesDf.isEmpty) {
-          val add = LshIndex.buildBuckets(newChunks, planesDf, libId)
-          store.appendLibraryPartition("lsh_buckets", libId, add)
-          return
+    // this library's rows of the family's frozen build-time tables, when
+    // it holds rows in every one; all tables' existence is checked before
+    // any per-library emptiness job
+    def built(tables: String*): Option[Seq[DataFrame]] =
+      if (!tables.forall(store.exists)) None
+      else Some(tables.map(libPart(_, libId))).filterNot(_.exists(_.isEmpty))
+    family match {
+      case "lsh" | "lsh_det" =>
+        built("lsh_planes").foreach { case Seq(planes) =>
+          store.appendLibraryPartition("lsh_buckets", libId,
+            LshIndex.buildBuckets(newChunks, planes, libId))
         }
-      }
-      if (t != "auto") return // declared LSH, planes not built yet
-    }
-    if (t == "ivf" || t == "ivf_det" || t == "auto") {
-      if (store.exists("ivf_centroids")) {
-        val cents = ivfCentroids(libId)
-        if (!cents.isEmpty) { // auto-resolved-flat libraries have no centroids
-          val add = IvfIndex.assignToCentroids(newChunks, cents, libId)
-          store.appendLibraryPartition("ivf_postings", libId, add)
+      case "ivf" | "ivf_det" =>
+        built("ivf_centroids").foreach { case Seq(cents) =>
+          store.appendLibraryPartition("ivf_postings", libId,
+            IvfIndex.assignToCentroids(newChunks, cents, libId))
         }
-      }
-      if (t != "auto") return
-    }
-    if (t == "nsw_det" || t == "hnsw_det") {
-      if (store.exists("ivf_centroids")) {
-        val cents = ivfCentroids(libId)
-        if (!cents.isEmpty) {
+      case "nsw_det" | "hnsw_det" =>
+        built("ivf_centroids").foreach { case Seq(cents) =>
           // edge rows first: edgesForNew probes the PRE-BATCH postings
           // (candidates = the existing corpus only — in-batch pairs are
           // excluded by the add-after-build contract), and the edge write
@@ -4617,7 +4518,7 @@ final class VectorEngine(
           val newEdges = graft.index.NswIndex.edgesForNew(newChunks, cents,
             ivfPostings(libId), libId, config.ivfNprobe, config.nswDegree)
           store.appendLibraryPartition("nsw_edges", libId, newEdges)
-          if (t == "hnsw_det") {
+          if (family == "hnsw_det") {
             // per-layer delta links against the frozen hierarchy, same
             // pre-batch discipline (and the same write-before-append
             // ordering as the base edges above)
@@ -4629,232 +4530,80 @@ final class VectorEngine(
           store.appendLibraryPartition("ivf_postings", libId,
             IvfIndex.assignToCentroids(newChunks, cents, libId))
         }
-      }
-      return
-    }
-    if (t == "pq" || t == "pq_trained") {
-      if (store.exists("pq_codebooks")) {
-        val cbDf = pqCodebooks(libId)
-        if (!cbDf.isEmpty) { // encode against EXISTING codebooks (no retrain)
-          val add = PqIndex.encode(newChunks, cbDf, libId)
-          store.appendLibraryPartition("pq_codes", libId, add)
+      case "pq" | "pq_trained" =>
+        built("pq_codebooks").foreach { case Seq(cb) =>
+          store.appendLibraryPartition("pq_codes", libId,
+            PqIndex.encode(newChunks, cb, libId))
         }
-      }
-    }
-    if (t == "ivfpq" || t == "ivfpq_trained") {
-      if (store.exists("ivf_centroids") && store.exists("pq_codebooks")) {
-        val cents = ivfCentroids(libId)
-        val cbDf = pqCodebooks(libId)
-        if (!cents.isEmpty && !cbDf.isEmpty) {
-          // assign + residual-encode against EXISTING cells/codebooks
-          val add = IvfPqIndex.encode(newChunks, cents, cbDf, libId)
-          store.appendLibraryPartition("ivfpq_codes", libId, add)
+      case "ivfpq" | "ivfpq_trained" =>
+        // assign + residual-encode against EXISTING cells/codebooks
+        built("ivf_centroids", "pq_codebooks").foreach { case Seq(cents, cb) =>
+          store.appendLibraryPartition("ivfpq_codes", libId,
+            IvfPqIndex.encode(newChunks, cents, cb, libId))
         }
-      }
-    }
-    if (t == "sq8") {
-      if (store.exists("sq8_params")) {
-        val pDf = sq8Params(libId)
-        if (!pDf.isEmpty) { // encode against FROZEN ranges (clamped)
-          val add = Sq8Index.encode(newChunks, pDf, libId)
-          store.appendLibraryPartition("sq8_codes", libId, add)
+      case "sq8" =>
+        // encode against FROZEN ranges (clamped)
+        built("sq8_params").foreach { case Seq(params) =>
+          store.appendLibraryPartition("sq8_codes", libId,
+            Sq8Index.encode(newChunks, params, libId))
         }
-      }
-    }
-    if (t == "bq") {
-      // stateless encode: nothing frozen to respect, so incremental
-      // maintenance IS the rebuild (bit-identical codes either way)
-      if (store.exists("bq_codes") && !bqCodes(libId).isEmpty) {
-        val (dim, _, _) = getLibrary(libId)
-        store.appendLibraryPartition("bq_codes", libId,
-          BqIndex.encode(newChunks, libId, dim))
-      }
-    }
-    if (t == "ivfbq") {
-      // assign to the FROZEN build-time cells (the family contract),
-      // stateless packing on the new rows
-      if (store.exists("ivf_centroids") && store.exists("ivfbq_codes")) {
-        val cents = ivfCentroids(libId)
-        if (!cents.isEmpty && !ivfbqCodes(libId).isEmpty) {
-          val (dim, _, _) = getLibrary(libId)
+      case "bq" =>
+        // stateless encode: nothing frozen to respect, so incremental
+        // maintenance IS the rebuild (bit-identical codes either way)
+        built("bq_codes").foreach { _ =>
+          store.appendLibraryPartition("bq_codes", libId,
+            BqIndex.encode(newChunks, libId, dim))
+        }
+      case "ivfbq" =>
+        // assign to the FROZEN build-time cells (the family contract),
+        // stateless packing on the new rows
+        built("ivf_centroids", "ivfbq_codes").foreach { case Seq(cents, _) =>
           store.appendLibraryPartition("ivfbq_codes", libId,
             IvfBqIndex.build(newChunks, cents, libId, dim))
         }
-      }
-    }
-    if (t == "ivfsq8") {
-      if (store.exists("ivf_centroids") && store.exists("ivfsq8_params")) {
-        val cents = ivfCentroids(libId)
-        val pDf = ivfsq8Params(libId)
-        if (!cents.isEmpty && !pDf.isEmpty) {
-          // assign to FROZEN cells, clamp-encode against FROZEN ranges
-          val add = IvfSq8Index.encode(newChunks, cents, pDf, libId)
-          store.appendLibraryPartition("ivfsq8_codes", libId, add)
+      case "ivfsq8" =>
+        // assign to FROZEN cells, clamp-encode against FROZEN ranges
+        built("ivf_centroids", "ivfsq8_params").foreach {
+          case Seq(cents, params) =>
+            store.appendLibraryPartition("ivfsq8_codes", libId,
+              IvfSq8Index.encode(newChunks, cents, params, libId))
         }
-      }
+      case _ => () // flat: scored from the chunk table at query time
     }
   }
 
-  /** Index REMOVE: anti-join rewrite of this library's bucket/posting
-    * partition only (U3) — other libraries' index rows are linked forward.
+  /** Index REMOVE: an anti-join rewrite of this library's partition of
+    * each registered row table it holds one in (U3). A row dies with its
+    * chunk, and an edge with EITHER endpoint: a dangling dst would
+    * hydrate nothing (its posting is gone) but would still cost adjacency
+    * reads. Tables the library holds no partition in — other families'
+    * tables — are not touched, and other libraries' index rows are
+    * linked forward.
     */
   private def removeFromIndexes(libId: String, chunkIds: DataFrame): Unit = {
     invalidateIndexMeta(libId) // deletes can empty a table / shift the entry node
-    if (store.exists("lsh_buckets")) {
-      store.writeLibraryPartition("lsh_buckets", libId,
-        lshBuckets(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.lshBuckets.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("ivf_postings")) {
-      store.writeLibraryPartition("ivf_postings", libId,
-        ivfPostings(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.ivfPostings.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("pq_codes")) {
-      store.writeLibraryPartition("pq_codes", libId,
-        pqCodes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.pqCodes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("ivfpq_codes")) {
-      store.writeLibraryPartition("ivfpq_codes", libId,
-        ivfpqCodes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.ivfpqCodes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("sq8_codes")) {
-      store.writeLibraryPartition("sq8_codes", libId,
-        sq8Codes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.sq8Codes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("ivfsq8_codes")) {
-      store.writeLibraryPartition("ivfsq8_codes", libId,
-        ivfsq8Codes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.ivfsq8Codes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("bq_codes")) {
-      store.writeLibraryPartition("bq_codes", libId,
-        bqCodes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.bqCodes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("ivfbq_codes")) {
-      store.writeLibraryPartition("ivfbq_codes", libId,
-        ivfbqCodes(libId)
-          .join(chunkIds, Seq("chunk_id"), "left_anti")
-          .select(Schemas.ivfbqCodes.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("nsw_edges")) {
-      // an edge dies with EITHER endpoint: a dangling dst would hydrate
-      // nothing (its posting is gone) but would still cost adjacency reads
-      store.writeLibraryPartition("nsw_edges", libId,
-        nswEdges(libId)
-          .join(chunkIds.select(col("chunk_id").as("src_id")),
-            Seq("src_id"), "left_anti")
-          .join(chunkIds.select(col("chunk_id").as("dst_id")),
-            Seq("dst_id"), "left_anti")
-          .select(Schemas.nswEdges.fieldNames.toIndexedSeq.map(col): _*))
-    }
-    if (store.exists("hnsw_edges")) {
-      // the same either-endpoint rule per layer
-      store.writeLibraryPartition("hnsw_edges", libId,
-        hnswEdges(libId)
-          .join(chunkIds.select(col("chunk_id").as("src_id")),
-            Seq("src_id"), "left_anti")
-          .join(chunkIds.select(col("chunk_id").as("dst_id")),
-            Seq("dst_id"), "left_anti")
-          .select(Schemas.hnswEdges.fieldNames.toIndexedSeq.map(col): _*))
-    }
+    Schemas.indexTables
+      .filter(t => t.rowIdCols.nonEmpty &&
+        store.hasLibraryPartition(t.name, libId))
+      .foreach { t =>
+        val kept = t.rowIdCols.foldLeft(libPart(t.name, libId)) { (df, c) =>
+          df.join(chunkIds.select(col("chunk_id").as(c)), Seq(c), "left_anti")
+        }
+        store.writeLibraryPartition(t.name, libId,
+          kept.select(t.schema.fieldNames.toIndexedSeq.map(col): _*))
+      }
   }
 
-  /** Remove one library's derived index state: a partition drop per index
-    * table (hardlink-forward, no Spark job, no other library touched).
+  /** Remove this library's partition of every index table that family
+    * `keep` does not own — all of them for the default, flat (library
+    * delete, flat rebuild). A partition drop per table: hardlink-forward,
+    * no Spark job, no other library touched.
     */
-  private def dropIndexTables(libId: String): Unit = {
+  private def dropIndexTables(libId: String, keep: String = "flat"): Unit = {
     invalidateIndexMeta(libId)
-    dropLshTables(libId)
-    dropIvfTables(libId)
-    dropPqTables(libId)
-    dropIvfPqTables(libId)
-    dropSq8Tables(libId)
-    dropIvfSq8Tables(libId)
-    dropNswEdgesOnly(libId)
-    dropBqTables(libId)
-    dropIvfBqCodesOnly(libId)
+    Schemas.indexTables.filterNot(_.families(keep))
+      .foreach(t => store.dropLibraryPartition(t.name, libId))
   }
-
-  private def dropLshTables(libId: String): Unit =
-    Seq("lsh_planes", "lsh_buckets").foreach { t =>
-      if (store.exists(t)) store.dropLibraryPartition(t, libId)
-    }
-
-  private def dropIvfTables(libId: String): Unit =
-    Seq("ivf_centroids", "ivf_postings").foreach { t =>
-      if (store.exists(t)) store.dropLibraryPartition(t, libId)
-    }
-
-  private def dropPqTables(libId: String): Unit =
-    Seq("pq_codebooks", "pq_codes").foreach { t =>
-      if (store.exists(t)) store.dropLibraryPartition(t, libId)
-    }
-
-  private def dropIvfPqTables(libId: String): Unit =
-    if (store.exists("ivfpq_codes"))
-      store.dropLibraryPartition("ivfpq_codes", libId)
-
-  private def dropSq8Tables(libId: String): Unit =
-    Seq("sq8_params", "sq8_codes").foreach { t =>
-      if (store.exists(t)) store.dropLibraryPartition(t, libId)
-    }
-
-  private def dropBqTables(libId: String): Unit =
-    if (store.exists("bq_codes"))
-      store.dropLibraryPartition("bq_codes", libId)
-
-  private def dropIvfBqCodesOnly(libId: String): Unit =
-    if (store.exists("ivfbq_codes"))
-      store.dropLibraryPartition("ivfbq_codes", libId)
-
-  private def dropIvfSq8Tables(libId: String): Unit =
-    Seq("ivfsq8_params", "ivfsq8_codes").foreach { t =>
-      if (store.exists(t)) store.dropLibraryPartition(t, libId)
-    }
-
-  /** ivfpq SHARES ivf_centroids (coarse quantizer) and pq_codebooks
-    * (residual codebooks) with the ivf / pq families — its rebuild must
-    * drop ONLY the parents' scan tables. Do not "simplify" these into
-    * dropIvfTables/dropPqTables: that would also drop the shared
-    * centroid/codebook tables the ivfpq search path reads.
-    */
-  private def dropIvfPostingsOnly(libId: String): Unit =
-    if (store.exists("ivf_postings"))
-      store.dropLibraryPartition("ivf_postings", libId)
-
-  private def dropPqCodesOnly(libId: String): Unit =
-    if (store.exists("pq_codes"))
-      store.dropLibraryPartition("pq_codes", libId)
-
-  /** The graph families SHARE ivf_centroids/ivf_postings with the ivf
-    * family (the dropIvfPostingsOnly note applies) — non-graph rebuilds
-    * drop only the adjacency tables the graphs own: the nsw base edges
-    * AND the hnsw upper layers (a hierarchy without its base is useless).
-    */
-  private def dropNswEdgesOnly(libId: String): Unit = {
-    if (store.exists("nsw_edges"))
-      store.dropLibraryPartition("nsw_edges", libId)
-    dropHnswEdgesOnly(libId)
-  }
-
-  /** Upper layers only — the nsw_det rebuild keeps its freshly written
-    * base graph and sheds a previous hnsw hierarchy with this.
-    */
-  private def dropHnswEdgesOnly(libId: String): Unit =
-    if (store.exists("hnsw_edges"))
-      store.dropLibraryPartition("hnsw_edges", libId)
 }
 
 object VectorEngine {

@@ -962,6 +962,14 @@ class EngineSpec extends AnyFunSuite {
     assert(libCount(storeP, "lsh_planes", Schemas.lshPlanes, libP) == 0)
     assert(libCount(storeP, "ivf_postings", Schemas.ivfPostings, libP) == 0)
     assert(engP.search(libP, Array(1f, 0f, 0f, 0f), k = 3).collect().length == 3)
+    // incremental add at the IVFPQ tier encodes into ivfpq_codes against
+    // the built cells/codebooks, never into the plain-ivf postings
+    engP.upsertChunks(libP, docP, Seq(
+      ChunkIn("fresh", Some(Array(1f, 0f, 0f, 0f)), id = Some("fresh"))))
+    assert(engP.search(libP, Array(1f, 0f, 0f, 0f), k = 3).collect()
+      .head.getString(0) == "fresh")
+    assert(libCount(storeP, "ivfpq_codes", Schemas.ivfpqCodes, libP) == 21)
+    assert(libCount(storeP, "ivf_postings", Schemas.ivfPostings, libP) == 0)
     // incremental add maintains the auto-resolved LSH buckets
     val docL = eng2doc(engL, libL)
     engL.upsertChunks(libL, docL, Seq(
@@ -1778,7 +1786,8 @@ class EngineSpec extends AnyFunSuite {
     val expected2 = live.map { case (id, v) => (id, cos(v, q)) }
       .sortBy { case (id, s) => (-s, id) }.take(5).map(_._1).toSeq
     assert(got2 == expected2)
-    // family swap drops the codes partition (centroids go with dropIvf)
+    // family swap drops the codes partition (a flat rebuild keeps no
+    // index table)
     eng.updateIndexConfig(lib, IndexConfig("flat"))
     assert(store2.read("ivfbq_codes", Schemas.ivfbqCodes).count() == 0)
   }
