@@ -1925,10 +1925,10 @@ final class VectorEngine(
     * Post-filter semantics by default (quirk Q5); `preFilter = true` is the
     * documented deviation that filters the candidate pool first.
     */
-  /** `nswBeam` overrides the nsw_det walk's beam width for THIS query —
-    * the hnswlib/faiss efSearch convention (search-time quality/latency
-    * dial; the IndexConfig value is the default). Ignored by the other
-    * families.
+  /** `nswBeam` overrides the nsw_det/hnsw_det walk's beam width for THIS
+    * query — the hnswlib/faiss efSearch convention (search-time
+    * quality/latency dial; the IndexConfig value is the default). Ignored
+    * by the other families.
     */
   def search(libIdOrAlias: String, query: Array[Float], k: Int,
       metric: String = "cosine", filters: Option[SearchFilters] = None,
@@ -2004,22 +2004,22 @@ final class VectorEngine(
         // full adjacency, so navigability is preserved through the
         // allowed subgraph's links.
         val walkAllowed = if (preFilter) allowedIds else None
-        val walked =
-          if (effectiveType == "hnsw_det")
-            hnswWalkIds(libId, config, qn, k, nswBeam, walkAllowed)
-          else nswWalkIds(libId, config, qn, k, nswBeam, walkAllowed)
-        walked match {
-          case Some(ids) if ids.nonEmpty =>
-            val cands = ivfPostings(libId)
-              .filter(col("chunk_id").isin(ids: _*))
-              .select(col("chunk_id"), col("embedding_norm"))
-            rerank(restrict(cands), query, metric)
-          case _ =>
-            // graph not built yet, OR the walk found nothing (the query's
-            // entry cell was emptied by deletes, or no allowed node is
-            // reachable): full (pre-filtered) flat scan, as the other
-            // families' not-built paths
-            flat()
+        val walked: Seq[String] =
+          if (!store.exists("nsw_edges")) Nil
+          else graphWalk(libId, config,
+            math.max(nswBeam.getOrElse(config.nswBeam), k), Seq(0L -> qn),
+            hnsw = effectiveType == "hnsw_det", walkAllowed).head._2
+        if (walked.nonEmpty) {
+          val cands = ivfPostings(libId)
+            .filter(col("chunk_id").isin(walked: _*))
+            .select(col("chunk_id"), col("embedding_norm"))
+          rerank(restrict(cands), query, metric)
+        } else {
+          // graph not built yet, OR the walk found nothing (the query's
+          // entry cell was emptied by deletes, or no allowed node is
+          // reachable): full (pre-filtered) flat scan, as the other
+          // families' not-built paths
+          flat()
         }
       case "pq" | "pq_trained" =>
         if (isZero) return emptyHits()
@@ -2491,18 +2491,20 @@ final class VectorEngine(
       }
     }
 
+  // the first family, in this order, whose table holds rows for the
+  // library; each isEmpty probe is a Spark job, so it runs only where the
+  // table has a partition of THIS library (a filesystem stat) — another
+  // library's index tables cost a cold `auto` resolution nothing
   private def probeIndexType(libId: String): String =
-    if (store.exists("lsh_planes") && !lshPlanes(libId).isEmpty) "lsh"
-    else if (store.exists("hnsw_edges") && !hnswEdges(libId).isEmpty) "hnsw_det"
-    else if (store.exists("nsw_edges") && !nswEdges(libId).isEmpty) "nsw_det"
-    else if (store.exists("ivfpq_codes") && !ivfpqCodes(libId).isEmpty) "ivfpq"
-    else if (store.exists("ivfsq8_codes") && !ivfsq8Codes(libId).isEmpty) "ivfsq8"
-    else if (store.exists("ivfbq_codes") && !ivfbqCodes(libId).isEmpty) "ivfbq"
-    else if (store.exists("pq_codes") && !pqCodes(libId).isEmpty) "pq"
-    else if (store.exists("sq8_codes") && !sq8Codes(libId).isEmpty) "sq8"
-    else if (store.exists("bq_codes") && !bqCodes(libId).isEmpty) "bq"
-    else if (store.exists("ivf_centroids") && !ivfCentroids(libId).isEmpty) "ivf"
-    else "flat"
+    Seq("lsh_planes" -> "lsh", "hnsw_edges" -> "hnsw_det",
+        "nsw_edges" -> "nsw_det", "ivfpq_codes" -> "ivfpq",
+        "ivfsq8_codes" -> "ivfsq8", "ivfbq_codes" -> "ivfbq",
+        "pq_codes" -> "pq", "sq8_codes" -> "sq8", "bq_codes" -> "bq",
+        "ivf_centroids" -> "ivf")
+      .collectFirst { case (table, family)
+          if store.hasLibraryPartition(table, libId) &&
+            !libPart(table, libId).isEmpty => family }
+      .getOrElse("flat")
 
   /** Batch kNN: N query vectors answered in ONE distributed pass — the
     * Spark-native throughput shape the reference's per-request API cannot
@@ -2771,25 +2773,22 @@ final class VectorEngine(
         // corpus-scale query set never touches the driver. Rows per
         // round are bounded by |queries| x beam x degree; per-round
         // localCheckpoint truncates the iterative lineage (the K-round
-        // loop discipline). Scores/ties mirror the single-query walk
+        // loop discipline). Scores/ties mirror graphWalk
         // (float-normalized pairs, chunk_id asc), so per-query results
-        // land on the same hits. hnsw_det batches enter HERE too: a
-        // query SET walks the shared layer-0 graph from its coarse
-        // cells (the set-friendly entry — one argmax kernel for all
-        // queries); the layered descent is the single-query SERVING
-        // entry, where one near entry point per query is worth one
-        // driver round-trip per layer.
+        // land on the same hits. hnsw_det batches add the distributed
+        // greedy descent (hnswDescentSeeds) to each query's entry-cell
+        // pool, the same hybrid pool graphWalk seeds from.
         val cents = centroidsOf(libId)
         val walkAllowed = if (preFilter) allowedIds else None
         val localWalked: Option[Seq[(Long, Seq[String])]] =
           if (cents.isEmpty || !store.exists("nsw_edges") ||
-              nq > LocalAnnJoinCap) None
+              nq > LocalAnnJoinCap || centroidArr(libId).isEmpty) None
           else {
             // BOUNDED LOCAL FINISH (optimization r16, the CC/pagerank
             // local-finish discipline): an API-sized batch — nq is known
             // exactly (annJoin's duplicate-id agg, or the Seq length
             // searchBatchAnn passes) — runs the
-            // LOCKSTEP cached-cursor walks (walkIdsMany: the per-query
+            // LOCKSTEP cached-cursor walks (graphWalk: the per-query
             // protocol, one combined cursor fetch per round across all
             // beams) instead of materializing the distributed descent +
             // beam rounds as checkpointed stages. Hits are identical by
@@ -2799,13 +2798,13 @@ final class VectorEngine(
             // exclusion mirror the distributed path's `missing` anti-join
             // on qn. A preFilter batch gates the walks as the single-query
             // walk does (one id-pushed semi probe per round over all
-            // beams). Corpus-scale query sets (> LocalAnnJoinCap),
-            // over-cap centroid sets and giant entry cells keep the
-            // distributed frontier-join walk below.
+            // beams). Corpus-scale query sets (> LocalAnnJoinCap) and
+            // centroid sets too large to cache keep the distributed
+            // frontier-join walk below.
             val qRows = qn.collect()
               .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-            walkIdsMany(libId, config, k, qRows, hnsw = effType == "hnsw_det",
-              walkAllowed)
+            Some(graphWalk(libId, config, math.max(config.nswBeam, k), qRows,
+              hnsw = effType == "hnsw_det", walkAllowed))
           }
         if (cents.isEmpty || !store.exists("nsw_edges")) flatScored()
         else if (localWalked.isDefined) {
@@ -2859,9 +2858,9 @@ final class VectorEngine(
                   .dropDuplicates("query_id", "chunk_id")
               }
           // preFilter gates every id the walk may SCORE — the seed pool
-          // and each round's frontier — exactly as the single-query
-          // pre-filtered walk does (beamWalkIds), so batch/single parity
-          // holds in both filter modes
+          // and each round's frontier — exactly as the pre-filtered
+          // graphWalk does, so batch/single parity holds in both filter
+          // modes
           val walkSeeds =
             if (preFilter) restrict(seeds) else seeds
           var visited = topBeam(
@@ -3653,13 +3652,11 @@ final class VectorEngine(
     * vectors (bq, ivfbq, sq8, ivfsq8, ivfpq): `cands` joined to the
     * library's embeddings, with the float-normalized vector as
     * `embedding_norm`; every column of `cands` is kept, and the caller
-    * decides whether `cands` is broadcast. The normalize is the costly
-    * step (l2Normalize re-folds the norm for every element). With
-    * `perCandidate` it runs after the join, so only a single query's
-    * <= cap candidates pay it; a batch's candidate rows repeat chunks
-    * across queries and outnumber the library in a self-join (library x
-    * cap), so batches and streams normalize the library side before the
-    * join.
+    * decides whether `cands` is broadcast. With `perCandidate` the
+    * normalize runs after the join, so only a single query's <= cap
+    * candidates pay it; a batch's candidate rows repeat chunks across
+    * queries and outnumber the library in a self-join (library x cap),
+    * so batches and streams normalize the library side before the join.
     */
   private def candidateNorms(cands: DataFrame, libChunks: DataFrame,
       perCandidate: Boolean): DataFrame = {
@@ -3685,164 +3682,11 @@ final class VectorEngine(
       .select(col("id").as("chunk_id"),
         similarity(metric)(col("embedding"), typedLit(query.toSeq)).as("score"))
 
-  /** Fixed-round NSW beam walk for ONE query. Entry = the beamW best
-    * members of the query's nearest seed cell (driver-side TakeOrdered
-    * over metadata-scale centroid rows, the ivf probe, then one
-    * cell-bounded scan); each round reads ONLY the beam's adjacency rows
-    * + their vectors via pushed `isin` filters — never a corpus scan.
-    * Driver state is k-bounded by construction: the beam is beamW ids,
-    * the visited map at most beamW + rounds * (frontier expansion)
-    * entries. Scores are the stored float-normalized vectors x the
-    * float-normalized query (the same double fold the oracle's
-    * list_dot_product computes) with -0.0 normalized to 0.0 so the
-    * driver-side beam sort matches SQL/Spark ordering; ties break by
-    * chunk_id asc. Returns None when the cells/graph are not built
-    * (callers fall back to the flat scan), Some(visited ids) otherwise.
-    */
-  private def nswWalkIds(libId: String, config: IndexConfig,
-      qn: Array[Float], k: Int,
-      beamOverride: Option[Int] = None,
-      allowed: Option[DataFrame] = None): Option[Seq[String]] = {
-    val topCell = probeCells(libId, qn, 1).map(_._1)
-    if (topCell.isEmpty || !store.exists("nsw_edges")) None
-    else {
-      val beamW = math.max(beamOverride.getOrElse(config.nswBeam), k)
-      val seedTop = cellMembers(libId, topCell.head) match {
-        case Some(ids) => seedTopLocal(libId, qn, beamW, ids, allowed)
-        case None => seedTopFrame(
-          ivfPostings(libId).filter(col("centroid_id") === topCell.head)
-            .select(col("chunk_id"), col("embedding_norm")),
-          qn, beamW, allowed)
-      }
-      Some(beamWalkDriver(libId, config, qn, beamW, seedTop, allowed))
-    }
-  }
-
-  /** The fixed-round beam walk over the layer-0 adjacency, shared by the
-    * nsw entry-cell walk and the hnsw descent-seeded walk: vis0 = the
-    * top-beam of the (possibly pre-filtered) seed POOL, then each round
-    * scores the beam's neighbors and re-cuts by (s desc, id asc).
-    *
-    * `allowed` is the PRE-FILTER deviation for the graph family: every
-    * id the walk may SCORE — the seed pool and each round's frontier —
-    * is semi-joined against the allowed set BEFORE the beam cut, so a
-    * selective filter cannot starve the beam with nodes the query can
-    * never return (the filtered-graph-ANN fix; the lshdet-prefiltered
-    * precedent restricted bucket candidates the same way). The walk
-    * then navigates WITHIN the allowed subgraph's adjacency (edges are
-    * read unrestricted — an allowed node's neighbors are discovered
-    * through whatever links exist, only their SCORING is gated).
+  /** A score with -0.0 read as 0.0, so driver-side (s desc, id asc)
+    * sorts match SQL/Spark ordering, where the two compare equal.
     */
   private def norm0(s: Double): Double = if (s == 0.0) 0.0 else s
 
-  /** Seed scoring over a DRIVER-known pool id list (the cached-cell fast
-    * path): allowed gate first (exactly where the old plan's semi-join
-    * sat — before the beam cut), then dotDriver scores, then the
-    * (s desc, chunk_id asc) top-beamW cut. Ids without a live posting row
-    * drop out, as the posts equi-join dropped them.
-    */
-  private def seedTopLocal(libId: String, qn: Array[Float], beamW: Int,
-      poolIds: Seq[String],
-      allowed: Option[DataFrame]): IndexedSeq[(String, Double)] = {
-    val ids = poolIds.distinct
-    val gated = allowed match {
-      case Some(a) => val ok = allowedSubset(ids, a); ids.filter(ok)
-      case None => ids
-    }
-    val vs = vecsOf(libId, gated)
-    gated.iterator
-      .flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qn)))))
-      .toIndexedSeq
-      .sortBy { case (id, s) => (-s, id) }
-      .take(beamW)
-  }
-
-  /** Seed scoring over a DISTRIBUTED (chunk_id, embedding_norm) pool —
-    * the over-cap path (a giant cell is never collected): the original
-    * TakeOrdered, returning the same (id, score) pairs.
-    */
-  private def seedTopFrame(seedPool: DataFrame, qn: Array[Float], beamW: Int,
-      allowed: Option[DataFrame]): IndexedSeq[(String, Double)] = {
-    val gated = allowed.fold(seedPool)(a =>
-      seedPool.join(a, Seq("chunk_id"), "left_semi"))
-    gated
-      .select(col("chunk_id"),
-        dotProduct(col("embedding_norm"), typedLit(qn.toSeq)).as("s"))
-      .orderBy(col("s").desc, col("chunk_id").asc)
-      .limit(beamW)
-      .collect()
-      .map(r => (r.getString(0), norm0(r.getDouble(1))))
-      .toIndexedSeq
-  }
-
-  /** The fixed-round beam walk over the layer-0 adjacency, shared by the
-    * nsw entry-cell walk and the hnsw descent-seeded walk — the SAME
-    * round protocol as always (vis0 = the seed pool's top-beam, each
-    * round scores the beam's neighbors and re-cuts by (s desc, id asc)),
-    * now served through the bounded cursor caches: a round's adjacency
-    * lists and frontier vectors come from the per-library cache, reading
-    * only uncached ids (one pushed-isin job each, zero when warm), and
-    * scores come from dotDriver — bit-identical to the old per-round
-    * collect of VecDot outputs.
-    *
-    * `allowed` is the PRE-FILTER deviation for the graph family: every
-    * id the walk may SCORE — the seed pool and each round's frontier —
-    * is gated against the allowed set BEFORE the beam cut (one id-pushed
-    * semi probe per round), so a selective filter cannot starve the beam
-    * with nodes the query can never return. The walk still navigates
-    * through whatever links exist; only SCORING is gated.
-    */
-  private def beamWalkDriver(libId: String, config: IndexConfig,
-      qn: Array[Float], beamW: Int, seedTop: IndexedSeq[(String, Double)],
-      allowed: Option[DataFrame]): Seq[String] = {
-    val visited = scala.collection.mutable.HashMap.empty[String, Double]
-    seedTop.foreach { case (id, s) => visited(id) = s }
-    var beam: Seq[String] = seedTop.map(_._1)
-    var round = 0
-    while (round < config.nswRounds && beam.nonEmpty) {
-      val adj = adjOf(libId, beam)
-      val frontier = beam.iterator.flatMap(adj(_)).toSet.toIndexedSeq
-      val gated = allowed match {
-        case Some(a) => val ok = allowedSubset(frontier, a); frontier.filter(ok)
-        case None => frontier
-      }
-      val vs = vecsOf(libId, gated)
-      // re-scored already-visited ids recompute identical values, so
-      // the map update is idempotent (the oracle's UNION dedup)
-      gated.foreach { id =>
-        vs(id).foreach(v => visited(id) = norm0(dotDriver(v, qn)))
-      }
-      beam = visited.toSeq
-        .sortBy { case (id, s) => (-s, id) }
-        .take(beamW).map(_._1)
-      round += 1
-    }
-    visited.keys.toSeq
-  }
-
-  /** The HNSW walk: greedy single-node descent from the global max-level
-    * node through the upper layers, then [[beamWalkIds]] on layer 0
-    * seeded from the query's entry CELL ∪ the descent result's
-    * neighborhood — the HYBRID seed pool. The descent contributes a
-    * point provably near the query when the hierarchy is navigable (the
-    * HNSW promise — this is what lifts recall at equal beam on hard
-    * corpora); the cell pool bounds the downside when the sparse top
-    * layers strand the greedy hop in the wrong region (the classic
-    * small-corpus HNSW pathology — measured here: descent-only seeding
-    * scored 0.49 vs the cell walk's 0.99 on a planted-cluster corpus
-    * whose 8-node layer 1 is disconnected), so the layered walk never
-    * seeds WORSE than the flat nsw walk.
-    *
-    * Determinism: entry = top-1 by (level desc, chunk_id asc) over the
-    * live postings — one column-pruned TakeOrdered (ids + stored norms
-    * only; a serving deployment caches it, since it changes only with
-    * churn). Each upper-layer round scores cur's layer-l neighbors and
-    * moves to the best of {cur} ∪ neighbors by (s desc, id asc); a
-    * round that does not move is a fixed point (the same neighbor set
-    * re-scores identically), so stopping early is result-identical to
-    * the oracle's fixed-round unroll. Per-query driver state: one
-    * (id, score) pair.
-    */
   /** The global max-level entry node (id + stored normalized vector),
     * memoized per library: top-1 by (md5 level desc, chunk_id asc) over
     * the live postings — one column-pruned TakeOrdered on first use,
@@ -4129,204 +3973,174 @@ final class VectorEngine(
       .collect().map(_.getString(0)).toSet
   }
 
-  private def hnswWalkIds(libId: String, config: IndexConfig,
-      qn: Array[Float], k: Int,
-      beamOverride: Option[Int] = None,
-      allowed: Option[DataFrame] = None): Option[Seq[String]] = {
-    if (!store.exists("nsw_edges") || !store.exists("ivf_postings"))
-      return None
-    val posts = ivfPostings(libId)
-    // entry node + layer list are query-independent and change only with
-    // corpus churn — memoized per library (ADVICE r14: a serving search
-    // pays only the descent rounds), invalidated with the index caches.
-    // The cached (id, stored norm) pair lets the initial greedy score be
-    // the same sequential double fold VecDot computes, zero Spark jobs.
-    val entryOpt = hnswEntryNode(libId, posts)
-    if (entryOpt.isEmpty) return None
-    val (entId, entNorm) = entryOpt.get
-    var cur = entId
-    var curS = norm0(dotDriver(entNorm, qn))
-    // layers actually present for this library (one thin-column agg over
-    // the upper-layer table; empty when the corpus is too small for a
-    // hierarchy — then the walk is just the seeded base walk). Looping
-    // only present layers equals looping MaxLevel..1: a layer where cur
-    // is not a member has no (layer, src=cur) rows and cannot move it.
-    // Each greedy round reads ONE (layer, src=cur) cursor — served from
-    // the layerAdj/vecs caches (r16): zero Spark jobs once warm, the
-    // identical (s desc, id asc) move rule via dotDriver.
-    val layers: Seq[Int] = hnswLayerList(libId)
-    for (l <- layers) {
-      var round = 0
-      var moved = true
-      while (round < config.nswRounds && moved) {
-        val nbrIds = layerAdjOf(libId, l, Seq(cur))(cur)
-        val vs = vecsOf(libId, nbrIds)
-        val nbrs = nbrIds.iterator
-          .flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qn)))))
-          .toSeq
-        val (bestId, bestS) = ((cur, curS) +: nbrs)
-          .minBy { case (id, s) => (-s, id) }
-        moved = bestId != cur
-        cur = bestId; curS = bestS
-        round += 1
-      }
-    }
-    // hybrid layer-0 seed pool: the query's entry cell (the nsw walk's
-    // whole pool) ∪ the descent result ∪ its base-graph neighborhood;
-    // the beam cut keeps the best of both seed families. Served from the
-    // cellPosts/adj caches when the cell fits the cap; a giant cell keeps
-    // the distributed pool (never collected).
-    val topCell = probeCells(libId, qn, 1).map(_._1)
-    val beamW = math.max(beamOverride.getOrElse(config.nswBeam), k)
-    val descentIds: IndexedSeq[String] = cur +: adjOf(libId, Seq(cur))(cur)
-    val seedTop =
-      if (topCell.isEmpty) seedTopLocal(libId, qn, beamW, descentIds, allowed)
-      else cellMembers(libId, topCell.head) match {
-        case Some(cellIds) =>
-          seedTopLocal(libId, qn, beamW, cellIds ++ descentIds, allowed)
-        case None =>
-          import spark.implicits._
-          seedTopFrame(
-            posts.filter(col("centroid_id") === topCell.head)
-              .select(col("chunk_id"), col("embedding_norm"))
-              .unionAll(posts
-                .join(descentIds.distinct.toDF("chunk_id"),
-                  Seq("chunk_id"), "left_semi")
-                .select(col("chunk_id"), col("embedding_norm")))
-              .dropDuplicates("chunk_id"),
-            qn, beamW, allowed)
-      }
-    Some(beamWalkDriver(libId, config, qn, beamW, seedTop, allowed))
-  }
-
-  /** LOCKSTEP per-query walks for an API-sized annJoin batch
-    * (optimization r16): runs the EXACT per-query walk protocol —
-    * [[hnswWalkIds]]/[[nswWalkIds]] semantics per query, so the batch
-    * lands on the single-query hits the oracle replays — but batches
-    * every round's cursor reads ACROSS queries: one combined
-    * adjacency+vector fetch serves all beams at the same round, and the
-    * greedy descents advance in lockstep one layer at a time (VERDICT
-    * r15 #6: same rounds, fewer jobs). `allowed` is the pre-filter gate
-    * of [[beamWalkDriver]], applied with one [[allowedSubset]] probe over
-    * all queries' seed pools and one over each round's combined
-    * frontier: membership is per id, so every query gates exactly the
-    * ids its own walk would. Returns None when the batch must stay
-    * distributed: uncacheable centroids or a cell past the cache cap
-    * (never collected).
+  /** THE graph walk of nsw_det / hnsw_det, for a batch of
+    * float-normalized queries: `search` calls it with one query, annJoin
+    * with an API-sized batch. Per query the protocol is fixed:
+    *   - hnsw only, greedy descent: from the global max-level entry node
+    *     through the present upper layers, each round moves the cursor to
+    *     the best of {cur} ∪ its layer-l neighbours by (s desc, id asc);
+    *     a round that does not move is a fixed point, so stopping early
+    *     equals the oracle's fixed-round unroll;
+    *   - seed pool: the members of the query's entry cell (the top-1
+    *     probe) — for hnsw ∪ the descent node and its layer-0 neighbours.
+    *     The descent brings a point near the query when the hierarchy is
+    *     navigable; the cell bounds the downside when sparse top layers
+    *     strand the greedy hop (descent-only seeding scored 0.49 vs the
+    *     cell walk's 0.99 on a planted-cluster corpus whose 8-node layer 1
+    *     is disconnected), so the layered walk never seeds worse than nsw;
+    *   - vis0 = the pool's top-beamW; each of nswRounds rounds scores the
+    *     beam's layer-0 neighbours and re-cuts by (s desc, id asc).
+    * Scores are the stored float-normalized vectors x the query, by
+    * dotDriver (bit-identical to VecDot) and [[norm0]].
+    *
+    * The queries advance in LOCKSTEP: a round's adjacency lists and
+    * vectors for all beams (and a layer's for all descents) are one read
+    * through the bounded cursor caches — zero Spark jobs once warm.
+    * `allowed` is the PRE-FILTER gate: every id a walk may SCORE (pool
+    * and frontier) is checked before the beam cut, one [[allowedSubset]]
+    * probe per step over all queries' ids, so a selective filter cannot
+    * starve the beam; traversal still follows every edge. A query whose
+    * entry cell is past WalkCacheCap is seeded by [[giantCellSeeds]].
+    * Returns each query's visited ids — none when the library has no
+    * centroids or no hnsw entry node (callers fall back to flat).
     */
-  private def walkIdsMany(libId: String, config: IndexConfig, k: Int,
+  private def graphWalk(libId: String, config: IndexConfig, beamW: Int,
       queries: Seq[(Long, Array[Float])], hnsw: Boolean,
-      allowed: Option[DataFrame]): Option[Seq[(Long, Seq[String])]] = {
-    if (queries.isEmpty) return Some(Nil)
-    val beamW = math.max(config.nswBeam, k)
-    val cents = centroidArr(libId) match {
-      case Some(cs) => cs
-      case None => return None // over-cap centroid set: keep distributed
-    }
-    if (cents.isEmpty) return Some(queries.map { case (qid, _) => (qid, Nil) })
+      allowed: Option[DataFrame]): Seq[(Long, Seq[String])] = {
+    val unwalked = queries.map { case (qid, _) => (qid, Seq.empty[String]) }
+    // the centroid set is query-independent: every query has an entry
+    // cell or none does
+    val cellOf: Map[Long, Int] = queries.flatMap { case (qid, qn) =>
+      probeCells(libId, qn, 1).headOption.map(c => qid -> c._1) }.toMap
+    if (cellOf.isEmpty) return unwalked
+    val qvec = queries.toMap
+    def scored(qid: Long, ids: Iterator[String],
+        vs: Map[String, Option[Array[Float]]]): Iterator[(String, Double)] =
+      ids.flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qvec(qid))))))
+    def topBeam(xs: Iterator[(String, Double)]): IndexedSeq[(String, Double)] =
+      xs.toIndexedSeq.sortBy { case (id, s) => (-s, id) }.take(beamW)
     // the ids of `ids` the walk may score (all of them without a filter)
     def gate(ids: Seq[String]): String => Boolean =
       allowed.fold[String => Boolean](_ => true)(a => allowedSubset(ids, a))
-    // greedy descents in lockstep (hnsw only): all live cursors advance
-    // one round per fetch; per-query fixed points stop early exactly as
-    // the single-query `moved` rule does
     var descent: Map[Long, String] = Map.empty
     if (hnsw) {
-      val entryOpt = hnswEntryNode(libId, ivfPostings(libId))
-      if (entryOpt.isEmpty)
-        return Some(queries.map { case (qid, _) => (qid, Nil) })
-      val (entId, entNorm) = entryOpt.get
+      val (entId, entNorm) = hnswEntryNode(libId, ivfPostings(libId)) match {
+        case Some(e) => e
+        case None => return unwalked
+      }
       var cur: Map[Long, (String, Double)] = queries.map { case (qid, qn) =>
         qid -> (entId, norm0(dotDriver(entNorm, qn))) }.toMap
-      val qvec = queries.toMap
       for (l <- hnswLayerList(libId)) {
         var active: Set[Long] = qvec.keySet
         var round = 0
         while (round < config.nswRounds && active.nonEmpty) {
           val adj = layerAdjOf(libId, l,
             active.iterator.map(cur(_)._1).toSeq.distinct)
-          val nbrIds = active.iterator.flatMap(q => adj(cur(q)._1)).toSeq.distinct
-          val vs = vecsOf(libId, nbrIds)
-          var nextActive = Set.empty[Long]
-          active.foreach { qid =>
+          val vs = vecsOf(libId,
+            active.iterator.flatMap(q => adj(cur(q)._1)).toSeq.distinct)
+          active = active.filter { qid =>
             val (c, cs) = cur(qid)
-            val qn = qvec(qid)
-            val nbrs = adj(c).iterator
-              .flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qn)))))
-              .toSeq
-            val (bestId, bestS) = ((c, cs) +: nbrs)
+            val best = (Iterator((c, cs)) ++ scored(qid, adj(c).iterator, vs))
               .minBy { case (id, s) => (-s, id) }
-            if (bestId != c) { cur += qid -> (bestId, bestS); nextActive += qid }
+            cur += qid -> best
+            best._1 != c
           }
-          active = nextActive
           round += 1
         }
       }
       descent = cur.map { case (qid, (id, _)) => qid -> id }
     }
-    // per-query hybrid seed pools: entry cell (∪ descent neighborhood for
-    // hnsw), every distinct cell fetched once through the bounded cache
-    val cellOf: Map[Long, Int] = queries.map { case (qid, qn) =>
-      qid -> probeCells(libId, qn, 1).head._1 }.toMap
-    val cellIds: Map[Int, IndexedSeq[String]] =
-      cellOf.values.toSeq.distinct.map { c =>
-        cellMembers(libId, c) match {
-          case Some(ids) => c -> ids
-          case None => return None // giant cell: keep distributed
-        }
-      }.toMap
-    val descentAdj: Map[String, IndexedSeq[String]] =
-      if (hnsw) adjOf(libId, descent.values.toSeq.distinct) else Map.empty
-    // lockstep beam walks: per-query visited/beam state, one combined
-    // frontier fetch per round (the adjacency lists are per-src, so
-    // batching the read never mixes beams)
-    val visited = scala.collection.mutable.Map.empty[Long,
-      scala.collection.mutable.HashMap[String, Double]]
-    val pools: Map[Long, IndexedSeq[String]] = queries.map { case (qid, _) =>
-      qid -> (cellIds(cellOf(qid)) ++
-        (if (hnsw) descent(qid) +: descentAdj(descent(qid))
-         else IndexedSeq.empty)).distinct
-    }.toMap
+    val descentAdj = adjOf(libId, descent.values.toSeq.distinct)
+    // the descent node and its layer-0 neighbours (nothing for nsw)
+    def descentIds(qid: Long): IndexedSeq[String] =
+      descent.get(qid).fold(IndexedSeq.empty[String])(d => d +: descentAdj(d))
+    // each distinct entry cell read once through the bounded cache; None
+    // marks a giant cell
+    val cells: Map[Int, Option[IndexedSeq[String]]] =
+      cellOf.values.toSeq.distinct.map(c => c -> cellMembers(libId, c)).toMap
+    val (cached, giant) =
+      queries.map(_._1).partition(qid => cells(cellOf(qid)).isDefined)
+    val pools: Map[Long, IndexedSeq[String]] = cached.map { qid =>
+      qid -> (cells(cellOf(qid)).get ++ descentIds(qid)).distinct }.toMap
     val poolOk = gate(pools.valuesIterator.flatten.toSeq.distinct)
-    var beams: Map[Long, Seq[String]] = queries.map { case (qid, qn) =>
+    val seeds = cached.map { qid =>
       val pool = pools(qid).filter(poolOk)
-      val vs = vecsOf(libId, pool)
-      val top = pool.iterator
-        .flatMap(id => vs(id).map(v => (id, norm0(dotDriver(v, qn)))))
-        .toIndexedSeq
-        .sortBy { case (id, s) => (-s, id) }
-        .take(beamW)
-      val vm = scala.collection.mutable.HashMap.empty[String, Double]
-      top.foreach { case (id, s) => vm(id) = s }
-      visited(qid) = vm
-      qid -> top.map(_._1)
-    }.toMap
-    val qvecAll = queries.toMap
+      qid -> topBeam(scored(qid, pool.iterator, vecsOf(libId, pool)))
+    }.toMap ++ giantCellSeeds(libId, beamW,
+      giant.map(qid => (qid, qvec(qid), cellOf(qid), descentIds(qid))), allowed)
+    // lockstep beam walks: per-query visited/beam state, one combined
+    // frontier read per round (adjacency lists are per-src, so batching
+    // the read never mixes beams); re-scored ids recompute identical
+    // values, so the visited update is idempotent (the oracle's UNION)
+    val visited = seeds.map { case (qid, top) =>
+      qid -> scala.collection.mutable.HashMap(top: _*) }
+    var beams: Map[Long, Seq[String]] = seeds.map { case (qid, top) =>
+      qid -> top.map(_._1) }
     var round = 0
     while (round < config.nswRounds && beams.valuesIterator.exists(_.nonEmpty)) {
-      val adj = adjOf(libId,
-        beams.valuesIterator.flatten.toSeq.distinct)
-      val frontierAll = beams.valuesIterator.flatten.flatMap(adj(_)).toSeq.distinct
-      val ok = gate(frontierAll)
-      val vs = vecsOf(libId, frontierAll.filter(ok))
+      val adj = adjOf(libId, beams.valuesIterator.flatten.toSeq.distinct)
+      val frontier = beams.valuesIterator.flatten.flatMap(adj(_)).toSeq.distinct
+      val ok = gate(frontier)
+      val vs = vecsOf(libId, frontier.filter(ok))
       beams = beams.map { case (qid, beam) =>
         if (beam.isEmpty) qid -> beam
         else {
-          val qn = qvecAll(qid)
           val vm = visited(qid)
-          beam.iterator.flatMap(adj(_)).toSeq.distinct.filter(ok).foreach { id =>
-            vs(id).foreach(v => vm(id) = norm0(dotDriver(v, qn)))
-          }
-          qid -> vm.toSeq.sortBy { case (id, s) => (-s, id) }
-            .take(beamW).map(_._1)
+          vm ++= scored(qid, beam.iterator.flatMap(adj(_)).distinct.filter(ok), vs)
+          qid -> topBeam(vm.iterator).map(_._1)
         }
       }
       round += 1
     }
-    Some(queries.map { case (qid, _) => qid -> visited(qid).keys.toSeq })
+    queries.map { case (qid, _) => qid -> visited(qid).keys.toSeq }
   }
 
-  /** The distributed twin of [[hnswWalkIds]]'s descent for annJoin: every
+  /** Seeds for the queries whose entry cell is past WalkCacheCap (a giant
+    * cell is never collected), in ONE Spark job per call: one postings
+    * scan filtered to the giant cells and the descent ids. A query's pool
+    * is its cell's postings plus its hnsw descent ids (none for nsw),
+    * routed to it by map literals, gated by `allowed` as the cached pools
+    * are and scored by dotProduct; each partition keeps every query's
+    * top-beamW by (s desc, chunk_id asc) and the driver merges them — the
+    * TakeOrdered cut, per query. Input rows are (query_id, query, cell,
+    * descent ids).
+    */
+  private def giantCellSeeds(libId: String, beamW: Int,
+      qs: Seq[(Long, Array[Float], Int, Seq[String])],
+      allowed: Option[DataFrame]): Map[Long, IndexedSeq[(String, Double)]] = {
+    if (qs.isEmpty) return Map.empty
+    import spark.implicits._
+    val byCell = qs.groupMap(_._3)(_._1)
+    val byId = qs.flatMap { case (qid, _, _, ids) => ids.map(_ -> qid) }
+      .groupMap(_._1)(_._2)
+    val (cellQs, idQs, none) =
+      (typedLit(byCell), typedLit(byId), typedLit(Seq.empty[Long]))
+    val qvec = typedLit(qs.map { case (qid, qn, _, _) => qid -> qn.toSeq }.toMap)
+    val pool = ivfPostings(libId)
+      .filter(col("centroid_id").isin(byCell.keys.toSeq: _*) ||
+        col("chunk_id").isin(byId.keys.toSeq: _*))
+      .select(col("chunk_id"), col("embedding_norm"), explode(array_union(
+        coalesce(cellQs(col("centroid_id")), none),
+        coalesce(idQs(col("chunk_id")), none))).as("query_id"))
+    val cut = graft.functions.TopKAggregator.topKStr(beamW)
+    val tops = allowed.fold(pool)(a => pool.join(a, Seq("chunk_id"), "left_semi"))
+      .select(col("query_id"), col("chunk_id"),
+        dotProduct(col("embedding_norm"), qvec(col("query_id"))).as("s"))
+      .as[(Long, String, Double)]
+      .mapPartitions { rows =>
+        val bufs = scala.collection.mutable.HashMap.empty[Long, Seq[(Double, String)]]
+        rows.foreach(r => bufs(r._1) = cut.reduce(bufs.getOrElse(r._1, cut.zero), r))
+        bufs.iterator
+      }
+      .collect()
+      .groupMapReduce(_._1)(_._2)(cut.merge)
+    qs.map { case (qid, _, _, _) =>
+      qid -> tops.getOrElse(qid, Nil).map { case (s, id) => (id, norm0(s)) }
+        .toIndexedSeq
+    }.toMap
+  }
+
+  /** The distributed twin of [[graphWalk]]'s descent for annJoin: every
     * query's greedy cursor lives in ONE (query_id, chunk_id, s) frame —
     * the global max-level entry node is query-independent (one driver
     * TakeOrdered), each (layer, round) step is one adjacency join + a

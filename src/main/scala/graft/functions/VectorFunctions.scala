@@ -72,11 +72,17 @@ object VectorFunctions {
 
   /** L2-normalize; null for a zero vector (reference `utils.py:32-37` —
     * null propagation is what drops zero vectors from LSH/IVF indexes).
+    * The squared norm is folded ONCE per vector and bound by the finish
+    * lambda: the same sequential double sum of x*x that `l2Norm`'s VecDot
+    * computes, so every element divides by the identical sqrt.
     */
   def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, lit(null).cast("array<double>"))
-      .otherwise(transform(vecAsDouble(a), x => x / n))
+    val v = vecAsDouble(a)
+    aggregate(v, lit(0.0), (acc, x) => acc + x * x, acc => {
+      val n = sqrt(acc)
+      when(n === 0.0, lit(null).cast("array<double>"))
+        .otherwise(transform(v, x => x / n))
+    })
   }
 
   /** Metric dispatch (reference `utils.py:46-57`): cosine | euclidean |

@@ -2990,7 +2990,7 @@ object EngineQueries {
 
   /** The fixed-round beam walk for query `qid`, CTE names suffixed by
     * `tag` so the batch oracle can run three walks in one WITH. Mirrors
-    * VectorEngine.nswWalkIds: entry = top-beam of the query's nearest
+    * VectorEngine.graphWalk: entry = top-beam of the query's nearest
     * cell, each round scores the beam's neighbors (UNION dedup — scores
     * recompute identically) and re-cuts the beam by (s desc, id asc).
     */
@@ -3003,8 +3003,8 @@ object EngineQueries {
 
   /** The walk over ANY one-row (v DOUBLE[]) float-normalized query CTE
     * (the searchText entries feed the embedded query through here).
-    * `candOf` is the PRE-FILTER hook (VectorEngine.beamWalkIds's
-    * `allowed` semi-join): every id the walk may SCORE — the seed pool
+    * `candOf` is the PRE-FILTER hook (VectorEngine.graphWalk's
+    * `allowed` gate): every id the walk may SCORE — the seed pool
     * and each round's frontier — passes the predicate before the beam
     * cut, so the prefiltered entry replays the SAME template with the
     * allowed-set membership plugged in.
@@ -3253,7 +3253,7 @@ object EngineQueries {
     * (s desc, id asc). Unrolling ALL six layers equals the engine's
     * loop over present layers: a layer where cur is not a member has no
     * (layer, src=cur) rows and cannot move it, and a round that does
-    * not move is a fixed point (mirrors VectorEngine.hnswWalkIds).
+    * not move is a fixed point (mirrors VectorEngine.graphWalk).
     * Yields `qn$tag` and the final 1-row `cur1_${rounds}$tag`.
     */
   private def hnswDescentCtes(tag: String, qnSelect: String,
@@ -3290,7 +3290,7 @@ object EngineQueries {
     * the query's entry CELL (the nsw walk's whole pool) ∪ {descent
     * result} ∪ its layer-0 neighborhood — then the SHARED expansion
     * rounds. `descTag` lets several beam widths reuse ONE descent (it
-    * is beam-independent). Mirrors VectorEngine.hnswWalkIds's seed pool
+    * is beam-independent). Mirrors VectorEngine.graphWalk's hnsw pool
     * (the hybrid is what keeps the layered walk from seeding WORSE than
     * the flat walk when a sparse top layer strands the greedy hop).
     */
@@ -4256,7 +4256,7 @@ object EngineQueries {
     // nprobe-cell candidate blocking, top-M + reverse edges, fixed-round
     // beam walk from the query's nearest cell, exact cosine rerank vs
     // the RAW query. Mirrors NswIndex.buildEdges + VectorEngine
-    // .nswWalkIds step for step.
+    // .graphWalk step for step.
     "x_engine_nsw_det" ->
       s"""WITH ${nswCorpusCtesWith(_ => "TRUE", _ => "TRUE")},
          |${nswWalkCtesFor("", 0)}
@@ -4301,7 +4301,7 @@ object EngineQueries {
     // levels, per-layer cell-blocked edge builds, greedy descent from the
     // max-level node (6 layers x rounds unrolled), hybrid-seeded base
     // walk, exact cosine rerank. Mirrors HnswIndex.buildLayers +
-    // VectorEngine.hnswWalkIds step for step.
+    // VectorEngine.graphWalk step for step.
     "x_engine_hnsw_det" ->
       s"""WITH ${nswCorpusCtesWith(_ => "TRUE", _ => "TRUE")},
          |${hnswLayerCtesWith(_ => "TRUE", _ => "TRUE")},

@@ -797,7 +797,7 @@ class EngineSpec extends AnyFunSuite {
         IndexConfig("bq"),
         IndexConfig("ivfsq8", ivfNumCentroids = 4, ivfNprobe = 2),
         // the graph families' pre-filtered batches run the gated
-        // lockstep walk (walkIdsMany), pinned against the gated
+        // lockstep walk (graphWalk), pinned against the gated
         // single-query walk below
         IndexConfig("nsw_det", ivfNumCentroids = 4, ivfNprobe = 2,
           nswDegree = 4, nswBeam = 6, nswRounds = 2),
@@ -1499,38 +1499,43 @@ class EngineSpec extends AnyFunSuite {
 
   test("auto dispatch: family resolution is cached across searches (probes run once)") {
     import org.apache.spark.sql.GraftJobBridge
-    val dir = graft.TempDirs.scratch("graft-engine-autocache").toString
-    val eng0 = new VectorEngine(spark, dir, fixedClock, autoIvfThreshold = 4)
-    // a graph library FIRST, so nsw/hnsw edge tables exist in the store
-    // and the auto probes below must pay real per-library isEmpty jobs
-    // to rule those families out
-    val gLib = eng0.createLibrary("g", 4, IndexConfig("hnsw_det",
-      ivfNumCentroids = 2, ivfNprobe = 1, nswDegree = 2, nswBeam = 4,
-      nswRounds = 2))
-    val gDoc = eng0.createDocument(gLib)
-    eng0.upsertChunks(gLib, gDoc, (0 until 8).map { i =>
-      ChunkIn(text = s"g $i",
-        embedding = Some(Array.tabulate(4)(j => if (j == i % 4) 1f else 0.1f)),
-        position = i, id = Some(f"g$i%03d"))
-    })
-    eng0.rebuildIndex(gLib)
-    val lib = eng0.createLibrary("auto-c", 4, IndexConfig("auto",
-      ivfNumCentroids = 2, ivfNprobe = 1))
-    val doc = eng0.createDocument(lib)
-    eng0.upsertChunks(lib, doc, (0 until 12).map { i =>
-      ChunkIn(text = s"a $i",
-        embedding = Some(Array.tabulate(4)(j => if (j == i % 4) 1f else 0.2f)),
-        position = i, id = Some(f"a$i%03d"))
-    })
-    eng0.rebuildIndex(lib) // 12 >= threshold 4 -> the ivf tier
-    // fresh engine over the same store = cold caches, the serving shape
-    val eng = new VectorEngine(spark, dir, fixedClock, autoIvfThreshold = 4)
+    // an `auto` library at the ivf tier, optionally beside a built
+    // hnsw_det library whose nsw/hnsw edge tables then exist in the store
+    def autoStore(withGraph: Boolean): (String, String, String) = {
+      val dir = graft.TempDirs.scratch("graft-engine-autocache").toString
+      val eng0 = new VectorEngine(spark, dir, fixedClock, autoIvfThreshold = 4)
+      if (withGraph) {
+        val gLib = eng0.createLibrary("g", 4, IndexConfig("hnsw_det",
+          ivfNumCentroids = 2, ivfNprobe = 1, nswDegree = 2, nswBeam = 4,
+          nswRounds = 2))
+        val gDoc = eng0.createDocument(gLib)
+        eng0.upsertChunks(gLib, gDoc, (0 until 8).map { i =>
+          ChunkIn(text = s"g $i",
+            embedding = Some(Array.tabulate(4)(j => if (j == i % 4) 1f else 0.1f)),
+            position = i, id = Some(f"g$i%03d"))
+        })
+        eng0.rebuildIndex(gLib)
+      }
+      val lib = eng0.createLibrary("auto-c", 4, IndexConfig("auto",
+        ivfNumCentroids = 2, ivfNprobe = 1))
+      val doc = eng0.createDocument(lib)
+      eng0.upsertChunks(lib, doc, (0 until 12).map { i =>
+        ChunkIn(text = s"a $i",
+          embedding = Some(Array.tabulate(4)(j => if (j == i % 4) 1f else 0.2f)),
+          position = i, id = Some(f"a$i%03d"))
+      })
+      eng0.rebuildIndex(lib) // 12 >= threshold 4 -> the ivf tier
+      (dir, lib, doc)
+    }
     val sc = spark.sparkContext
     def jobsOf(f: => Unit): Int = {
       val before = GraftJobBridge.jobsSubmitted(sc); f
       GraftJobBridge.jobsSubmitted(sc) - before
     }
     val q = Array(1f, 0.2f, 0.2f, 0.2f)
+    // a fresh engine over a store = cold caches, the serving shape
+    val (dir, lib, doc) = autoStore(withGraph = true)
+    val eng = new VectorEngine(spark, dir, fixedClock, autoIvfThreshold = 4)
     def hits(): Seq[String] =
       eng.search(lib, q, k = 3).collect().map(_.getString(0)).toSeq
     var first = Seq.empty[String]
@@ -1540,12 +1545,22 @@ class EngineSpec extends AnyFunSuite {
     var third = Seq.empty[String]
     val j3 = jobsOf { third = hits() }
     assert(first.nonEmpty && first == second && second == third)
-    // the first call pays the catalog collect + the family probes (at
-    // least nsw_edges + hnsw_edges isEmpty jobs, ruled out per library);
-    // every later call serves the cached resolution
+    // the first call pays the catalog collect + the family probes; every
+    // later call serves the cached resolution
     assert(j2 == j3, s"cached searches ran different job counts: $j2 vs $j3")
-    assert(j1 >= j2 + 3,
+    assert(j1 > j2,
       s"second search should skip catalog + probe jobs: first $j1, second $j2")
+    // the graph library's edge tables cost the cold resolution nothing:
+    // the same cold search in a store without it runs as many jobs
+    val (soloDir, soloLib, _) = autoStore(withGraph = false)
+    val solo = new VectorEngine(spark, soloDir, fixedClock, autoIvfThreshold = 4)
+    var soloHits = Seq.empty[String]
+    val jSolo = jobsOf {
+      soloHits = solo.search(soloLib, q, k = 3).collect().map(_.getString(0)).toSeq
+    }
+    assert(soloHits == first)
+    assert(j1 == jSolo,
+      s"cold search probed another library's tables: $j1 jobs vs $jSolo alone")
     // an index mutation invalidates: the add re-probes ONCE, then caches
     eng.upsertChunks(lib, doc, Seq(ChunkIn(text = "a 12",
       embedding = Some(Array(1f, 0.2f, 0.2f, 0.2f)), position = 12,

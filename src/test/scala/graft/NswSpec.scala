@@ -44,10 +44,10 @@ class NswSpec extends AnyFunSuite {
     }
   }
 
-  private def freshBuilt(): (VectorEngine, String, String) = {
+  private def freshBuilt(cfg: IndexConfig = config): (VectorEngine, String, String) = {
     val dir = graft.TempDirs.scratch("graft-nsw-test").toString
     val eng = new VectorEngine(spark, dir, fixedClock)
-    val lib = eng.createLibrary("nsw", Dim, config)
+    val lib = eng.createLibrary("nsw", Dim, cfg)
     val doc = eng.createDocument(lib)
     eng.upsertChunks(lib, doc, corpus().zipWithIndex.map { case ((id, v), i) =>
       ChunkIn(text = s"chunk $i", embedding = Some(v), position = i,
@@ -155,6 +155,31 @@ class NswSpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3))
         .sortBy { case (id, s) => (-s, id) }.toSeq).toMap
     assert(joined == single)
+  }
+
+  test("nsw per-call nswBeam equals a twin library built with that beam") {
+    // the beam is a search-time dial (the build ignores it), so a query
+    // walked at nswBeam = b must land on the hits of a library whose
+    // configured beam is b; a starved default keeps the beams apart
+    val starved = config.copy(nswBeam = 4, nswRounds = 1)
+    val (eng, _, lib) = freshBuilt(starved)
+    // off-cluster queries (seeded mixes of every planted direction), so
+    // the entry cell does not already hold the answer
+    val rnd = new scala.util.Random(5)
+    val queries = Seq.fill(12)(Array.fill(Dim)(rnd.nextFloat()))
+    def hitsOf(e: VectorEngine, l: String, q: Array[Float],
+        beam: Option[Int]): Seq[(String, Double)] =
+      e.search(l, q, k = 2, nswBeam = beam).collect()
+        .map(h => (h.getString(0), h.getDouble(h.fieldIndex("score")))).toSeq
+    val byBeam = Seq(2, 12).map { b =>
+      val (twin, _, twinLib) = freshBuilt(starved.copy(nswBeam = b))
+      queries.map { q =>
+        val got = hitsOf(eng, lib, q, Some(b))
+        assert(got == hitsOf(twin, twinLib, q, None), s"beam $b")
+        got
+      }
+    }
+    assert(byBeam.head != byBeam.last, "the two beams should walk apart")
   }
 
   test("nsw rebalance policy: adjacency-hub share thresholds a rebuild") {

@@ -56,6 +56,29 @@ class PropertySpec extends AnyFunSuite {
     assert(bad == 0)
   }
 
+  test("l2Normalize is bit-identical to the per-element norm formulation") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val vecs: Seq[Option[Seq[Float]]] =
+      (0 until 300).map(i => Some(Seq.fill(8 + i % 57)(
+        (rnd.nextGaussian() * math.pow(10, i % 7 - 3)).toFloat))) ++
+        Seq(Some(Seq.fill(64)(0f)), Some(Seq(-0f, 0f)), None)
+    val df = vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "a")
+    // the reference: the norm re-folded inside every element's lambda
+    val ref = when(l2Norm(col("a")) === 0.0, lit(null).cast("array<double>"))
+      .otherwise(transform(vecAsDouble(col("a")), x => x / l2Norm(col("a"))))
+    val rows = df.select(col("i"), l2Normalize(col("a")), ref).collect()
+    assert(rows.length == vecs.length)
+    def bits(r: org.apache.spark.sql.Row, c: Int): Option[Seq[Long]] =
+      if (r.isNullAt(c)) None
+      else Some(r.getSeq[Double](c).map(java.lang.Double.doubleToRawLongBits))
+    rows.foreach { r =>
+      assert(bits(r, 1) == bits(r, 2), s"vector ${r.getInt(0)}")
+    }
+    val nulls = rows.filter(_.isNullAt(1)).map(_.getInt(0)).toSet
+    assert(nulls == Set(300, 301, 302))
+  }
+
   test("euclidean similarity in (0,1]; distance triangle vs self") {
     val df = randomPairs(300, 8, seed = 3).select(
       euclideanSim(col("a"), col("b")).as("s"),

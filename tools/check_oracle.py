@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 tools/check_oracle.py <outDir> <sfDir>
+Usage: python3 tools/check_oracle.py <outDir> <sfDir> [--parent <parentOutDir>]
 
 Reads the parquet dumps written by `sbt "runMain graft.Verify <sfDir> <outDir>"`
 plus outDir/oracle_sql.json, runs each oracle SQL in DuckDB against the same
@@ -17,8 +17,15 @@ against the Spark parquet column types, allowing ONLY integer width drift
 within 64 bits (TINYINT/SMALLINT/INTEGER/BIGINT — 35 legitimately-green
 entries differ that way); HUGEINT or DECIMAL vs anything is a FAIL even when
 every cell compares equal.
+
+--parent <parentOutDir>: when an entry's DuckDB replay itself raises (the
+recall-curve replays exceed DuckDB's memory cap on 15 GB hosts), the entry
+still FAILs, and its Spark output is also compared, by the same strict
+rule, against the same entry in another Verify output directory (the
+parent commit's), printing SAME-AS-PARENT or DIFF-FROM-PARENT. The exit
+status does not change.
 """
-import json, sys, os, glob
+import argparse, json, sys, os, glob
 import duckdb
 
 # All 64-bit-or-narrower integer widths are one equivalence class: the
@@ -33,7 +40,50 @@ def type_class(t):
 def col_types(rel):
     return {c: type_class(t) for c, t in zip(rel.columns, rel.types)}
 
-def main(out_dir, sf_dir):
+def fetch(rel):
+    """(column types, rows) of a DuckDB relation."""
+    return col_types(rel), rel.fetchdf()
+
+def parquet_rel(con, out_dir, name):
+    """The relation over one entry's parquet dump, None when absent."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    return con.sql(f"SELECT * FROM read_parquet({files!r})") if files else None
+
+def frame_diff(got, exp, other):
+    """None when the fetched results hold the same columns, types and
+    rows, else the first difference (`other` names the expected side)."""
+    (gt, g), (et, e) = got, exp
+    gc, ec = sorted(g.columns), sorted(e.columns)
+    if gc != ec:
+        return f"columns {gc} != {ec}"
+    # type-strict compare: int width drift within 64 bits is the only
+    # allowed divergence (HUGEINT/DECIMAL vs BIGINT hashes red driver-side)
+    type_bad = [(c, gt[c], et[c]) for c in gc if gt[c] != et[c]]
+    if type_bad:
+        c, a, b = type_bad[0]
+        return (f"type col {c}: spark={a} {other}={b}"
+                + (f" (+{len(type_bad)-1} more)" if len(type_bad) > 1 else ""))
+    g = g[gc].sort_values(gc).reset_index(drop=True)
+    e = e[ec].sort_values(ec).reset_index(drop=True)
+    if len(g) != len(e):
+        return f"rows {len(g)} != {len(e)}"
+    # strict per-cell equality (no tolerance — like a hash compare)
+    for c in gc:
+        for i, (a, b) in enumerate(zip(g[c].tolist(), e[c].tolist())):
+            if a != b and not (a is None and b is None) and str(a) != str(b):
+                return f"col {c} row {i}: spark={a!r} {other}={b!r}"
+    return None
+
+def parent_verdict(con, parent_dir, name, got):
+    rel = parquet_rel(con, parent_dir, name)
+    if rel is None:
+        return f"DIFF-FROM-PARENT {name}: no parent output at {parent_dir}/{name}"
+    why = frame_diff(got, fetch(rel), "parent")
+    if why:
+        return f"DIFF-FROM-PARENT {name}: {why}"
+    return f"SAME-AS-PARENT {name}: {len(got[1])} rows"
+
+def main(out_dir, sf_dir, parent_dir=None):
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
@@ -43,62 +93,41 @@ def main(out_dir, sf_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(oracle):
-        sql = oracle[name]
-        pq_dir = f"{out_dir}/{name}"
-        files = glob.glob(f"{pq_dir}/*.parquet")
-        if not files:
-            print(f"FAIL {name}: no spark output at {pq_dir}")
-            n_fail += 1
-            continue
         try:
-            got_rel = con.sql(f"SELECT * FROM read_parquet({files!r})")
-            exp_rel = con.sql(sql)
-            gt, et = col_types(got_rel), col_types(exp_rel)
-            got = got_rel.fetchdf()
-            exp = exp_rel.fetchdf()
+            got_rel = parquet_rel(con, out_dir, name)
+            if got_rel is None:
+                print(f"FAIL {name}: no spark output at {out_dir}/{name}")
+                n_fail += 1
+                continue
+            got = fetch(got_rel)
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
             continue
-        gc, ec = sorted(got.columns), sorted(exp.columns)
-        if gc != ec:
-            print(f"FAIL {name}: columns {gc} != {ec}")
+        try:
+            exp = fetch(con.sql(oracle[name]))
+        except Exception as e:
+            print(f"FAIL {name}: {e}")
             n_fail += 1
+            if parent_dir:
+                print(parent_verdict(con, parent_dir, name, got))
             continue
-        # type-strict compare: int width drift within 64 bits is the only
-        # allowed divergence (HUGEINT/DECIMAL vs BIGINT hashes red driver-side)
-        type_bad = [(c, gt[c], et[c]) for c in gc if gt[c] != et[c]]
-        if type_bad:
-            c, a, b = type_bad[0]
-            print(f"FAIL {name}: type col {c}: spark={a} oracle={b}"
-                  + (f" (+{len(type_bad)-1} more)" if len(type_bad) > 1 else ""))
-            n_fail += 1
-            continue
-        g = got[gc].sort_values(gc).reset_index(drop=True)
-        e = exp[ec].sort_values(ec).reset_index(drop=True)
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows {len(g)} != {len(e)}")
-            n_fail += 1
-            continue
-        # strict per-cell equality (no tolerance — like a hash compare)
-        mismatch = None
-        for c in gc:
-            gv, ev = g[c].tolist(), e[c].tolist()
-            for i, (a, b) in enumerate(zip(gv, ev)):
-                if a != b and not (a is None and b is None) and str(a) != str(b):
-                    mismatch = (c, i, a, b)
-                    break
-            if mismatch:
-                break
-        if mismatch:
-            c, i, a, b = mismatch
-            print(f"FAIL {name}: col {c} row {i}: spark={a!r} oracle={b!r}")
+        why = frame_diff(got, exp, "oracle")
+        if why:
+            print(f"FAIL {name}: {why}")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(g)} rows")
+            print(f"PASS {name}: {len(got[1])} rows")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail of {len(oracle)}")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description="Compare Verify outputs with the DuckDB oracle.")
+    ap.add_argument("out_dir")
+    ap.add_argument("sf_dir")
+    ap.add_argument("--parent", metavar="parentOutDir",
+                    help="for entries whose replay raises, compare the Spark "
+                         "output with this Verify output directory")
+    a = ap.parse_args()
+    sys.exit(main(a.out_dir, a.sf_dir, a.parent))
