@@ -306,12 +306,19 @@ object Schemas {
     * own full key instead (they have no chunk_id column).
     *
     * `families` declares which index families OWN the table, by every
-    * `IndexConfig.indexType` spelling (`_det`/`_trained` included); a
-    * table with no owner is not an index table. The index lifecycle
+    * `IndexConfig.indexType` spelling (`_det`/`_trained` included, so a
+    * mode may own more tables than another, as hnsw_det owns
+    * `hnsw_edges`); a table with no owner is not an index table. It is
+    * the one ownership declaration: [[graft.index.IndexFamily.tables]]
+    * derives a family's tables from it (libraryStats reports an index
+    * once the library holds all of them), and adding a family means one
+    * `IndexFamily` object plus its spellings here. The index lifecycle
     * derives from it: a rebuild writes its family's tables and keeps
     * exactly those, dropping the library's partition of every other
     * index table; a library delete or a flat rebuild drops them all;
-    * incremental maintenance touches only tables the library holds.
+    * incremental maintenance touches only tables the library holds, and
+    * a bulk ingest into a library holding any of them checkpoints its
+    * batch before the index add.
     * A SHARED table is listed under every family that reads it —
     * `ivf_centroids` (the coarse cells of the ivf, graph and ivf-coded
     * families), `ivf_postings` (ivf and the graph families) and
@@ -386,13 +393,6 @@ object Schemas {
 
   /** The derived index tables: every table some family owns. */
   val indexTables: Seq[TableDef] = storeTables.filter(_.families.nonEmpty)
-
-  /** Every valid `IndexConfig.indexType`: the owning families, plus
-    * `flat` (scores the chunk table at query time, owns no table) and
-    * `auto` (resolved to one of the others at rebuild time).
-    */
-  val indexTypes: Set[String] =
-    indexTables.flatMap(_.families).toSet ++ Set("flat", "auto")
 
   /** Catalog-scale tables NOT partitioned by library_id — excluded from
     * per-library partition operations (export/import, partition drops).

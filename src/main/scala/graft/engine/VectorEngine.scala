@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.EngineErrors._
 import graft.functions.VectorFunctions._
-import graft.index.{BqIndex, IvfBqIndex, IvfIndex, IvfPqIndex, IvfSq8Index, LshIndex, PqIndex, Sq8Index}
+import graft.index.{Batch, BalanceAudit, GraphFamily, HnswIndex, IndexContext, IndexFamily, IvfFamily, IvfPqFamily, IvfSq8Family, LshIndex, PqFamily, QuantizationAudit, Query, ResidualFamily, Sq8Family}
 
 /** The engine facade: the reference's service-layer verbs
   * (`/root/reference/src/vector_db_api/services/{library,document,chunk,search}.py`) re-expressed as
@@ -207,16 +207,6 @@ final class VectorEngine(
     */
   private def maybeVacuum(): Unit = autoVacuumKeep.foreach(n => vacuum(n))
 
-  /** INDEX HEALTH AUDIT (sq8): per-corpus quantization error of the
-    * STORED codes against the true normalized vectors — the FAISS-style
-    * reconstruction-error readout an operator checks before trusting a
-    * compressed index (rising error after many incremental adds means
-    * the frozen ranges have drifted from the corpus and a rebuild is
-    * due). Reuses [[Sq8Index.distExpr]] with the true vector as the
-    * "query" side, so err = sum over dims of (decoded - true)^2 in
-    * exact micro-units. ONE codes-to-chunks equi-join + one aggregate;
-    * output is a single row whatever the corpus size.
-    */
   /** BQ INDEX-BALANCE AUDIT: per-dimension population count of the
     * stored sign bits — the binary family's discrimination readout. A
     * dimension whose bit is (nearly) always 0 or always 1 contributes
@@ -230,14 +220,14 @@ final class VectorEngine(
     */
   def bqBitStats(libId: String): DataFrame = {
     val (dim, _, _) = getLibrary(libId)
-    if (!store.exists("bq_codes") || bqCodes(libId).isEmpty)
+    val codes = libPart("bq_codes", libId)
+    if (!store.exists("bq_codes") || codes.isEmpty)
       throw new NotFoundError(s"bq index for library $libId")
     val bits = array((0 until dim).map { i =>
       shiftright(element_at(col("codes"), i / 64 + 1), i % 64)
         .bitwiseAND(lit(1L)).cast("int")
     }: _*)
-    bqCodes(libId)
-      .select(posexplode(bits).as(Seq("pos", "b")))
+    codes.select(posexplode(bits).as(Seq("pos", "b")))
       .groupBy(col("pos"))
       .agg(count(lit(1)).as("n_codes"), sum(col("b")).cast("long").as("n_set"))
       .select(col("pos").cast("int").as("pos"), col("n_codes"), col("n_set"))
@@ -253,18 +243,7 @@ final class VectorEngine(
     * reconstruction-error audits. One groupBy over the postings table +
     * a left join to the metadata-scale centroid list.
     */
-  def ivfCellStats(libId: String): DataFrame = {
-    if (!store.exists("ivf_postings"))
-      throw new NotFoundError(s"ivf index for library $libId")
-    val cents = ivfCentroids(libId).select(col("centroid_id"))
-    if (cents.isEmpty) throw new NotFoundError(s"ivf index for library $libId")
-    val counts = ivfPostings(libId).groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("n"))
-    cents.join(counts, Seq("centroid_id"), "left")
-      .select(col("centroid_id"),
-        coalesce(col("n"), lit(0L)).as("n_members"))
-      .orderBy(col("centroid_id").asc)
-  }
+  def ivfCellStats(libId: String): DataFrame = IvfFamily.cellStats(libCtx(libId))
 
   /** Bucket-balance audit for the LSH families, per hash table: bucket
     * count, total entries, and the largest bucket. A degenerate table
@@ -276,7 +255,7 @@ final class VectorEngine(
   def lshBucketStats(libId: String): DataFrame = {
     if (!store.exists("lsh_buckets"))
       throw new NotFoundError(s"lsh index for library $libId")
-    val b = lshBuckets(libId)
+    val b = libPart("lsh_buckets", libId)
     if (b.isEmpty) throw new NotFoundError(s"lsh index for library $libId")
     b.groupBy(col("table_id"), col("signature"))
       .agg(count(lit(1)).as("bn"))
@@ -303,9 +282,7 @@ final class VectorEngine(
     // gate on THIS library's effective family, not just the global
     // table's existence: another library's graph must not turn an
     // ivf-built library's call into an all-zero histogram (ADVICE r13)
-    val (_, config, _) = getLibrary(libId)
-    if (!store.exists("nsw_edges") ||
-        !Set("nsw_det", "hnsw_det").contains(effectiveIndexType(libId, config)))
+    if (!store.exists("nsw_edges") || (libCtx(libId).family ne GraphFamily))
       throw new NotFoundError(s"nsw index for library $libId")
     val nodes = ivfPostings(libId).select(col("chunk_id").as("src_id"))
     if (nodes.isEmpty) throw new NotFoundError(s"nsw index for library $libId")
@@ -333,13 +310,10 @@ final class VectorEngine(
     * base edge count; output is always MaxLevel+1 rows.
     */
   def hnswLayerStats(libId: String): DataFrame = {
-    val (_, config, _) = getLibrary(libId)
-    if (!store.exists("nsw_edges") ||
-        effectiveIndexType(libId, config) != "hnsw_det")
+    if (!store.exists("nsw_edges") || !GraphFamily.layered(libCtx(libId).spelling))
       throw new NotFoundError(s"hnsw index for library $libId")
     val posts = ivfPostings(libId)
     if (posts.isEmpty) throw new NotFoundError(s"hnsw index for library $libId")
-    import graft.index.HnswIndex
     val lvls = posts
       .select(HnswIndex.levelExpr(col("chunk_id")).as("lvl"))
       .groupBy(col("lvl")).agg(count(lit(1)).as("n"))
@@ -384,104 +358,25 @@ final class VectorEngine(
       .orderBy(col("subspace").asc)
   }
 
-  def sq8QuantizationError(libId: String): DataFrame = {
-    if (!store.exists("sq8_params"))
-      throw new NotFoundError(s"sq8 index for library $libId")
-    val p = Sq8Index.collectParams(sq8Params(libId))
-    if (p.isEmpty) throw new NotFoundError(s"sq8 index for library $libId")
-    val truth = chunks.filter(col("library_id") === libId &&
-        col("embedding").isNotNull)
-      .select(col("id").as("chunk_id"),
-        transform(l2Normalize(col("embedding")), _.cast("float")).as("vnorm"))
-    sq8Codes(libId).join(truth, "chunk_id")
-      .select(Sq8Index.distExpr(p,
-        i => element_at(col("vnorm"), i + 1).cast("double")).as("err_u"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("err_u")), lit(0L)).cast("long").as("sum_err_u"),
-        coalesce(max(col("err_u")), lit(0L)).cast("long").as("max_err_u"))
-  }
-
-  /** INDEX HEALTH AUDIT (flat PQ) — the same rebuild-due signal as
-    * [[sq8QuantizationError]] for the PQ family (VERDICT r7 #5): decode
-    * every STORED code through the codebook and fold (decoded - true)^2
-    * per dim in exact micro-units against the stored float-normalized
-    * vector the code approximated. The codebook is metadata-scale
-    * (M x K x dsub floats) and ships as plan literals; the scan is ONE
-    * pass over `pq_codes` (no join — the truth vector is stored beside
-    * the codes) + one aggregate. Rising error after incremental adds
-    * means the frozen codebooks have drifted from the corpus.
+  /** INDEX HEALTH AUDITS: per-corpus quantization error of the STORED
+    * codes against the true normalized vectors — the FAISS-style
+    * reconstruction-error readout an operator checks before trusting a
+    * compressed index (rising error after many incremental adds means
+    * the frozen ranges/codebooks have drifted from the corpus and a
+    * rebuild is due), one row (n, sum_err_u, max_err_u) in exact
+    * micro-units whatever the corpus size. Each is its family's
+    * [[QuantizationAudit]]: sq8 and ivfsq8 fold their distance kernel
+    * with the truth as the "query" side, pq decodes every code against
+    * the vector stored beside it, ivfpq against the true residual.
     */
-  def pqQuantizationError(libId: String): DataFrame = {
-    val cb = PqIndex.collectCodebooks(pqCodebooks(libId))
-    if (cb.isEmpty) throw new NotFoundError(s"pq index for library $libId")
-    pqCodes(libId)
-      .select(pqReconErr(cb, d => element_at(col("embedding_norm"), d + 1)
-        .cast("double")).as("err_u"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("err_u")), lit(0L)).cast("long").as("sum_err_u"),
-        coalesce(max(col("err_u")), lit(0L)).cast("long").as("max_err_u"))
-  }
-
-  /** INDEX HEALTH AUDIT (IVF+PQ): reconstruction error of the stored
-    * RESIDUAL codes vs the true residuals (float-normalized vector minus
-    * assigned centroid, the exact quantity `IvfPqIndex.encode`
-    * quantized). `ivfpq_codes` stores no vector, so the truth side is
-    * one equi-join to the chunk store plus a broadcast join to the
-    * metadata-scale centroid table; the fold is the same per-dim exact
-    * micro-unit error as the SQ8/PQ audits. This closes the FAISS
-    * add-after-train drift signal across all compressed families.
-    */
-  def ivfpqQuantizationError(libId: String): DataFrame = {
-    if (!store.exists("ivfpq_codes"))
-      throw new NotFoundError(s"ivfpq index for library $libId")
-    val cb = PqIndex.collectCodebooks(pqCodebooks(libId))
-    if (cb.isEmpty) throw new NotFoundError(s"ivfpq index for library $libId")
-    val truth = chunks.filter(col("library_id") === libId &&
-        col("embedding").isNotNull)
-      .select(col("id").as("chunk_id"),
-        transform(l2Normalize(col("embedding")), _.cast("float")).as("vnorm"))
-    val cents = broadcast(ivfCentroids(libId)
-      .select(col("centroid_id"), col("vector").as("cvec")))
-    // true residual per dim: FLOAT subtraction (both sides float-cast),
-    // exactly the arithmetic the stored codes were encoded against
-    val res = (d: Int) =>
-      (element_at(col("vnorm"), d + 1) - element_at(col("cvec"), d + 1))
-        .cast("double")
-    ivfpqCodes(libId).join(truth, "chunk_id").join(cents, "centroid_id")
-      .select(pqReconErr(cb, res).as("err_u"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("err_u")), lit(0L)).cast("long").as("sum_err_u"),
-        coalesce(max(col("err_u")), lit(0L)).cast("long").as("max_err_u"))
-  }
-
-  /** INDEX HEALTH AUDIT (IVF+SQ8): reconstruction error of the stored
-    * per-cell byte codes vs the true residuals — the fourth compressed
-    * family through the same rebuild-due readout, completing the audit
-    * matrix. Reuses the [[IvfSq8Index.adcDistExpr]] kernel with the TRUE
-    * residual standing in as the "query" side, so err = the exact
-    * micro-unit decode-vs-truth fold the search path ranks by. One
-    * codes-to-chunks equi-join + one broadcast centroid join + one
-    * aggregate.
-    */
-  def ivfsq8QuantizationError(libId: String): DataFrame = {
-    if (!store.exists("ivfsq8_codes") || !store.exists("ivfsq8_params"))
-      throw new NotFoundError(s"ivfsq8 index for library $libId")
-    val pmap = IvfSq8Index.collectParams(ivfsq8Params(libId))
-    if (pmap.isEmpty) throw new NotFoundError(s"ivfsq8 index for library $libId")
-    val truth = chunks.filter(col("library_id") === libId &&
-        col("embedding").isNotNull)
-      .select(col("id").as("chunk_id"),
-        transform(l2Normalize(col("embedding")), _.cast("float")).as("vnorm"))
-    val cents = broadcast(ivfCentroids(libId)
-      .select(col("centroid_id"), col("vector").as("cvec")))
-    ivfsq8Codes(libId).join(truth, "chunk_id").join(cents, "centroid_id")
-      .select(col("codes"), col("centroid_id"),
-        zip_with(col("vnorm"), col("cvec"), (a, b) => a - b).as("qres"))
-      .select(IvfSq8Index.adcDistExpr(pmap).as("err_u"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("err_u")), lit(0L)).cast("long").as("sum_err_u"),
-        coalesce(max(col("err_u")), lit(0L)).cast("long").as("max_err_u"))
-  }
+  def sq8QuantizationError(libId: String): DataFrame =
+    Sq8Family.quantizationError(libCtx(libId))
+  def pqQuantizationError(libId: String): DataFrame =
+    PqFamily.quantizationError(libCtx(libId))
+  def ivfpqQuantizationError(libId: String): DataFrame =
+    IvfPqFamily.quantizationError(libCtx(libId))
+  def ivfsq8QuantizationError(libId: String): DataFrame =
+    IvfSq8Family.quantizationError(libCtx(libId))
 
   /** AUDIT-DRIVEN REBUILD POLICY — the rebuild-due signal closed into a
     * verb: run the library's family-appropriate reconstruction-error
@@ -494,15 +389,11 @@ final class VectorEngine(
     * ivf) have nothing to audit — ValidationError.
     */
   def rebuildIfDrifted(libId: String, maxMeanErrU: Double): RebuildDecision = {
-    val (_, config, _) = getLibrary(libId)
-    val family = effectiveIndexType(libId, config)
-    val audit = family match {
-      case "sq8"                      => sq8QuantizationError(libId)
-      case "pq" | "pq_trained"        => pqQuantizationError(libId)
-      case "ivfpq" | "ivfpq_trained"  => ivfpqQuantizationError(libId)
-      case "ivfsq8"                   => ivfsq8QuantizationError(libId)
-      case other => throw new ValidationError(
-        s"rebuildIfDrifted: '$other' stores no compressed codes to audit")
+    val ctx = libCtx(libId)
+    val audit = ctx.family match {
+      case a: QuantizationAudit => a.quantizationError(ctx)
+      case _ => throw new ValidationError(
+        s"rebuildIfDrifted: '${ctx.spelling}' stores no compressed codes to audit")
     }
     val row = audit.collect().head
     val n = row.getLong(0)
@@ -511,7 +402,7 @@ final class VectorEngine(
     val mean = if (n == 0) 0.0 else sumErr.toDouble / n
     val due = mean > maxMeanErrU
     if (due) rebuildIndex(libId)
-    RebuildDecision(family, n, sumErr, maxErr, mean, rebuilt = due)
+    RebuildDecision(ctx.spelling, n, sumErr, maxErr, mean, rebuilt = due)
   }
 
   /** BALANCE-DRIVEN REBUILD POLICY (VERDICT r8 #7) — the balance audits
@@ -519,6 +410,9 @@ final class VectorEngine(
     * the library's family-appropriate balance stats and rebuild iff the
     * hottest unit's share of all entries exceeds `maxSharePpm` (exact
     * integer parts-per-million, so the decision replays bit-identically).
+    * The units are the family's [[BalanceAudit]], in every mode of it
+    * (`ivf` and `ivf_det`, `lsh` and `lsh_det`, ...); flat, pq, sq8 and
+    * bq have none (ValidationError).
     * For the IVF-coarse families the unit is a cell (a hot cell makes
     * every probe touching it pay its full posting list — candidates stay
     * ~nprobe/K of the corpus ONLY when cells are balanced; incremental
@@ -530,43 +424,14 @@ final class VectorEngine(
     * The audit is one keyed agg; driver state is one decision row.
     */
   def rebalanceIfSkewed(libId: String, maxSharePpm: Long): RebalanceDecision = {
-    val (_, config, _) = getLibrary(libId)
-    val family = effectiveIndexType(libId, config)
-    val members: DataFrame = family match {
-      case "ivf" =>
-        ivfCellStats(libId).select(lit(0).as("grp"), col("n_members").as("m"))
-      case "ivfpq" | "ivfpq_trained" =>
-        if (!store.exists("ivfpq_codes"))
-          throw new NotFoundError(s"ivfpq index for library $libId")
-        ivfpqCodes(libId).groupBy(col("centroid_id"))
-          .agg(count(lit(1)).as("m")).select(lit(0).as("grp"), col("m"))
-      case "ivfsq8" =>
-        if (!store.exists("ivfsq8_codes"))
-          throw new NotFoundError(s"ivfsq8 index for library $libId")
-        ivfsq8Codes(libId).groupBy(col("centroid_id"))
-          .agg(count(lit(1)).as("m")).select(lit(0).as("grp"), col("m"))
-      case "lsh" =>
-        if (!store.exists("lsh_buckets"))
-          throw new NotFoundError(s"lsh index for library $libId")
-        lshBuckets(libId).groupBy(col("table_id"), col("signature"))
-          .agg(count(lit(1)).as("m"))
-          .select(col("table_id").as("grp"), col("m"))
-      case "nsw_det" | "hnsw_det" =>
-        // unit = a node's adjacency list: a reverse-link hub taxes every
-        // beam that touches it with its full edge fan-out; a rebuild
-        // re-seeds cells from the CURRENT corpus and re-links everything
-        // (vs. the frozen-state incremental adds that create the pile-up).
-        // The hnsw hierarchy is audited through its base layer — every
-        // beam lands there, and the upper layers are 1/15 of its mass.
-        if (!store.exists("nsw_edges"))
-          throw new NotFoundError(s"nsw index for library $libId")
-        nswEdges(libId).groupBy(col("src_id"))
-          .agg(count(lit(1)).as("m")).select(lit(0).as("grp"), col("m"))
-      case other => throw new ValidationError(
-        s"rebalanceIfSkewed: '$other' has no balance-audited index units")
+    val ctx = libCtx(libId)
+    val members: DataFrame = ctx.family match {
+      case a: BalanceAudit => a.balanceUnits(ctx)
+      case _ => throw new ValidationError(
+        s"rebalanceIfSkewed: '${ctx.spelling}' has no balance-audited index units")
     }
     // worst per-group share in exact ppm: group = the whole index for the
-    // IVF families, one hash table for LSH
+    // celled and graph families, one hash table for LSH
     val row = members.groupBy(col("grp"))
       .agg(count(lit(1)).as("nu"), sum(col("m")).as("tot"), max(col("m")).as("mx"))
       .agg(coalesce(sum(col("nu")), lit(0L)).cast("long").as("n_units"),
@@ -578,7 +443,7 @@ final class VectorEngine(
       (row.getLong(0), row.getLong(1), row.getLong(2))
     val due = nEntries > 0 && sharePpm > maxSharePpm
     if (due) rebuildIndex(libId)
-    RebalanceDecision(family, nUnits, nEntries, sharePpm, rebuilt = due)
+    RebalanceDecision(ctx.spelling, nUnits, nEntries, sharePpm, rebuilt = due)
   }
 
   /** HIERARCHY POLICY — the layer-thinness sibling of
@@ -602,9 +467,8 @@ final class VectorEngine(
     if (minEdgesPerMemberPpm < 0)
       throw new ValidationError(
         s"minEdgesPerMemberPpm out of range: $minEdgesPerMemberPpm")
-    val (_, config, _) = getLibrary(libId)
-    val family = effectiveIndexType(libId, config)
-    if (family != "hnsw_det")
+    val family = libCtx(libId).spelling
+    if (!GraphFamily.layered(family))
       throw new ValidationError(
         s"relinkIfHierarchyThin audits the hnsw hierarchy; library is '$family'")
     // upper layers only (the base layer is rebalanceIfSkewed's unit),
@@ -625,22 +489,6 @@ final class VectorEngine(
     if (due) rebuildIndex(libId)
     HierarchyDecision(family, ratios.length.toLong, thinnest, worstPpm,
       rebuilt = due)
-  }
-
-  /** Shared PQ decode-error fold: Σ_d floor((cb[m][codes[m]][j] -
-    * truth(d))^2 * 1e6 + 0.5) as exact BIGINT micro-units, with the
-    * per-(m,j) codeword→component lookup a K-length plan literal.
-    */
-  private def pqReconErr(cb: Array[Array[Array[Float]]],
-      truthAt: Int => Column): Column = {
-    val m = cb.length
-    val dsub = cb(0)(0).length
-    (for (mi <- 0 until m; j <- 0 until dsub) yield {
-      val lut = typedLit(cb(mi).map(_(j).toDouble).toIndexedSeq)
-      val dec = element_at(lut, element_at(col("codes"), mi + 1) + 1)
-      val diff = dec - truthAt(mi * dsub + j)
-      floor(diff * diff * lit(1000000.0) + lit(0.5)).cast("long")
-    }).reduce(_ + _)
   }
 
   /** Small-file compaction of the chunk table (the data-scale table): a
@@ -828,19 +676,8 @@ final class VectorEngine(
   private def libPart(table: String, libId: String): DataFrame =
     store.read(table, Schemas.storeTable(table).schema)
       .filter(col("library_id") === libId)
-  private def lshPlanes(libId: String): DataFrame = libPart("lsh_planes", libId)
-  private def lshBuckets(libId: String): DataFrame = libPart("lsh_buckets", libId)
   private def ivfCentroids(libId: String): DataFrame = libPart("ivf_centroids", libId)
   private def ivfPostings(libId: String): DataFrame = libPart("ivf_postings", libId)
-  private def pqCodebooks(libId: String): DataFrame = libPart("pq_codebooks", libId)
-  private def pqCodes(libId: String): DataFrame = libPart("pq_codes", libId)
-  private def sq8Params(libId: String): DataFrame = libPart("sq8_params", libId)
-  private def sq8Codes(libId: String): DataFrame = libPart("sq8_codes", libId)
-  private def bqCodes(libId: String): DataFrame = libPart("bq_codes", libId)
-  private def ivfbqCodes(libId: String): DataFrame = libPart("ivfbq_codes", libId)
-  private def ivfpqCodes(libId: String): DataFrame = libPart("ivfpq_codes", libId)
-  private def ivfsq8Params(libId: String): DataFrame = libPart("ivfsq8_params", libId)
-  private def ivfsq8Codes(libId: String): DataFrame = libPart("ivfsq8_codes", libId)
   private def nswEdges(libId: String): DataFrame = libPart("nsw_edges", libId)
   private def hnswEdges(libId: String): DataFrame = libPart("hnsw_edges", libId)
 
@@ -1539,20 +1376,23 @@ final class VectorEngine(
       .withColumn("version", coalesce(col("version0") + 1, col("version")))
       .drop("created0", "version0")
       .select(Schemas.chunks.fieldNames.toIndexedSeq.map(col): _*)
-    // ONE evaluation of the normalize + prior-join plan when the batch
-    // is MULTI-consumed (optimization r16): the graph families' index
-    // add reads it three times (base edges, layer edges, postings), and
-    // the replace path reads it in the rewrite + remove + add — without
-    // the checkpoint each action re-ran the whole ingest plan (for a
-    // text-embedding ingest that is the expensive part). A single-
-    // consumer batch (flat library, first ingest before any index
-    // exists) skips the materialization: the lone write evaluates the
-    // lazy plan once, exactly as before. Batch-bounded by the verb
-    // contract, so the checkpoint footprint is O(batch) at any scale.
-    val graphReuse = (config.indexType == "nsw_det" ||
-      config.indexType == "hnsw_det") &&
-      store.hasLibraryPartition("ivf_centroids", libId)
-    val ckpt = nPrior > 0L || graphReuse
+    // ONE evaluation of the normalize + prior-join plan whenever the
+    // batch is MULTI-consumed: the replace path reads it in the rewrite +
+    // remove + add, and an index add reads it again after the chunk
+    // write (the graph families three times: base edges, layer edges,
+    // postings). Without the checkpoint each action re-ran the whole
+    // ingest plan — the expensive part of a text-embedding ingest — and
+    // a NONDETERMINISTIC embedding would index different vectors than
+    // the chunk table stores. An add runs when the library holds a
+    // partition of an index table (a filesystem stat, no job; a rebuild
+    // keeps exactly its family's tables). A single-consumer batch (flat
+    // library, or the first ingest before any index is built) skips the
+    // materialization: the lone write evaluates the lazy plan once.
+    // Batch-bounded by the verb contract, so the checkpoint footprint is
+    // O(batch) at any scale.
+    val indexed = Schemas.indexTables.exists(t =>
+      store.hasLibraryPartition(t.name, libId))
+    val ckpt = nPrior > 0L || indexed
     val merged = if (ckpt) merged0.localCheckpoint() else merged0
     // identical id set either way (merged only rewrites
     // created_at/version); served from the checkpoint when one exists
@@ -1673,27 +1513,23 @@ final class VectorEngine(
 
   /** Per-library stats (the reference README's "index metrics" next-step,
     * `README.md:264`, realized): document/chunk/indexed-vector counts and
-    * which derived index tables exist for this library — one aggregate
-    * job per table, partition-pruned to the library.
+    * the built index — the library's effective `indexType` spelling once
+    * it holds a partition of every table that spelling owns in the
+    * registry (filesystem stats, no job), None for flat or before the
+    * first rebuild.
     */
   def libraryStats(libId: String): LibraryStats = {
-    val (_, config, _) = getLibrary(libId)
+    val ctx = libCtx(libId)
     val nDocs = documents.filter(col("library_id") === libId).count()
     val chunkAgg = chunks.filter(col("library_id") === libId)
       .agg(count(lit(1)), sum(when(col("embedding").isNotNull, 1L).otherwise(0L)))
       .collect().head
     val nChunks = chunkAgg.getLong(0)
     val nEmbedded = if (chunkAgg.isNullAt(1)) 0L else chunkAgg.getLong(1)
-    def has(table: String): Boolean =
-      store.hasLibraryPartition(table, libId) && !libPart(table, libId).isEmpty
-    LibraryStats(libId, config.indexType, nDocs, nChunks, nEmbedded,
-      hasLshIndex = has("lsh_planes") && has("lsh_buckets"),
-      hasIvfIndex = has("ivf_centroids") && has("ivf_postings"),
-      hasPqIndex = has("pq_codebooks") && has("pq_codes"),
-      hasIvfPqIndex = has("ivf_centroids") && has("pq_codebooks") &&
-        has("ivfpq_codes"),
-      hasIvfSq8Index = has("ivf_centroids") && has("ivfsq8_params") &&
-        has("ivfsq8_codes"))
+    val tables = ctx.family.tables(ctx.spelling)
+    LibraryStats(libId, ctx.config.indexType, nDocs, nChunks, nEmbedded,
+      builtIndex = Some(ctx.spelling).filter(_ => tables.nonEmpty &&
+        tables.forall(store.hasLibraryPartition(_, libId))))
   }
 
   /** Paginated library listing (reference `LibraryService.list`,
@@ -1796,15 +1632,14 @@ final class VectorEngine(
   /** Full rebuild of this library's derived index tables from the chunk
     * snapshot (reference startup replay / rebuild endpoint, `main.py:61-76`).
     * Versioned snapshot write + pointer swap = atomic repoint (C7).
-    * Each family arm writes only its own tables; the library then keeps
-    * exactly the tables its (auto-resolved) family owns in
+    * The family's `build` writes only its own tables; the library then
+    * keeps exactly the tables its (auto-resolved) spelling owns in
     * [[Schemas.storeTables]] — its partition of every other index table
     * is dropped, and a table shared with the previous family (e.g.
     * `ivf_centroids` from ivf_det to ivfpq) is rewritten, not dropped.
     */
   def rebuildIndex(libId: String): Unit = {
-    val (dim, config0, _) = getLibrary(libId)
-    val libChunks = chunks.filter(col("library_id") === libId)
+    val (dim, config, _) = getLibrary(libId)
     // "auto" (reference README.md:263 guidance, there unimplemented):
     // "Flat <100k vectors; IVF for 100k-10M" — plus the engine's own
     // scale thesis (IvfPqIndex header): past ~10M vectors the
@@ -1813,109 +1648,22 @@ final class VectorEngine(
     // autoIvfThreshold, IVF up to autoLshThreshold, IVFPQ beyond —
     // falling back to LSH when the library dim is not divisible by the
     // configured pq subspaces (IVFPQ's one structural precondition).
-    val config =
-      if (config0.indexType == "auto") {
-        val n = libChunks.filter(col("embedding").isNotNull).count()
-        config0.copy(indexType =
-          if (n < autoIvfThreshold) "flat"
-          else if (n < autoLshThreshold) "ivf"
-          else if (config0.pqSubspaces > 0 && dim % config0.pqSubspaces == 0)
-            "ivfpq"
-          else "lsh")
-      } else config0
-    config.indexType match {
-      case "flat" => () // flat scores the chunk table at query time
-      case "lsh" | "lsh_det" =>
-        val cappedH = math.min(config.lshHyperplanesPerTable, 63)
-        val planes =
-          if (config.indexType == "lsh_det")
-            LshIndex.makePlanesDet(spark, libId, config.lshNumTables,
-              cappedH, dim)
-          else LshIndex.makePlanes(spark, libId, config.lshNumTables,
-            cappedH, dim, lshSeed)
-        store.writeLibraryPartition("lsh_planes", libId, planes)
-        val buckets = LshIndex.buildBuckets(libChunks, planes, libId)
-        store.writeLibraryPartition("lsh_buckets", libId, buckets)
-      case "ivf" | "ivf_det" =>
-        val (centroids, postings) =
-          if (config.indexType == "ivf_det") {
-            val cents = IvfIndex.seedCentroids(libChunks, libId,
-              config.ivfNumCentroids)
-            (cents, IvfIndex.assignToCentroids(libChunks, cents, libId))
-          } else IvfIndex.build(libChunks, libId, config.ivfNumCentroids)
-        store.writeLibraryPartition("ivf_centroids", libId, centroids)
-        store.writeLibraryPartition("ivf_postings", libId, postings)
-      case "nsw_det" | "hnsw_det" =>
-        // graph family: seed cells + postings (SHARED relations with the
-        // ivf family — cells block the edge build and seed the walk;
-        // postings hold the vectors edges deliberately don't) plus the
-        // thin adjacency table. hnsw_det layers the same cell-blocked
-        // build OVER the base graph: nsw_edges is its layer 0, and the
-        // upper layers (nodes with md5-geometric level >= l) land in
-        // hnsw_edges — the hierarchy the search descends before the beam.
-        val cents = IvfIndex.seedCentroids(libChunks, libId,
-          config.ivfNumCentroids)
-        store.writeLibraryPartition("ivf_centroids", libId, cents)
-        store.writeLibraryPartition("ivf_postings", libId,
-          IvfIndex.assignToCentroids(libChunks, cents, libId))
-        store.writeLibraryPartition("nsw_edges", libId,
-          graft.index.NswIndex.buildEdges(libChunks, cents,
-            ivfPostings(libId), libId, config.ivfNprobe, config.nswDegree))
-        if (config.indexType == "hnsw_det")
-          store.writeLibraryPartition("hnsw_edges", libId,
-            graft.index.HnswIndex.buildLayers(libChunks, cents,
-              ivfPostings(libId), libId, config.ivfNprobe, config.nswDegree))
-      case "pq" | "pq_trained" =>
-        requirePqDivisible(config, dim) // defense in depth; verbs pre-check
-        val (codebooks, codes) = PqIndex.build(libChunks, libId, dim,
-          config.pqSubspaces, config.pqCodewords,
-          trained = config.indexType == "pq_trained")
-        store.writeLibraryPartition("pq_codebooks", libId, codebooks)
-        store.writeLibraryPartition("pq_codes", libId, codes)
-      case "ivfpq" | "ivfpq_trained" =>
-        requirePqDivisible(config, dim) // defense in depth; verbs pre-check
-        val (centroids, codebooks, codes) = IvfPqIndex.build(libChunks,
-          libId, dim, config.ivfNumCentroids, config.pqSubspaces,
-          config.pqCodewords,
-          trained = config.indexType == "ivfpq_trained")
-        // shares ivf_centroids (coarse quantizer) + pq_codebooks
-        // (residual codebooks) with its parent families; ivfpq_codes is
-        // the byte-compressed inverted-list table
-        store.writeLibraryPartition("ivf_centroids", libId, centroids)
-        store.writeLibraryPartition("pq_codebooks", libId, codebooks)
-        store.writeLibraryPartition("ivfpq_codes", libId, codes)
-      case "bq" =>
-        // stateless sign-bit packing: no params table, one map-side pass
-        store.writeLibraryPartition("bq_codes", libId,
-          BqIndex.build(libChunks, libId, dim))
-      case "ivfbq" =>
-        // cell-pruned binary codes: md5-seeded deterministic coarse
-        // cells (the shared ivf_centroids relation) + the packed code ON
-        // its inverted-list row — scan pruning by centroid_id literal
-        val cents = IvfIndex.seedCentroids(libChunks, libId,
-          config.ivfNumCentroids)
-        store.writeLibraryPartition("ivf_centroids", libId, cents)
-        store.writeLibraryPartition("ivfbq_codes", libId,
-          IvfBqIndex.build(libChunks, cents, libId, dim))
-      case "sq8" =>
-        val (params, codes) = Sq8Index.build(libChunks, libId, dim)
-        store.writeLibraryPartition("sq8_params", libId, params)
-        store.writeLibraryPartition("sq8_codes", libId, codes)
-      case "ivfsq8" =>
-        val (centroids, params, codes) = IvfSq8Index.build(libChunks, libId,
-          dim, config.ivfNumCentroids)
-        // shares ivf_centroids (coarse quantizer) with the ivf/ivfpq
-        // families; ivfsq8_params/ivfsq8_codes are the per-cell ranges
-        // and the byte-compressed inverted-list table
-        store.writeLibraryPartition("ivf_centroids", libId, centroids)
-        store.writeLibraryPartition("ivfsq8_params", libId, params)
-        store.writeLibraryPartition("ivfsq8_codes", libId, codes)
-    }
-    // keep exactly this family's tables: an auto library that changed
+    val ctx = new LibCtx(libId, c =>
+      if (config.indexType != "auto") config.indexType
+      else {
+        val n = c.chunks.filter(col("embedding").isNotNull).count()
+        if (n < autoIvfThreshold) "flat"
+        else if (n < autoLshThreshold) "ivf"
+        else if (config.pqSubspaces > 0 && dim % config.pqSubspaces == 0) "ivfpq"
+        else "lsh"
+      })
+    requirePqDivisible(config.copy(indexType = ctx.spelling), dim) // verbs pre-check
+    ctx.family.build(ctx)
+    // keep exactly this spelling's tables: an auto library that changed
     // tier, or a library whose config changed family, must not leave
     // stale tables behind (auto search dispatches on which tables HOLD
     // rows for this library)
-    dropIndexTables(libId, keep = config.indexType)
+    dropIndexTables(libId, keep = ctx.spelling)
   }
 
   // ---- search (the flagship path, §3.1) ------------------------------
@@ -1924,212 +1672,62 @@ final class VectorEngine(
     * document_id, score, text, position, created_at, updated_at.
     * Post-filter semantics by default (quirk Q5); `preFilter = true` is the
     * documented deviation that filters the candidate pool first.
-    */
-  /** `nswBeam` overrides the nsw_det/hnsw_det walk's beam width for THIS
+    *
+    * `nswBeam` overrides the nsw_det/hnsw_det walk's beam width for THIS
     * query — the hnswlib/faiss efSearch convention (search-time
     * quality/latency dial; the IndexConfig value is the default). Ignored
     * by the other families.
+    *
+    * The library's [[IndexFamily]] generates candidates through its
+    * driver-side probe path (probed cells, walked nodes and capped codes
+    * become pushed `isin` literals); every index family is then reranked
+    * exactly here — normalized stored vector x RAW query (quirk Q1).
     */
   def search(libIdOrAlias: String, query: Array[Float], k: Int,
       metric: String = "cosine", filters: Option[SearchFilters] = None,
       preFilter: Boolean = false, nswBeam: Option[Int] = None): DataFrame = {
-    val libId = resolveLibrary(libIdOrAlias)
-    val (dim, config, _) = getLibrary(libId)
-    if (query.length != dim)
-      throw new ValidationError(s"query dim ${query.length} != library dim $dim")
+    val ctx = libCtx(resolveLibrary(libIdOrAlias))
+    if (query.length != ctx.dim)
+      throw new ValidationError(s"query dim ${query.length} != library dim ${ctx.dim}")
     requireTopK(k, metric)
-
-    val libChunks = chunks.filter(col("library_id") === libId)
-    val isZero = query.forall(_ == 0f)
-
+    val libChunks = ctx.chunks
+    val qn = LshIndex.normalizeDriver(query)
     // preFilter restricts CANDIDATE GENERATION: for flat that is the scan
-    // itself (applyPre below, filter pushed into the parquet read); for
-    // LSH/IVF it is a semi-join of the bucket/posting candidates against
-    // the ids passing the filters, BEFORE oversample caps and top-k — so a
+    // itself (applyPre, filter pushed into the parquet read); for the
+    // index families a semi-join of the candidates against the ids
+    // passing the filters, BEFORE oversample caps and top-k — so a
     // pre-filtered query returns k rows whenever k matching candidates
-    // exist (the documented deviation from quirk Q5).
+    // exist (the documented deviation from quirk Q5)
     val allowedIds = allowedIdsOf(libChunks, filters, preFilter)
-    def restrict(cands: DataFrame): DataFrame = restrictTo(allowedIds, cands)
+    val fam = ctx.family
+    // a zero query scores 0 on flat and returns nothing through an index
+    // (quirk Q4)
+    if (qn.isEmpty && fam.indexed)
+      return hitsOf(flatScore(libChunks, query, metric).limit(0), libChunks, filters)
     // the full (pre-filtered) flat scan: the flat family, and every index
     // family whose structures are not built yet (reference ivf.py:96-99)
-    def flat(): DataFrame =
-      flatScore(applyPre(libChunks, filters, preFilter), query, metric)
-    // top-nprobe cells (ids + centroid vectors) for the normalized query:
-    // the driver argmax over the cached centroids — the posting/code
-    // probes below become `isin` literal filters that push into the
-    // parquet scan and prune partitions, with no join on the probe path
-    def probe(qn: Array[Float]): Array[(Int, Array[Float])] =
-      probeCells(libId, qn, math.max(1, config.ivfNprobe))
-    // exact rerank of hydrated candidates: the <= cap candidate side is
-    // broadcast against the partition-pruned chunk scan (quirk Q1)
-    def rerankHydrated(cands: DataFrame): DataFrame =
-      rerank(candidateNorms(broadcast(cands), libChunks, perCandidate = true),
-        query, metric)
+    val scored = fam.load(ctx)
+      .flatMap(st => fam.candidates(ctx, st, Query(query, qn.get, k, nswBeam, allowedIds)))
+      .fold(flatScore(applyPre(libChunks, filters, preFilter), query, metric))(
+        rerank(_, query, metric))
 
-    val effectiveType = effectiveIndexType(libId, config)
+    hitsOf(scored.orderBy(col("score").desc, col("chunk_id").asc) // Q7 tie-breaker
+      .limit(k), libChunks, filters)
+  }
 
-    // candidate (chunk_id, score) per index type
-    val scored: DataFrame = effectiveType match {
-      case "flat" => flat()
-      case "lsh" | "lsh_det" =>
-        if (isZero) return emptyHits()
-        val planes =
-          if (!store.exists("lsh_planes")) Nil
-          else LshIndex.collectPlanes(lshPlanes(libId))
-        if (planes.isEmpty) flat()
-        else {
-          val cands = LshIndex.candidates(restrict(lshBuckets(libId)), query, planes, k)
-          rerank(cands, query, metric)
-        }
-      case "ivf" | "ivf_det" =>
-        if (isZero) return emptyHits()
-        val topIds = probe(LshIndex.normalizeDriver(query).get).map(_._1)
-        if (topIds.isEmpty) flat()
-        else {
-          val cands = restrict(ivfPostings(libId))
-            .filter(col("centroid_id").isin(topIds.toIndexedSeq.map(Int.box): _*))
-            .select(col("chunk_id"), col("embedding_norm"))
-            .dropDuplicates("chunk_id")
-          // deviation from quirk Q3: rerank the FULL nprobe candidate set
-          rerank(cands, query, metric)
-        }
-      case "nsw_det" | "hnsw_det" =>
-        if (isZero) return emptyHits()
-        val qn = LshIndex.normalizeDriver(query).get
-        // preFilter restricts the WALK's candidate scoring (the r13
-        // narrowing — post-filter-only on the graph — measured the
-        // filtered-ANN collapse, 0.188 vs 0.400: a selective filter
-        // starved the beam with unreturnable nodes). The allowed set
-        // gates which ids the walk may score; traversal still reads the
-        // full adjacency, so navigability is preserved through the
-        // allowed subgraph's links.
-        val walkAllowed = if (preFilter) allowedIds else None
-        val walked: Seq[String] =
-          if (!store.exists("nsw_edges")) Nil
-          else graphWalk(libId, config,
-            math.max(nswBeam.getOrElse(config.nswBeam), k), Seq(0L -> qn),
-            hnsw = effectiveType == "hnsw_det", walkAllowed).head._2
-        if (walked.nonEmpty) {
-          val cands = ivfPostings(libId)
-            .filter(col("chunk_id").isin(walked: _*))
-            .select(col("chunk_id"), col("embedding_norm"))
-          rerank(restrict(cands), query, metric)
-        } else {
-          // graph not built yet, OR the walk found nothing (the query's
-          // entry cell was emptied by deletes, or no allowed node is
-          // reachable): full (pre-filtered) flat scan, as the other
-          // families' not-built paths
-          flat()
-        }
-      case "pq" | "pq_trained" =>
-        if (isZero) return emptyHits()
-        val cb =
-          if (!store.exists("pq_codebooks")) Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flat()
-        else {
-          // ADC candidate generation over the codes scan (integer
-          // micro-unit distances, cap 6k), then the exact rerank the
-          // engine's scoring contract requires (quirk Q1: normalized
-          // stored vector x RAW query)
-          val qn = LshIndex.normalizeDriver(query).get
-          val cands = PqIndex.candidates(restrict(pqCodes(libId)), cb, qn, k)
-          rerank(cands, query, metric)
-        }
-      case "ivfbq" =>
-        if (isZero) return emptyHits()
-        val qn = LshIndex.normalizeDriver(query).get
-        // the probed cells prune the packed-code scan: candidates touch
-        // nprobe/K of the inverted lists
-        val topIds = probe(qn).map(_._1)
-        val ibqDf = if (store.exists("ivfbq_codes")) ivfbqCodes(libId) else null
-        if (topIds.isEmpty || ibqDf == null || ibqDf.isEmpty) flat()
-        else rerankHydrated(BqIndex.candidates(
-          restrict(ibqDf
-            .filter(col("centroid_id")
-              .isin(topIds.toIndexedSeq.map(Int.box): _*))),
-          BqIndex.encodeQuery(qn), k))
-      case "bq" =>
-        if (isZero) return emptyHits()
-        val codesDf = if (store.exists("bq_codes")) bqCodes(libId) else null
-        if (codesDf == null || codesDf.isEmpty) flat()
-        else {
-          // packed-word scan: xor+popcount hamming in integer units
-          // against the driver-packed query code, cap 6k, then hydrate
-          // ONLY the capped candidates and exact-rerank (quirk Q1)
-          val qn = LshIndex.normalizeDriver(query).get
-          rerankHydrated(BqIndex.candidates(restrict(codesDf),
-            BqIndex.encodeQuery(qn), k))
-        }
-      case "sq8" =>
-        if (isZero) return emptyHits()
-        val p =
-          if (!store.exists("sq8_params")) Array.empty[(Double, Double)]
-          else Sq8Index.collectParams(sq8Params(libId))
-        if (p.isEmpty) flat()
-        else {
-          // byte-code scan: decode-approx L2 in integer micro-units
-          // against plan-literal ranges, cap 6k, then hydrate ONLY the
-          // capped candidates from the chunk store and exact-rerank
-          val qn = LshIndex.normalizeDriver(query).get
-          rerankHydrated(Sq8Index.candidates(restrict(sq8Codes(libId)), p, qn, k))
-        }
-      case "ivfpq" | "ivfpq_trained" =>
-        if (isZero) return emptyHits()
-        val qn = LshIndex.normalizeDriver(query).get
-        // the probed cells WITH their centroid vectors: the ADC tables
-        // need each cell's residual origin
-        val topCents = probe(qn)
-        val cb =
-          if (topCents.isEmpty || !store.exists("pq_codebooks"))
-            Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flat()
-        else {
-          // byte-compressed inverted lists: centroid-pruned codes scan,
-          // integer micro-unit ADC over residual codes, cap 6k — then
-          // hydrate the exact vectors for ONLY the capped candidates
-          // from the primary chunk store (the codes table stores no
-          // vectors) and rerank per the engine's scoring contract
-          rerankHydrated(IvfPqIndex.candidates(restrict(ivfpqCodes(libId)),
-            topCents, cb, qn, k))
-        }
-      case "ivfsq8" =>
-        if (isZero) return emptyHits()
-        val qn = LshIndex.normalizeDriver(query).get
-        // the probed cells WITH their centroid vectors: the per-cell
-        // query residuals need each cell's origin
-        val topCents = probe(qn)
-        val pmap =
-          if (topCents.isEmpty || !store.exists("ivfsq8_params"))
-            Map.empty[Int, Array[(Double, Double)]]
-          else IvfSq8Index.collectParams(ivfsq8Params(libId))
-        if (pmap.isEmpty) flat()
-        else {
-          // centroid-pruned byte-code inverted lists: per probed cell a
-          // decode-approx L2 against the cell's plan-literal ranges and
-          // the query residual, cap 6k union-wide — then hydrate the
-          // exact vectors for ONLY the capped candidates and rerank
-          rerankHydrated(IvfSq8Index.candidates(restrict(ivfsq8Codes(libId)),
-            pmap, topCents, qn, k))
-        }
-    }
-
-    val topk = scored
-      .orderBy(col("score").desc, col("chunk_id").asc) // Q7 tie-breaker
-      .limit(k)
-
-    // hydrate (J1: inner join drops hits whose chunk vanished); the top-k
-    // side is <= k rows — broadcast it so hydration is a map-side join
-    // against the partition-pruned chunk scan, never a shuffle
-    val hydrated = broadcast(topk)
-      .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id")
-    val filtered = applyPost(hydrated, filters)
-    filtered.select(col("chunk_id"), col("document_id"), col("score"),
+  /** The hit shape (P9) of <= k (chunk_id, score) rows: hydrated by a
+    * broadcast join against the partition-pruned chunk scan (map-side,
+    * never a shuffle; J1: a hit whose chunk vanished drops), then
+    * post-filtered (quirk Q5).
+    */
+  private def hitsOf(topk: DataFrame, libChunks: DataFrame,
+      filters: Option[SearchFilters]): DataFrame =
+    applyPost(broadcast(topk)
+        .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id"), filters)
+      .select(col("chunk_id"), col("document_id"), col("score"),
         col("text"), col("position"), col("metadata"),
         col("created_at"), col("updated_at"))
       .orderBy(col("score").desc, col("chunk_id").asc)
-  }
 
   /** HYBRID SEARCH — the lexical+vector surface modern vector stores pair
     * with ANN: the engine's own vector `search` (whatever index family the
@@ -2220,18 +1818,10 @@ final class VectorEngine(
       throw new ValidationError(s"limit out of range: $limit")
     similarity(metric)(lit(0), lit(0)) // validate metric name eagerly
     val libChunks = chunks.filter(col("library_id") === libId)
-    val topk = flatScore(applyPre(libChunks, filters, preFilter), query, metric)
+    hitsOf(flatScore(applyPre(libChunks, filters, preFilter), query, metric)
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col("chunk_id").asc) // Q7 tie-breaker
-      .limit(limit)
-    // <= limit rows — broadcast hydration, as `search` (J1 semantics)
-    val hydrated = broadcast(topk)
-      .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id")
-    applyPost(hydrated, filters)
-      .select(col("chunk_id"), col("document_id"), col("score"),
-        col("text"), col("position"), col("metadata"),
-        col("created_at"), col("updated_at"))
-      .orderBy(col("score").desc, col("chunk_id").asc)
+      .limit(limit), libChunks, filters)
   }
 
   /** RECOMMEND — seed-based retrieval: "more like these, less like
@@ -2317,16 +1907,8 @@ final class VectorEngine(
           .filter(col("embedding").isNotNull && !col("id").isin(seeds: _*))
           .select(col("id").as("chunk_id"),
             (maxSim(positiveIds) - negMax).as("score"))
-        val topk = scored
-          .orderBy(col("score").desc, col("chunk_id").asc)
-          .limit(k)
-        val hydrated = broadcast(topk)
-          .join(libChunks.withColumnRenamed("id", "chunk_id"), "chunk_id")
-        applyPost(hydrated, filters)
-          .select(col("chunk_id"), col("document_id"), col("score"),
-            col("text"), col("position"), col("metadata"),
-            col("created_at"), col("updated_at"))
-          .orderBy(col("score").desc, col("chunk_id").asc)
+        hitsOf(scored.orderBy(col("score").desc, col("chunk_id").asc).limit(k),
+          libChunks, filters)
       case other =>
         throw new ValidationError(s"recommend: unknown strategy: $other")
     }
@@ -2421,15 +2003,6 @@ final class VectorEngine(
       .orderBy(col("group_rank").asc, col("hit_rank").asc)
   }
 
-  /** The index family `search`/`searchBatchAnn` dispatch on for this
-    * library. "auto" searches whatever rebuildIndex resolved and built:
-    * LSH when it has planes, IVFPQ when it has a codes table, IVF when it
-    * has centroids, flat otherwise (pre-rebuild state). Rebuild drops the
-    * other family's tables, so at most one branch matches. IVFPQ is
-    * checked before IVF because the combined family also writes
-    * ivf_centroids (the shared coarse quantizer) — its codes table is the
-    * discriminating artifact.
-    */
   /** TEXT-QUERY SEARCH — closes the reference's embedding seam from the
     * query side: the reference's search endpoint takes a query EMBEDDING
     * (`api/routers/search.py`, dim-checked at `services/search.py:23-24`)
@@ -2471,12 +2044,11 @@ final class VectorEngine(
     search(libId, q, k, metric, filters, preFilter)
   }
 
-  /** Resolve "auto" to the family whose tables are actually built for
-    * this library — each family's DISCRIMINATING artifact, most specific
-    * first (the graph/compressed families also write ivf_centroids, so
-    * the shared coarse-quantizer tables decide nothing on their own).
-    * Covers all eight families (ADVICE r13: the dispatch predated five of
-    * them and silently fell back to the flat scan over a built index).
+  /** The library's effective `indexType` spelling: its config, or for
+    * "auto" whatever rebuildIndex resolved and built — the first of the
+    * families' marker tables ([[IndexFamily.markers]], in
+    * [[IndexFamily.all]] order, most specific first) that holds rows for
+    * it, flat before the first rebuild.
     */
   private def effectiveIndexType(libId: String, config: IndexConfig): String =
     if (config.indexType != "auto") config.indexType
@@ -2496,14 +2068,10 @@ final class VectorEngine(
   // table has a partition of THIS library (a filesystem stat) — another
   // library's index tables cost a cold `auto` resolution nothing
   private def probeIndexType(libId: String): String =
-    Seq("lsh_planes" -> "lsh", "hnsw_edges" -> "hnsw_det",
-        "nsw_edges" -> "nsw_det", "ivfpq_codes" -> "ivfpq",
-        "ivfsq8_codes" -> "ivfsq8", "ivfbq_codes" -> "ivfbq",
-        "pq_codes" -> "pq", "sq8_codes" -> "sq8", "bq_codes" -> "bq",
-        "ivf_centroids" -> "ivf")
-      .collectFirst { case (table, family)
+    IndexFamily.all.flatMap(_.markers)
+      .collectFirst { case (table, spelling)
           if store.hasLibraryPartition(table, libId) &&
-            !libPart(table, libId).isEmpty => family }
+            !libPart(table, libId).isEmpty => spelling }
       .getOrElse("flat")
 
   /** Batch kNN: N query vectors answered in ONE distributed pass — the
@@ -2610,32 +2178,14 @@ final class VectorEngine(
     * and that query set must itself be distributed. Input: (query_id:
     * long, qvec: array<float>); output: the batch hit shape. Nothing
     * query-dependent lands on the driver, except the graph families'
-    * bounded local finish below:
-    *
-    *   - flat: corpus x queries cross-score (exact — inherently the
-    *     cartesian), per-query k-bounded partial top-k;
-    *   - ivf: broadcast-centroid probe join -> per-query top-nprobe
-    *     partial agg -> postings equi-join on centroid_id;
-    *   - ivfpq: probe join as ivf, then the per-(query, cell) ADC
-    *     distance TABLE materialized on executors by the AdcDtab codegen
-    *     kernel (IvfPqIndex.adcDtabExpr — the same micro-unit floors as
-    *     the single-query driver dtab) and each candidate row summing M
-    *     lookups, so ranks (and the spec-asserted results) are
-    *     bit-identical to `search`;
-    *   - lsh: per-query multi-probe signatures as EXPRESSIONS (the same
-    *     sign-bit pack the bucket build codegens, planes as literals;
-    *     flips are xors over the bound base signature), ONE bucket
-    *     equi-join for all queries, per-query multiplicity rank +
-    *     oversample cap, and the reference's <k pad replayed
-    *     DISTRIBUTED: the pad pool is the globally-lowest bounded id
-    *     set (2k + capped ids always cover any query's deficit), so no
-    *     per-query driver counts exist;
-    *   - pq: flat-ADC against the codebook literal with the query itself
-    *     as the residual (no coarse quantizer), the single-query
-    *     PqIndex.dtabFlat floors computed on executors;
-    *   - nsw_det / hnsw_det: up to LocalAnnJoinCap queries run the
-    *     lockstep cached-cursor walks on the driver (with or without
-    *     `preFilter`); larger sets the distributed frontier-join walk.
+    * bounded local finish. Flat cross-scores corpus x queries (exact —
+    * inherently the cartesian); every index family generates candidates
+    * over the (query_id, qnorm) frame with executor-side expressions of
+    * the same arithmetic its single-query path folds into literals
+    * (probe joins, per-(query, cell) ADC tables, multi-probe signatures,
+    * packed query codes), so results equal N single `search` calls; the
+    * graph families walk up to LocalAnnJoinCap queries in lockstep on the
+    * driver and larger sets with the distributed frontier-join walk.
     *
     * Rows whose qvec dimension mismatches the library contribute no
     * rows. Zero-vector queries contribute no rows on INDEX paths
@@ -2674,436 +2224,138 @@ final class VectorEngine(
   private def annJoinOn(libId: String, q: DataFrame, nq: Long, k: Int,
       metric: String, filters: Option[SearchFilters],
       preFilter: Boolean): DataFrame = {
-    import spark.implicits._
-    val (dim, config, _) = getLibrary(libId)
-    val libChunks = chunks.filter(col("library_id") === libId)
-    val effType = effectiveIndexType(libId, config)
-
-    // preFilter restricts candidate generation, as in single `search`
-    val allowedIds = allowedIdsOf(libChunks, filters, preFilter)
-    def restrict(cands: DataFrame): DataFrame = restrictTo(allowedIds, cands)
+    val ctx = libCtx(libId)
+    val libChunks = ctx.chunks
+    val fam = ctx.family
     // float-normalized queries (zero vectors -> null -> dropped), the
     // same arithmetic as LshIndex.normalizeDriver
     val qn = q.select(col("query_id"),
         transform(l2Normalize(col("qvec")), _.cast("float")).as("qnorm"))
       .filter(col("qnorm").isNotNull)
-
+    // the exact rerank (quirk Q1: normalized stored vector x RAW query)
     def rerank(cands: DataFrame): DataFrame =
       cands.join(q, Seq("query_id"))
         .select(col("query_id"), col("chunk_id"),
           similarity(metric)(col("embedding_norm"), col("qvec")).as("score"))
-
-    def capPerQuery(cands: DataFrame, scoreCol: Column, cap: Int): DataFrame =
-      cands.select(col("query_id"), col("chunk_id"), scoreCol.cast("double"))
-        .as[(Long, String, Double)]
-        .groupByKey(_._1)
-        .agg(graft.functions.TopKAggregator.topKStr(cap).toColumn)
-        .flatMap { case (qid, hs) => hs.map(h => (qid, h._2)) }
-        .toDF("query_id", "chunk_id")
-
-    // broadcast-centroid probe: per-query top-nprobe via the k-bounded
-    // partial agg — (cscore desc, centroid_id asc), the single-path order
-    def probePairs(cents: DataFrame): DataFrame =
-      qn.crossJoin(broadcast(cents.select(col("centroid_id"), col("vector"))))
-        .select(col("query_id"), col("centroid_id").cast("long"),
-          dotProduct(col("vector"), col("qnorm")).as("cscore"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .agg(graft.functions.TopKAggregator.topK(
-          math.max(1, config.ivfNprobe)).toColumn)
-        .flatMap { case (qid, cs) => cs.map(c => (qid, c._2.toInt)) }
-        .toDF("query_id", "centroid_id")
-    // the probe pairs with each pair's FLOAT query residual against its
-    // cell centroid (zip_with — the encode arithmetic verbatim)
-    def probeResiduals(cents: DataFrame): DataFrame =
-      probePairs(cents)
-        .join(broadcast(cents.select(col("centroid_id"), col("vector"))),
-          Seq("centroid_id"))
-        .join(qn, Seq("query_id"))
-        .select(col("query_id"), col("centroid_id"),
-          zip_with(col("qnorm"), col("vector"), (a, b) => a - b).as("qres"))
-
-    // per-query cap of (query_id, chunk_id, dist_u) rows by (dist_u asc,
-    // chunk_id asc), then hydrate ONLY the capped candidates from the
-    // chunk store (the codes tables store no vectors) and exact-rerank
-    def capRerank(dists: DataFrame, oversample: Int): DataFrame =
-      rerank(candidateNorms(capPerQuery(dists, -col("dist_u"), oversample * k),
-        libChunks, perCandidate = false))
-
-    // binary families: query codes packed EXECUTOR-side from the qnorm
-    // column (the encode arithmetic verbatim), and the xor+popcount
-    // hamming of a packed code row against the row's `qcode`
-    def queryCodes: DataFrame = qn.select(col("query_id"),
-      array(BqIndex.packExprs(dim,
-        i => element_at(col("qnorm"), i + 1)): _*).as("qcode"))
-    def hammingU: Column = BqIndex.hammingExpr(BqIndex.words(dim),
-      w => element_at(col("qcode"), w + 1)).as("dist_u")
-
-    // `qside` is the query set, minus its zero vectors when an index
-    // family falls back because its structures are not built (quirk Q4
-    // holds on the fallback too); the graph branch passes the subset
-    // whose walks found nothing (per-query fallback, ADVICE r13)
-    def flatScoredFor(qside: DataFrame): DataFrame =
+    // the flat scan of `qside`: the whole batch on flat; minus the zero
+    // vectors when an index is not built (quirk Q4 holds on the fallback
+    // too); the graph walks' queries that visited nothing
+    def flatScored(qside: DataFrame): DataFrame =
       applyPre(libChunks, filters, preFilter)
         .filter(col("embedding").isNotNull)
         .crossJoin(qside)
         .select(col("query_id"), col("id").as("chunk_id"),
           similarity(metric)(col("embedding"), col("qvec")).as("score"))
-    def flatScored(): DataFrame = flatScoredFor(
-      if (effType == "flat") q else q.filter(exists(col("qvec"), _ =!= 0f)))
-
-    val scored: DataFrame = effType match {
-      case "flat" => flatScored()
-
-      case "ivf" | "ivf_det" =>
-        centroidsOf(libId) match {
-          case None => flatScored()
-          case Some(c) =>
-            val cands = restrict(ivfPostings(libId))
-              .join(probePairs(c), Seq("centroid_id"))
-              .select(col("query_id"), col("chunk_id"), col("embedding_norm"))
-              .dropDuplicates("query_id", "chunk_id")
-            rerank(cands)
-        }
-
-      case "nsw_det" | "hnsw_det" =>
-        // DISTRIBUTED beam walk: every query's beam lives in one frame —
-        // (query_id, chunk_id, s) — and each fixed round is one
-        // frontier-adjacency join + per-query top-beam window, so a
-        // corpus-scale query set never touches the driver. Rows per
-        // round are bounded by |queries| x beam x degree; per-round
-        // localCheckpoint truncates the iterative lineage (the K-round
-        // loop discipline). Scores/ties mirror graphWalk
-        // (float-normalized pairs, chunk_id asc), so per-query results
-        // land on the same hits. hnsw_det batches add the distributed
-        // greedy descent (hnswDescentSeeds) to each query's entry-cell
-        // pool, the same hybrid pool graphWalk seeds from.
-        val cents = centroidsOf(libId)
-        val walkAllowed = if (preFilter) allowedIds else None
-        val localWalked: Option[Seq[(Long, Seq[String])]] =
-          if (cents.isEmpty || !store.exists("nsw_edges") ||
-              nq > LocalAnnJoinCap || centroidArr(libId).isEmpty) None
-          else {
-            // BOUNDED LOCAL FINISH (optimization r16, the CC/pagerank
-            // local-finish discipline): an API-sized batch — nq is known
-            // exactly (annJoin's duplicate-id agg, or the Seq length
-            // searchBatchAnn passes) — runs the
-            // LOCKSTEP cached-cursor walks (graphWalk: the per-query
-            // protocol, one combined cursor fetch per round across all
-            // beams) instead of materializing the distributed descent +
-            // beam rounds as checkpointed stages. Hits are identical by
-            // the batch/single parity contract this branch has always
-            // promised (the oracle replays the per-query walk for the
-            // annJoin entries); per-query flat fallback and zero-vector
-            // exclusion mirror the distributed path's `missing` anti-join
-            // on qn. A preFilter batch gates the walks as the single-query
-            // walk does (one id-pushed semi probe per round over all
-            // beams). Corpus-scale query sets (> LocalAnnJoinCap) and
-            // centroid sets too large to cache keep the distributed
-            // frontier-join walk below.
-            val qRows = qn.collect()
-              .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-            Some(graphWalk(libId, config, math.max(config.nswBeam, k), qRows,
-              hnsw = effType == "hnsw_det", walkAllowed))
-          }
-        if (cents.isEmpty || !store.exists("nsw_edges")) flatScored()
-        else if (localWalked.isDefined) {
-          val walked = localWalked.get
-          val posts = ivfPostings(libId)
-          val pairs = walked.flatMap { case (qid, ids) =>
-            ids.map(id => (qid, id)) }
-          val hitPart = rerank(spark.createDataset(pairs)
-            .toDF("query_id", "chunk_id")
-            .join(posts.select(col("chunk_id"), col("embedding_norm")),
-              Seq("chunk_id")))
-          val missedIds = walked.collect { case (qid, ids) if ids.isEmpty => qid }
-          if (missedIds.isEmpty) hitPart
-          else hitPart.unionAll(flatScoredFor(
-            q.filter(col("query_id").isin(missedIds.map(Long.box): _*))))
-        } else {
-          val beamW = math.max(config.nswBeam, k)
-          val posts = ivfPostings(libId)
-          val edges = nswEdges(libId)
-          // entry cell per query via the argmax kernel over the
-          // metadata-scale centroid literal (seedCentroids ids are
-          // contiguous 0..K-1 in centroid_id order, the assign contract)
-          val centArr = cents.get.orderBy(col("centroid_id")).collect()
-            .map(_.getSeq[Float](2).map(_.toDouble).toArray)
-          val entry = qn.select(col("query_id"), col("qnorm"),
-            graft.functions.PqExpressions.argmaxDot(
-              transform(col("qnorm"), _.cast("double")), centArr)
-              .as("centroid_id"))
-          val wBeam = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("s").desc, col("chunk_id").asc)
-          def topBeam(v: DataFrame): DataFrame =
-            v.withColumn("rn", row_number().over(wBeam))
-              .filter(col("rn") <= beamW)
-              .select(col("query_id"), col("chunk_id"))
-          // per-query seed pools: the entry cell's members (the nsw
-          // pool), and for hnsw_det ALSO the distributed greedy descent's
-          // result + its layer-0 neighborhood — the same hybrid pool the
-          // single-query walk seeds from, so batch/single parity holds
-          val cellSeeds = posts.join(entry, Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"), col("embedding_norm"))
-          val seeds =
-            if (effType != "hnsw_det") cellSeeds
-            else hnswDescentSeeds(libId, config, qn, posts, edges)
-              .fold(cellSeeds) { d =>
-                cellSeeds.unionAll(
-                  d.join(posts.select(col("chunk_id"), col("embedding_norm")),
-                    Seq("chunk_id"))
-                    .select(col("query_id"), col("chunk_id"),
-                      col("embedding_norm")))
-                  .dropDuplicates("query_id", "chunk_id")
-              }
-          // preFilter gates every id the walk may SCORE — the seed pool
-          // and each round's frontier — exactly as the pre-filtered
-          // graphWalk does, so batch/single parity holds in both filter
-          // modes
-          val walkSeeds =
-            if (preFilter) restrict(seeds) else seeds
-          var visited = topBeam(
-            walkSeeds
-              .join(qn, Seq("query_id"))
-              .select(col("query_id"), col("chunk_id"),
-                dotProduct(col("embedding_norm"), col("qnorm")).as("s")))
-            .join(posts.select(col("chunk_id"), col("embedding_norm")),
-              Seq("chunk_id"))
-            .join(qn, Seq("query_id"))
-            .select(col("query_id"), col("chunk_id"),
-              dotProduct(col("embedding_norm"), col("qnorm")).as("s"))
-            .localCheckpoint()
-          var beam = visited.select(col("query_id"), col("chunk_id"))
-          var round = 0
-          while (round < config.nswRounds) {
-            val frontier = edges
-              .join(beam.withColumnRenamed("chunk_id", "src_id"),
-                Seq("src_id"))
-              .select(col("query_id"), col("dst_id").as("chunk_id"))
-              .distinct()
-            val scoredNbrs =
-              (if (preFilter) restrict(frontier) else frontier)
-              .join(posts.select(col("chunk_id"), col("embedding_norm")),
-                Seq("chunk_id"))
-              .join(qn, Seq("query_id"))
-              .select(col("query_id"), col("chunk_id"),
-                dotProduct(col("embedding_norm"), col("qnorm")).as("s"))
-            // duplicate (query, node) rows carry identical recomputed
-            // scores, so the dedup is deterministic
-            visited = visited.unionAll(scoredNbrs)
-              .dropDuplicates("query_id", "chunk_id")
-              .localCheckpoint()
-            beam = topBeam(visited)
-            round += 1
-          }
-          val cands = restrict(
-            visited.select(col("query_id"), col("chunk_id"))
-              .join(posts.select(col("chunk_id"), col("embedding_norm")),
-                Seq("chunk_id")))
-          // a query whose entry cell was emptied by deletes has no vis0
-          // rows and would survive every round empty — flat-fall-back for
-          // exactly those queries, matching the single-query walk
-          // (ADVICE r13). One id-only left_anti + isEmpty probe; in the
-          // common no-miss case the corpus scan below never runs.
-          // anchored on qn, not q: zero-vector queries (dropped by the
-          // normalize) stay absent from the output, as single `search`
-          // returns empty for them (quirk Q4)
-          val missing = q
-            .join(qn.select("query_id")
-                .join(visited.select("query_id").distinct(),
-                  Seq("query_id"), "left_anti"),
-              Seq("query_id"), "left_semi")
-            .localCheckpoint()
-          if (missing.isEmpty) rerank(cands)
-          else rerank(cands).unionAll(flatScoredFor(missing))
-        }
-
-      case "ivfpq" | "ivfpq_trained" =>
-        val cents = centroidsOf(libId)
-        val cb =
-          if (cents.isEmpty || !store.exists("pq_codebooks"))
-            Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flatScored()
-        else {
-          // each pair's residual folded straight into the per-pair ADC
-          // TABLE by the codegen kernel — candidate rows below do M
-          // lookups each, never a dot
-          val pairsFull = probeResiduals(cents.get)
-            .select(col("query_id"), col("centroid_id"),
-              IvfPqIndex.adcDtabExpr(col("qres"), cb).as("dtab"))
-          capRerank(restrict(ivfpqCodes(libId))
-            .join(pairsFull, Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"),
-              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u")),
-            IvfPqIndex.Oversample)
-        }
-
-      case "lsh" | "lsh_det" =>
-        val planes =
-          if (!store.exists("lsh_planes")) Nil
-          else LshIndex.collectPlanes(lshPlanes(libId))
-        if (planes.isEmpty) flatScored()
-        else {
-          // base signature per table as the SAME sign-bit-pack expression
-          // the bucket build codegens (planes ship as literals); the first
-          // explode binds it to an attribute, so the Hamming-1 multi-probe
-          // flips are H cheap xors, not H recomputations — L*(H+1) probe
-          // rows per query, map-only over the query set
-          val sigStructs = planes.map { case (t, ps) =>
-            val bits = ps.zipWithIndex.map { case (p, i) =>
-              when(dotProduct(col("qnorm"), typedLit(p.toSeq)) >= 0.0,
-                lit(1L << i)).otherwise(lit(0L))
-            }
-            struct(lit(t).as("table_id"), bits.reduce(_ + _).as("sig"))
-          }
-          val nBits = planes.head._2.length
-          val baseSigs = qn
-            .select(col("query_id"), explode(array(sigStructs: _*)).as("ts"))
-            .select(col("query_id"), col("ts.table_id").as("table_id"),
-              col("ts.sig").as("sig"))
-          val flips = col("sig") +: (0 until nBits).map(i =>
-            col("sig").bitwiseXOR(lit(1L << i)))
-          val probes = baseSigs.select(col("query_id"), col("table_id"),
-            explode(array(flips: _*)).as("signature"))
-          val buckets = restrict(lshBuckets(libId))
-          val ranked = buckets
-            .join(probes, Seq("table_id", "signature"))
-            .groupBy(col("query_id"), col("chunk_id"))
-            .agg(count(lit(1)).as("n_matches"))
-          // materialized: the pad's count-agg + anti-join + union all read
-          // it; released at suite end via the Caches registry
-          val capped = graft.Caches.track(
-            capPerQuery(ranked, col("n_matches"), LshIndex.Oversample * k)
-              .localCheckpoint())
-          val norms = buckets.select(col("chunk_id"), col("embedding_norm"))
-            .dropDuplicates("chunk_id")
-          // the reference's <k fallback pad (lsh.py:101-110), DISTRIBUTED:
-          // deficient queries and their deficits are a DataFrame (one
-          // aggregation over the live query ids unioned with the cap, so
-          // zero-candidate queries count too), and the pad pool is the
-          // globally-lowest (2k + Oversample*k) indexed ids — a bounded
-          // broadcastable set that always covers a query's need (need +
-          // excluded <= pool size), so no per-query counts ever land on
-          // the driver. The pad is planned only when some query is short
-          // of k candidates (one isEmpty probe over the checkpointed cap):
-          // a full-cap batch skips the pool sort, cross join and window.
-          val deficient = qn.select(col("query_id"), lit(0L).as("one"))
-            .unionAll(capped.select(col("query_id"), lit(1L).as("one")))
-            .groupBy(col("query_id"))
-            .agg(sum(col("one")).as("have"))
-            .filter(col("have") < k)
-            .withColumn("need", lit(2L * k) - col("have"))
-          val pool = norms.select(col("chunk_id"))
-            .orderBy(col("chunk_id").asc)
-            .limit(2 * k + LshIndex.Oversample * k)
-          val padW = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id")).orderBy(col("chunk_id").asc)
-          val pad = deficient.crossJoin(broadcast(pool))
-            .join(capped, Seq("query_id", "chunk_id"), "left_anti")
-            .withColumn("rn", row_number().over(padW))
-            .filter(col("rn") <= col("need"))
-            .select(col("query_id"), col("chunk_id"))
-          val withPad = if (deficient.isEmpty) capped else capped.unionAll(pad)
-          rerank(norms.join(withPad, Seq("chunk_id")))
-        }
-
-      case "pq" | "pq_trained" =>
-        val cb =
-          if (!store.exists("pq_codebooks")) Array.empty[Array[Array[Float]]]
-          else PqIndex.collectCodebooks(pqCodebooks(libId))
-        if (cb.isEmpty) flatScored()
-        else {
-          // flat-ADC: the query residual IS the normalized query (no
-          // coarse quantizer); its per-query distance table carries the
-          // same per-subspace micro-unit floors as the driver dtab
-          // (PqIndex.dtabFlat), so ranks are bit-identical to single
-          // `search` — and the codes x queries cross is the inherent flat-PQ
-          // scan shape (every code row is M table lookups per query)
-          val qrs = qn.select(col("query_id"),
-            IvfPqIndex.adcDtabExpr(col("qnorm"), cb).as("dtab"))
-          // explicit build-side hint: the query frame is always the small
-          // side, and without the hint a stats-less query plan (LogicalRDD
-          // defaults) would fall to a CartesianProduct over the full codes
-          // table (VERDICT r14 #2)
-          val dists = restrict(pqCodes(libId))
-            .crossJoin(broadcast(qrs))
-            .select(col("query_id"), col("chunk_id"),
-              IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u"))
-          val capped = capPerQuery(dists, -col("dist_u"), PqIndex.Oversample * k)
-          val norms = pqCodes(libId).select(col("chunk_id"), col("embedding_norm"))
-          rerank(norms.join(capped, Seq("chunk_id")))
-        }
-
-      case "ivfbq" =>
-        val ibqCents = centroidsOf(libId)
-        val ibqDf = if (store.exists("ivfbq_codes")) ivfbqCodes(libId) else null
-        if (ibqCents.isEmpty || ibqDf == null || ibqDf.isEmpty) flatScored()
-        else {
-          // query codes joined onto the (query, cell) probe pairs — the
-          // inverted-list equi-join does the pruning
-          val pairsQc = probePairs(ibqCents.get).join(queryCodes, Seq("query_id"))
-          capRerank(restrict(ibqDf)
-            .join(broadcast(pairsQc), Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"), hammingU),
-            IvfBqIndex.Oversample)
-        }
-
-      case "bq" =>
-        val bqDf = if (store.exists("bq_codes")) bqCodes(libId) else null
-        if (bqDf == null || bqDf.isEmpty) flatScored()
-        else {
-          // hamming against the packed scan; broadcast the query frame
-          // explicitly, as the pq branch
-          capRerank(restrict(bqDf)
-            .crossJoin(broadcast(queryCodes))
-            .select(col("query_id"), col("chunk_id"), hammingU),
-            BqIndex.Oversample)
-        }
-
-      case "sq8" =>
-        val p =
-          if (!store.exists("sq8_params")) Array.empty[(Double, Double)]
-          else Sq8Index.collectParams(sq8Params(libId))
-        if (p.isEmpty) flatScored()
-        else {
-          // plan-literal ranges x query table: per-dim decode-approx L2
-          // in integer micro-units — the same shared [[Sq8Index.distExpr]]
-          // arithmetic as the single-query scan with the query side read
-          // from the qnorm column; the codes x queries cross is the
-          // inherent flat-scan shape (every code row scores every query)
-          // broadcast the query frame explicitly, as the pq branch above
-          capRerank(restrict(sq8Codes(libId))
-            .crossJoin(broadcast(qn))
-            .select(col("query_id"), col("chunk_id"),
-              Sq8Index.distExpr(p,
-                i => element_at(col("qnorm"), i + 1).cast("double")).as("dist_u")),
-            Sq8Index.Oversample)
-        }
-
-      case "ivfsq8" =>
-        val cents = centroidsOf(libId)
-        val pmap =
-          if (cents.isEmpty || !store.exists("ivfsq8_params"))
-            Map.empty[Int, Array[(Double, Double)]]
-          else IvfSq8Index.collectParams(ivfsq8Params(libId))
-        if (pmap.isEmpty) flatScored()
-        else {
-          // candidate rows decode against the cell's metadata-scale
-          // map-literal ranges and the pair's query residual
-          capRerank(restrict(ivfsq8Codes(libId))
-            .join(probeResiduals(cents.get), Seq("centroid_id"))
-            .select(col("query_id"), col("chunk_id"),
-              IvfSq8Index.adcDistExpr(pmap).as("dist_u")),
-            IvfSq8Index.Oversample)
-        }
-
-      case other =>
-        throw new ValidationError(s"annJoin: unknown index type '$other'")
+    val scored = fam.load(ctx) match {
+      case None =>
+        flatScored(if (fam.indexed) q.filter(exists(col("qvec"), _ =!= 0f)) else q)
+      case Some(st) =>
+        val c = fam.candidates(ctx, st,
+          Batch(q, qn, nq, k, allowedIdsOf(libChunks, filters, preFilter)))
+        c.flatQueries.fold(rerank(c.rows))(f => rerank(c.rows).unionAll(flatScored(f)))
     }
-
     batchTopKHydrate(scored, libChunks, k, filters, nq)
+  }
+
+  /** DISTRIBUTED graph walk for annJoin past the local-finish cap: every
+    * query's beam lives in one frame — (query_id, chunk_id, s) — and each
+    * fixed round is one frontier-adjacency join + per-query top-beam
+    * window, so a corpus-scale query set never touches the driver. Rows
+    * per round are bounded by |queries| x beam x degree; per-round
+    * localCheckpoint truncates the iterative lineage (the K-round loop
+    * discipline). Scores/ties mirror graphWalk (float-normalized pairs,
+    * chunk_id asc), so per-query results land on the same hits; hnsw
+    * batches add the distributed greedy descent ([[hnswDescentSeeds]]) to
+    * each query's entry-cell pool, the same hybrid pool graphWalk seeds
+    * from. A pre-filter gates every id the walk may SCORE — the seed pool
+    * and each round's frontier — as the pre-filtered graphWalk does.
+    * Returns the visited (query_id, chunk_id, embedding_norm) rows and
+    * the (query_id, qvec) queries that visited nothing.
+    */
+  private def frontierWalk(libId: String, config: IndexConfig, b: Batch,
+      beamW: Int, hnsw: Boolean): (DataFrame, DataFrame) = {
+    val qn = b.qn
+    val posts = ivfPostings(libId)
+    val edges = nswEdges(libId)
+    // entry cell per query via the argmax kernel over the metadata-scale
+    // centroid literal (seedCentroids ids are contiguous 0..K-1 in
+    // centroid_id order, the assign contract)
+    val centArr = ivfCentroids(libId).orderBy(col("centroid_id")).collect()
+      .map(_.getSeq[Float](2).map(_.toDouble).toArray)
+    val entry = qn.select(col("query_id"), col("qnorm"),
+      graft.functions.PqExpressions.argmaxDot(
+        transform(col("qnorm"), _.cast("double")), centArr)
+        .as("centroid_id"))
+    val wBeam = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("s").desc, col("chunk_id").asc)
+    def topBeam(v: DataFrame): DataFrame =
+      v.withColumn("rn", row_number().over(wBeam))
+        .filter(col("rn") <= beamW)
+        .select(col("query_id"), col("chunk_id"))
+    // per-query seed pools: the entry cell's members (the nsw pool), and
+    // for hnsw ALSO the distributed greedy descent's result + its layer-0
+    // neighborhood
+    val cellSeeds = posts.join(entry, Seq("centroid_id"))
+      .select(col("query_id"), col("chunk_id"), col("embedding_norm"))
+    val seeds =
+      if (!hnsw) cellSeeds
+      else hnswDescentSeeds(libId, config, qn, posts, edges)
+        .fold(cellSeeds) { d =>
+          cellSeeds.unionAll(
+            d.join(posts.select(col("chunk_id"), col("embedding_norm")),
+              Seq("chunk_id"))
+              .select(col("query_id"), col("chunk_id"),
+                col("embedding_norm")))
+            .dropDuplicates("query_id", "chunk_id")
+        }
+    var visited = topBeam(
+      b.restrict(seeds)
+        .join(qn, Seq("query_id"))
+        .select(col("query_id"), col("chunk_id"),
+          dotProduct(col("embedding_norm"), col("qnorm")).as("s")))
+      .join(posts.select(col("chunk_id"), col("embedding_norm")),
+        Seq("chunk_id"))
+      .join(qn, Seq("query_id"))
+      .select(col("query_id"), col("chunk_id"),
+        dotProduct(col("embedding_norm"), col("qnorm")).as("s"))
+      .localCheckpoint()
+    var beam = visited.select(col("query_id"), col("chunk_id"))
+    var round = 0
+    while (round < config.nswRounds) {
+      val frontier = edges
+        .join(beam.withColumnRenamed("chunk_id", "src_id"), Seq("src_id"))
+        .select(col("query_id"), col("dst_id").as("chunk_id"))
+        .distinct()
+      val scoredNbrs = b.restrict(frontier)
+        .join(posts.select(col("chunk_id"), col("embedding_norm")),
+          Seq("chunk_id"))
+        .join(qn, Seq("query_id"))
+        .select(col("query_id"), col("chunk_id"),
+          dotProduct(col("embedding_norm"), col("qnorm")).as("s"))
+      // duplicate (query, node) rows carry identical recomputed scores,
+      // so the dedup is deterministic
+      visited = visited.unionAll(scoredNbrs)
+        .dropDuplicates("query_id", "chunk_id")
+        .localCheckpoint()
+      beam = topBeam(visited)
+      round += 1
+    }
+    val cands = b.restrict(
+      visited.select(col("query_id"), col("chunk_id"))
+        .join(posts.select(col("chunk_id"), col("embedding_norm")),
+          Seq("chunk_id")))
+    // a query whose entry cell was emptied by deletes has no vis0 rows and
+    // survives every round empty — it flat-falls-back, matching the
+    // single-query walk (ADVICE r13); anchored on qn, so zero-vector
+    // queries stay absent from the output (quirk Q4)
+    val missing = b.q
+      .join(qn.select("query_id")
+          .join(visited.select("query_id").distinct(),
+            Seq("query_id"), "left_anti"),
+        Seq("query_id"), "left_semi")
+      .localCheckpoint()
+    (cands, missing)
   }
 
   /** STREAMING ANN through the index tables (the 100 TB online-serving
@@ -3137,79 +2389,13 @@ final class VectorEngine(
     */
   def annJoinStream(libIdOrAlias: String, queries: DataFrame, k: Int,
       metric: String = "cosine"): DataFrame = {
-    val libId = resolveLibrary(libIdOrAlias)
-    val (dim, config, _) = getLibrary(libId)
+    val ctx = libCtx(resolveLibrary(libIdOrAlias))
     requireTopK(k, metric)
-    import spark.implicits._
-    val effType = effectiveIndexType(libId, config)
-    if (!Set("ivfpq", "ivfpq_trained", "ivfsq8").contains(effType))
-      throw new ValidationError(
-        s"annJoinStream probes the ivfpq/ivfsq8 index tables; library is '$effType'")
-    val isIvfSq8 = effType == "ivfsq8"
-    val cb =
-      if (isIvfSq8 || !store.exists("pq_codebooks"))
-        Array.empty[Array[Array[Float]]]
-      else PqIndex.collectCodebooks(pqCodebooks(libId))
-    val pmap =
-      if (!isIvfSq8 || !store.exists("ivfsq8_params"))
-        Map.empty[Int, Array[(Double, Double)]]
-      else IvfSq8Index.collectParams(ivfsq8Params(libId))
-    val centArr: Array[(Int, Array[Float])] =
-      if (!store.exists("ivf_centroids")) Array.empty
-      else ivfCentroids(libId).select(col("centroid_id"), col("vector"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
-    if ((if (isIvfSq8) pmap.isEmpty else cb.isEmpty) || centArr.isEmpty)
-      throw new ValidationError(s"annJoinStream: $effType index is not built")
-    val nprobe = math.max(1, config.ivfNprobe)
-
-    val qn = queries
-      .select(col("query_id").cast("long").as("query_id"), col("qvec"))
-      .filter(size(col("qvec")) === dim)
-      .select(col("query_id"), col("qvec"),
-        transform(l2Normalize(col("qvec")), _.cast("float")).as("qnorm"))
-      .filter(col("qnorm").isNotNull)
-
-    val probeStructs = centArr.map { case (cid, cv) =>
-      struct((-dotProduct(typedLit(cv.toSeq), col("qnorm"))).as("nd"),
-        lit(cid).as("cid"))
+    ctx.family match {
+      case r: ResidualFamily => r.stream(ctx, queries, k, metric)
+      case _ => throw new ValidationError(
+        s"annJoinStream probes the ivfpq/ivfsq8 index tables; library is '${ctx.spelling}'")
     }
-    val cvecMap = typedLit(centArr.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-    val topCells = qn
-      .select(col("query_id"), col("qvec"), col("qnorm"),
-        explode(slice(array_sort(array(probeStructs.toIndexedSeq: _*)), 1, nprobe)).as("pc"))
-    // per probe row, the family's query-side table: ivfpq carries the
-    // per-cell ADC dtab; ivfsq8 carries the per-cell FLOAT query
-    // residual consumed directly by the looping dist kernel
-    val probed =
-      if (isIvfSq8)
-        topCells.select(col("query_id"), col("qvec"),
-          col("pc.cid").as("centroid_id"),
-          zip_with(col("qnorm"), element_at(cvecMap, col("pc.cid")),
-            (a, b) => a - b).as("qres"))
-      else
-        topCells.select(col("query_id"), col("qvec"),
-          col("pc.cid").as("centroid_id"),
-          IvfPqIndex.adcDtabExpr(
-            zip_with(col("qnorm"), element_at(cvecMap, col("pc.cid")),
-              (a, b) => a - b), cb).as("dtab"))
-
-    val codes = (if (isIvfSq8) ivfsq8Codes(libId) else ivfpqCodes(libId))
-      .select(col("centroid_id"), col("chunk_id"), col("codes"))
-    val distU =
-      if (isIvfSq8) IvfSq8Index.adcDistExpr(pmap)
-      else IvfPqIndex.adcDistExpr(cb.length, cb(0).length)
-    val oversample =
-      if (isIvfSq8) IvfSq8Index.Oversample else IvfPqIndex.Oversample
-    val cands = candidateNorms(probed.join(codes, Seq("centroid_id")),
-        chunks.filter(col("library_id") === libId), perCandidate = false)
-      .select(col("query_id"), col("chunk_id"), distU.as("dist_u"),
-        similarity(metric)(col("embedding_norm"), col("qvec")).as("score"))
-    cands.as[(Long, String, Long, Double)]
-      .groupByKey(_._1)
-      .agg(graft.functions.CapRerankAggregator
-        .capRerank(oversample * k, k).toColumn)
-      .toDF("query_id", "hits")
   }
 
   /** CURATION VERB over the library's versioned chunk store (the
@@ -3645,35 +2831,48 @@ final class VectorEngine(
         .select("chunk_id"))
     else None
 
-  private def restrictTo(allowed: Option[DataFrame], cands: DataFrame): DataFrame =
-    allowed.fold(cands)(a => cands.join(a, Seq("chunk_id"), "left_semi"))
-
-  /** The exact-rerank input of the families whose index stores no
-    * vectors (bq, ivfbq, sq8, ivfsq8, ivfpq): `cands` joined to the
-    * library's embeddings, with the float-normalized vector as
-    * `embedding_norm`; every column of `cands` is kept, and the caller
-    * decides whether `cands` is broadcast. With `perCandidate` the
-    * normalize runs after the join, so only a single query's <= cap
-    * candidates pay it; a batch's candidate rows repeat chunks across
-    * queries and outnumber the library in a self-join (library x cap),
-    * so batches and streams normalize the library side before the join.
+  /** One library's index as its [[IndexFamily]] sees it: the catalog
+    * row, the library's table partitions, and the engine's memoized cells
+    * and graph walks. The effective spelling is resolved on first use by
+    * `resolve` (an `auto` library's probe costs jobs), the chunk
+    * partition is read once on first use.
     */
-  private def candidateNorms(cands: DataFrame, libChunks: DataFrame,
-      perCandidate: Boolean): DataFrame = {
-    val emb = libChunks.filter(col("embedding").isNotNull)
-      .select(col("id").as("chunk_id"), col("embedding"))
-    def normalized(df: DataFrame): DataFrame =
-      df.withColumn("embedding_norm",
-          transform(l2Normalize(col("embedding")), _.cast("float")))
-        .drop("embedding")
-    if (perCandidate) normalized(cands.join(emb, "chunk_id"))
-    else normalized(emb).join(cands, "chunk_id")
+  private final class LibCtx(val libId: String, resolve: LibCtx => String)
+      extends IndexContext {
+    private val lib = getLibrary(libId)
+    val dim: Int = lib._1
+    val config: IndexConfig = lib._2
+    lazy val spelling: String = resolve(this)
+    lazy val family: IndexFamily = IndexFamily.of(spelling)
+    lazy val chunks: DataFrame =
+      VectorEngine.this.chunks.filter(col("library_id") === libId)
+    def spark: SparkSession = VectorEngine.this.spark
+    def lshSeed: Long = VectorEngine.this.lshSeed
+    def exists(table: String): Boolean = store.exists(table)
+    def part(table: String): DataFrame = libPart(table, libId)
+    def write(table: String, df: DataFrame): Unit =
+      store.writeLibraryPartition(table, libId, df)
+    def append(table: String, df: DataFrame): Unit =
+      store.appendLibraryPartition(table, libId, df)
+    def built(tables: String*): Option[Seq[DataFrame]] =
+      if (!tables.forall(store.exists)) None
+      else Some(tables.map(part)).filterNot(_.exists(_.isEmpty))
+    def centroidArr: Option[IndexedSeq[(Int, Array[Float])]] =
+      VectorEngine.this.centroidArr(libId)
+    def probe(qn: Array[Float]): Array[(Int, Array[Float])] =
+      probeCells(libId, qn, math.max(1, config.ivfNprobe))
+    def graphWalk(beamW: Int, queries: Seq[(Long, Array[Float])], hnsw: Boolean,
+        allowed: Option[DataFrame]): Seq[(Long, Seq[String])] =
+      VectorEngine.this.graphWalk(libId, config, beamW, queries, hnsw, allowed)
+    def frontierWalk(b: Batch, beamW: Int, hnsw: Boolean): (DataFrame, DataFrame) =
+      VectorEngine.this.frontierWalk(libId, config, b, beamW, hnsw)
+    def localFinish(nq: Long): Boolean =
+      nq <= LocalAnnJoinCap && centroidArr.isDefined
   }
 
-  /** The library's coarse-quantizer centroid table, None when not built. */
-  private def centroidsOf(libId: String): Option[DataFrame] =
-    if (!store.exists("ivf_centroids")) None
-    else Some(ivfCentroids(libId)).filterNot(_.isEmpty)
+  /** The library's index context under its effective spelling. */
+  private def libCtx(libId: String): LibCtx =
+    new LibCtx(libId, c => effectiveIndexType(libId, c.config))
 
   /** Flat scoring: raw stored vectors (quirk Q1). */
   private def flatScore(libChunks: DataFrame, query: Array[Float],
@@ -4231,17 +3430,6 @@ final class VectorEngine(
       out
     }
 
-  private def emptyHits(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("chunk_id", StringType), StructField("document_id", StringType),
-      StructField("score", DoubleType), StructField("text", StringType),
-      StructField("position", IntegerType),
-      StructField("metadata", Schemas.chunkMetadataType),
-      StructField("created_at", TimestampType),
-      StructField("updated_at", TimestampType))))
-  }
-
   // ---- shared helpers -------------------------------------------------
 
   /** Index-config bounds (reference `models/indexing.py:6-13` + DTO
@@ -4250,8 +3438,7 @@ final class VectorEngine(
     * 1..1024.
     */
   private def validateConfig(config: IndexConfig): Unit = {
-    if (!Schemas.indexTypes(config.indexType))
-      throw new ValidationError(s"unknown index type: ${config.indexType}")
+    if (config.indexType != "auto") IndexFamily.of(config.indexType)
     def bound(v: Int, lo: Int, hi: Int, name: String): Unit =
       if (v < lo || v > hi)
         throw new ValidationError(s"$name out of range [$lo,$hi]: $v")
@@ -4290,100 +3477,22 @@ final class VectorEngine(
     }
 
   /** Incremental index ADD for new/updated chunks (reference
-    * `chunk.py:69-73`), dispatched once on the library's family — for
-    * `auto`, the family whose tables are built for this library, resolved
-    * before this add invalidates the cached resolution. Each arm appends
-    * to its family's tables against the FROZEN build-time state (LSH
-    * hashes with the stored planes, the celled families assign to the
-    * existing centroids, the quantizers encode against the stored
+    * `chunk.py:69-73`) through the library's family — for `auto`, the
+    * family whose tables are built for this library, resolved before this
+    * add invalidates the cached resolution. Each family appends to its
+    * tables against the FROZEN build-time state (LSH hashes with the
+    * stored planes, the celled families assign to the existing
+    * centroids, the quantizers encode against the stored
     * codebooks/ranges: no re-train between rebuilds); flat needs nothing,
     * and a family whose index is not built yet adds nothing.
     */
   private def addToIndexes(libId: String, newChunks: DataFrame): Unit = {
-    val (dim, config, _) = getLibrary(libId)
-    val family = effectiveIndexType(libId, config)
+    val ctx = libCtx(libId)
+    val fam = ctx.family
     // index-state mutation: the cached family resolution / hnsw walk
     // metadata may be about to change (e.g. the first add after a wipe)
     invalidateIndexMeta(libId)
-    // this library's rows of the family's frozen build-time tables, when
-    // it holds rows in every one; all tables' existence is checked before
-    // any per-library emptiness job
-    def built(tables: String*): Option[Seq[DataFrame]] =
-      if (!tables.forall(store.exists)) None
-      else Some(tables.map(libPart(_, libId))).filterNot(_.exists(_.isEmpty))
-    family match {
-      case "lsh" | "lsh_det" =>
-        built("lsh_planes").foreach { case Seq(planes) =>
-          store.appendLibraryPartition("lsh_buckets", libId,
-            LshIndex.buildBuckets(newChunks, planes, libId))
-        }
-      case "ivf" | "ivf_det" =>
-        built("ivf_centroids").foreach { case Seq(cents) =>
-          store.appendLibraryPartition("ivf_postings", libId,
-            IvfIndex.assignToCentroids(newChunks, cents, libId))
-        }
-      case "nsw_det" | "hnsw_det" =>
-        built("ivf_centroids").foreach { case Seq(cents) =>
-          // edge rows first: edgesForNew probes the PRE-BATCH postings
-          // (candidates = the existing corpus only — in-batch pairs are
-          // excluded by the add-after-build contract), and the edge write
-          // MATERIALIZES that probe before the posting append below makes
-          // the batch visible
-          val newEdges = graft.index.NswIndex.edgesForNew(newChunks, cents,
-            ivfPostings(libId), libId, config.ivfNprobe, config.nswDegree)
-          store.appendLibraryPartition("nsw_edges", libId, newEdges)
-          if (family == "hnsw_det") {
-            // per-layer delta links against the frozen hierarchy, same
-            // pre-batch discipline (and the same write-before-append
-            // ordering as the base edges above)
-            val newLayers = graft.index.HnswIndex.layersForNew(newChunks,
-              cents, ivfPostings(libId), libId, config.ivfNprobe,
-              config.nswDegree)
-            store.appendLibraryPartition("hnsw_edges", libId, newLayers)
-          }
-          store.appendLibraryPartition("ivf_postings", libId,
-            IvfIndex.assignToCentroids(newChunks, cents, libId))
-        }
-      case "pq" | "pq_trained" =>
-        built("pq_codebooks").foreach { case Seq(cb) =>
-          store.appendLibraryPartition("pq_codes", libId,
-            PqIndex.encode(newChunks, cb, libId))
-        }
-      case "ivfpq" | "ivfpq_trained" =>
-        // assign + residual-encode against EXISTING cells/codebooks
-        built("ivf_centroids", "pq_codebooks").foreach { case Seq(cents, cb) =>
-          store.appendLibraryPartition("ivfpq_codes", libId,
-            IvfPqIndex.encode(newChunks, cents, cb, libId))
-        }
-      case "sq8" =>
-        // encode against FROZEN ranges (clamped)
-        built("sq8_params").foreach { case Seq(params) =>
-          store.appendLibraryPartition("sq8_codes", libId,
-            Sq8Index.encode(newChunks, params, libId))
-        }
-      case "bq" =>
-        // stateless encode: nothing frozen to respect, so incremental
-        // maintenance IS the rebuild (bit-identical codes either way)
-        built("bq_codes").foreach { _ =>
-          store.appendLibraryPartition("bq_codes", libId,
-            BqIndex.encode(newChunks, libId, dim))
-        }
-      case "ivfbq" =>
-        // assign to the FROZEN build-time cells (the family contract),
-        // stateless packing on the new rows
-        built("ivf_centroids", "ivfbq_codes").foreach { case Seq(cents, _) =>
-          store.appendLibraryPartition("ivfbq_codes", libId,
-            IvfBqIndex.build(newChunks, cents, libId, dim))
-        }
-      case "ivfsq8" =>
-        // assign to FROZEN cells, clamp-encode against FROZEN ranges
-        built("ivf_centroids", "ivfsq8_params").foreach {
-          case Seq(cents, params) =>
-            store.appendLibraryPartition("ivfsq8_codes", libId,
-              IvfSq8Index.encode(newChunks, cents, params, libId))
-        }
-      case _ => () // flat: scored from the chunk table at query time
-    }
+    fam.add(ctx, newChunks)
   }
 
   /** Index REMOVE: an anti-join rewrite of this library's partition of
@@ -4490,18 +3599,18 @@ case class LayoutDecision(
     optimized: Boolean,
     nFilesAfter: Int)
 
-/** Per-library stats snapshot (see [[VectorEngine.libraryStats]]). */
+/** Per-library stats snapshot (see [[VectorEngine.libraryStats]]):
+  * `builtIndex` is the effective `indexType` spelling of the index the
+  * library holds (e.g. "hnsw_det" for an hnsw library, the resolved tier
+  * for `auto`), None when it holds none.
+  */
 case class LibraryStats(
     libraryId: String,
     indexType: String,
     nDocuments: Long,
     nChunks: Long,
     nEmbedded: Long,
-    hasLshIndex: Boolean,
-    hasIvfIndex: Boolean,
-    hasPqIndex: Boolean = false,
-    hasIvfPqIndex: Boolean = false,
-    hasIvfSq8Index: Boolean = false)
+    builtIndex: Option[String])
 
 /** One [[VectorEngine.curatePasses]] pass — the [[VectorEngine
   * .curateLibrary]] parameter set as a value, so a strip LADDER

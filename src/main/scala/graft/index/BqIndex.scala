@@ -106,4 +106,42 @@ object BqIndex {
       .orderBy(col("dist_u").asc, col("chunk_id").asc)
       .limit(Oversample * k)
       .select(col("chunk_id"))
+
+  /** (query_id, qcode): each qnorm row packed on executors. */
+  def queryCodes(qn: DataFrame, dim: Int): DataFrame =
+    qn.select(col("query_id"),
+      array(packExprs(dim, i => element_at(col("qnorm"), i + 1)): _*).as("qcode"))
+
+  /** Hamming `dist_u` of a packed code row against the row's `qcode`. */
+  def hammingU(dim: Int): Column =
+    hammingExpr(words(dim), w => element_at(col("qcode"), w + 1)).as("dist_u")
+}
+
+/** The BQ family: packed sign bits, stateless (no params table). */
+object BqFamily extends IndexFamily("bq", Seq("bq")) {
+  type State = DataFrame
+
+  override def markers: Seq[(String, String)] = Seq("bq_codes" -> "bq")
+
+  def build(ctx: IndexContext): Unit =
+    ctx.write("bq_codes", BqIndex.build(ctx.chunks, ctx.libId, ctx.dim))
+
+  /** Stateless encode: incremental maintenance IS the rebuild. */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("bq_codes").foreach { _ =>
+      ctx.append("bq_codes", BqIndex.encode(newChunks, ctx.libId, ctx.dim))
+    }
+
+  def load(ctx: IndexContext): Option[DataFrame] = heldRows(ctx, "bq_codes")
+
+  /** xor+popcount hamming against the driver-packed query code, cap 6k. */
+  def candidates(ctx: IndexContext, codes: DataFrame, q: Query): Option[DataFrame] =
+    Some(hydrate(ctx, BqIndex.candidates(q.restrict(codes),
+      BqIndex.encodeQuery(q.qn), q.k)))
+
+  def candidates(ctx: IndexContext, codes: DataFrame, b: Batch): BatchCandidates =
+    BatchCandidates(capHydrate(ctx, b, b.restrict(codes)
+      .crossJoin(broadcast(BqIndex.queryCodes(b.qn, ctx.dim)))
+      .select(col("query_id"), col("chunk_id"), BqIndex.hammingU(ctx.dim)),
+      BqIndex.Oversample))
 }

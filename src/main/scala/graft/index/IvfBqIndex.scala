@@ -40,3 +40,46 @@ object IvfBqIndex {
         i => element_at(col("embedding_norm"), i + 1)): _*).as("codes"))
   }
 }
+
+/** The IVF+BQ family: md5-seeded cells, packed codes on their lists. */
+object IvfBqFamily extends IndexFamily("ivfbq", Seq("ivfbq")) with BalanceAudit {
+  type State = DataFrame
+
+  override def markers: Seq[(String, String)] = Seq("ivfbq_codes" -> "ivfbq")
+
+  def build(ctx: IndexContext): Unit = {
+    val cents = IvfIndex.seedCentroids(ctx.chunks, ctx.libId, ctx.config.ivfNumCentroids)
+    ctx.write("ivf_centroids", cents)
+    ctx.write("ivfbq_codes", IvfBqIndex.build(ctx.chunks, cents, ctx.libId, ctx.dim))
+  }
+
+  /** Assign to the FROZEN build-time cells, stateless packing. */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("ivf_centroids", "ivfbq_codes").foreach { case Seq(cents, _) =>
+      ctx.append("ivfbq_codes", IvfBqIndex.build(newChunks, cents, ctx.libId, ctx.dim))
+    }
+
+  def load(ctx: IndexContext): Option[DataFrame] =
+    if (!ctx.cellsBuilt) None else heldRows(ctx, "ivfbq_codes")
+
+  /** The probed cells prune the packed-code scan by `isin` literal. */
+  def candidates(ctx: IndexContext, codes: DataFrame, q: Query): Option[DataFrame] = {
+    val top = ctx.probe(q.qn).map(c => Int.box(c._1)).toIndexedSeq
+    Some(hydrate(ctx, BqIndex.candidates(
+      q.restrict(codes.filter(col("centroid_id").isin(top: _*))),
+      BqIndex.encodeQuery(q.qn), q.k)))
+  }
+
+  def candidates(ctx: IndexContext, codes: DataFrame, b: Batch): BatchCandidates = {
+    val pairs = b.probePairs(ctx.part("ivf_centroids"), ctx.config.ivfNprobe)
+      .join(BqIndex.queryCodes(b.qn, ctx.dim), Seq("query_id"))
+    BatchCandidates(capHydrate(ctx, b, b.restrict(codes)
+      .join(broadcast(pairs), Seq("centroid_id"))
+      .select(col("query_id"), col("chunk_id"), BqIndex.hammingU(ctx.dim)),
+      IvfBqIndex.Oversample))
+  }
+
+  /** Unit = a coarse cell, as the other celled families. */
+  def balanceUnits(ctx: IndexContext): DataFrame =
+    units(ctx, "ivfbq_codes", "centroid_id")
+}

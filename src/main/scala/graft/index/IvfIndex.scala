@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Schemas
+import graft.engine.EngineErrors.NotFoundError
 import graft.functions.VectorFunctions._
 
 /** IVF (inverted-file) index: hand-rolled Lloyd's k-means on L2-normalized
@@ -285,4 +286,63 @@ object IvfIndex {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.ivfCentroids)
   private def emptyPostings(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.ivfPostings)
+}
+
+/** The IVF family (`ivf`: Lloyd cells; `ivf_det`: md5-seeded cells). */
+object IvfFamily extends IndexFamily("ivf", Seq("ivf", "ivf_det"))
+    with BalanceAudit {
+  type State = Unit
+
+  override def markers: Seq[(String, String)] = Seq("ivf_centroids" -> "ivf")
+
+  def build(ctx: IndexContext): Unit = {
+    val n = ctx.config.ivfNumCentroids
+    val (centroids, postings) =
+      if (det(ctx)) {
+        val cents = IvfIndex.seedCentroids(ctx.chunks, ctx.libId, n)
+        (cents, IvfIndex.assignToCentroids(ctx.chunks, cents, ctx.libId))
+      } else IvfIndex.build(ctx.chunks, ctx.libId, n)
+    ctx.write("ivf_centroids", centroids)
+    ctx.write("ivf_postings", postings)
+  }
+
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("ivf_centroids").foreach { case Seq(cents) =>
+      ctx.append("ivf_postings", IvfIndex.assignToCentroids(newChunks, cents, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[Unit] = Some(()).filter(_ => ctx.cellsBuilt)
+
+  /** The probed cells' postings by `isin`; ALL are reranked (not Q3). */
+  def candidates(ctx: IndexContext, st: Unit, q: Query): Option[DataFrame] = {
+    val top = ctx.probe(q.qn).map(c => Int.box(c._1)).toIndexedSeq
+    Some(q.restrict(ctx.part("ivf_postings"))
+      .filter(col("centroid_id").isin(top: _*))
+      .select(col("chunk_id"), col("embedding_norm"))
+      .dropDuplicates("chunk_id"))
+  }
+
+  def candidates(ctx: IndexContext, st: Unit, b: Batch): BatchCandidates =
+    BatchCandidates(b.restrict(ctx.part("ivf_postings"))
+      .join(b.probePairs(ctx.part("ivf_centroids"), ctx.config.ivfNprobe),
+        Seq("centroid_id"))
+      .select(col("query_id"), col("chunk_id"), col("embedding_norm"))
+      .dropDuplicates("query_id", "chunk_id"))
+
+  /** `VectorEngine.ivfCellStats`. */
+  def cellStats(ctx: IndexContext): DataFrame = {
+    if (!ctx.exists("ivf_postings"))
+      throw new NotFoundError(s"ivf index for library ${ctx.libId}")
+    val cents = ctx.part("ivf_centroids").select(col("centroid_id"))
+    if (cents.isEmpty) throw new NotFoundError(s"ivf index for library ${ctx.libId}")
+    val counts = ctx.part("ivf_postings").groupBy(col("centroid_id"))
+      .agg(count(lit(1)).as("n"))
+    cents.join(counts, Seq("centroid_id"), "left")
+      .select(col("centroid_id"), coalesce(col("n"), lit(0L)).as("n_members"))
+      .orderBy(col("centroid_id").asc)
+  }
+
+  /** Unit = a cell (adds assign to FROZEN centroids and pile up). */
+  def balanceUnits(ctx: IndexContext): DataFrame =
+    cellStats(ctx).select(lit(0).as("grp"), col("n_members").as("m"))
 }

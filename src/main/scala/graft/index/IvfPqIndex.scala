@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Schemas
+import graft.engine.EngineErrors.NotFoundError
 
 /** IVF+PQ combined index — the standard billion-scale ANN architecture
   * (FAISS `IndexIVFPQ`): a coarse quantizer prunes the corpus to the
@@ -230,5 +231,56 @@ object IvfPqIndex {
       .orderBy(col("dist_u").asc, col("chunk_id").asc)
       .limit(Oversample * k)
       .select("chunk_id")
+  }
+}
+
+/** The IVF+PQ family (`ivfpq`: md5 seeds; `ivfpq_trained`: Lloyd). */
+object IvfPqFamily extends ResidualFamily("ivfpq", Seq("ivfpq", "ivfpq_trained")) {
+  type State = Array[Array[Array[Float]]]
+  def codesTable: String = "ivfpq_codes"
+  def oversample: Int = IvfPqIndex.Oversample
+
+  def build(ctx: IndexContext): Unit = {
+    val c = ctx.config
+    val (centroids, codebooks, codes) = IvfPqIndex.build(ctx.chunks, ctx.libId,
+      ctx.dim, c.ivfNumCentroids, c.pqSubspaces, c.pqCodewords, trained = trained(ctx))
+    ctx.write("ivf_centroids", centroids)
+    ctx.write("pq_codebooks", codebooks)
+    ctx.write("ivfpq_codes", codes)
+  }
+
+  /** Assign + residual-encode against the EXISTING cells and codebooks. */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("ivf_centroids", "pq_codebooks").foreach { case Seq(cents, cb) =>
+      ctx.append("ivfpq_codes", IvfPqIndex.encode(newChunks, cents, cb, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[State] =
+    if (!ctx.cellsBuilt || !ctx.exists("pq_codebooks")) None
+    else Some(PqIndex.collectCodebooks(ctx.part("pq_codebooks"))).filter(_.nonEmpty)
+
+  /** Centroid-pruned codes scan with per-cell ADC tables, cap 6k. */
+  def candidates(ctx: IndexContext, cb: State, q: Query): Option[DataFrame] =
+    Some(hydrate(ctx, IvfPqIndex.candidates(q.restrict(ctx.part("ivfpq_codes")),
+      ctx.probe(q.qn), cb, q.qn, q.k)))
+
+  /** Each (query, cell) pair's ADC table, built on executors. */
+  def residualTable(cb: State, res: Column): Column =
+    IvfPqIndex.adcDtabExpr(res, cb).as("dtab")
+  def residualDist(cb: State): Column = IvfPqIndex.adcDistExpr(cb.length, cb(0).length)
+
+  /** The RESIDUAL codes against the true residuals (as encoded). */
+  def quantizationError(ctx: IndexContext): DataFrame = {
+    if (!ctx.exists("ivfpq_codes"))
+      throw new NotFoundError(s"ivfpq index for library ${ctx.libId}")
+    val cb = PqIndex.collectCodebooks(ctx.part("pq_codebooks"))
+    if (cb.isEmpty) throw new NotFoundError(s"ivfpq index for library ${ctx.libId}")
+    val cents = broadcast(ctx.part("ivf_centroids")
+      .select(col("centroid_id"), col("vector").as("cvec")))
+    val res = (d: Int) =>
+      (element_at(col("vnorm"), d + 1) - element_at(col("cvec"), d + 1)).cast("double")
+    IndexFamily.errorSummary(ctx.part("ivfpq_codes")
+      .join(IndexFamily.truthNorms(ctx), "chunk_id").join(cents, "centroid_id")
+      .select(PqIndex.reconErr(cb, res).as("err_u")))
   }
 }

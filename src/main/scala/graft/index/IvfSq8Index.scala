@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Schemas
+import graft.engine.EngineErrors.NotFoundError
 
 /** IVF + scalar-quantization composite index — FAISS's `IVF,SQ8`: coarse
   * cells from the deterministic md5-seeded centroids
@@ -195,5 +196,53 @@ object IvfSq8Index {
       .orderBy(col("dist_u").asc, col("chunk_id").asc)
       .limit(Oversample * k)
       .select(col("chunk_id"))
+  }
+}
+
+/** The IVF+SQ8 family: per-(cell, dim) residual ranges and byte codes. */
+object IvfSq8Family extends ResidualFamily("ivfsq8", Seq("ivfsq8")) {
+  type State = Map[Int, Array[(Double, Double)]]
+  def codesTable: String = "ivfsq8_codes"
+  def oversample: Int = IvfSq8Index.Oversample
+
+  def build(ctx: IndexContext): Unit = {
+    val (centroids, params, codes) = IvfSq8Index.build(ctx.chunks, ctx.libId,
+      ctx.dim, ctx.config.ivfNumCentroids)
+    ctx.write("ivf_centroids", centroids)
+    ctx.write("ivfsq8_params", params)
+    ctx.write("ivfsq8_codes", codes)
+  }
+
+  /** Assign to FROZEN cells, clamp-encode against FROZEN ranges. */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("ivf_centroids", "ivfsq8_params").foreach { case Seq(cents, params) =>
+      ctx.append("ivfsq8_codes", IvfSq8Index.encode(newChunks, cents, params, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[State] =
+    if (!ctx.cellsBuilt || !ctx.exists("ivfsq8_params")) None
+    else Some(IvfSq8Index.collectParams(ctx.part("ivfsq8_params"))).filter(_.nonEmpty)
+
+  def candidates(ctx: IndexContext, pmap: State, q: Query): Option[DataFrame] =
+    Some(hydrate(ctx, IvfSq8Index.candidates(q.restrict(ctx.part("ivfsq8_codes")),
+      pmap, ctx.probe(q.qn), q.qn, q.k)))
+
+  /** The FLOAT query residual, read directly by the looping dist kernel. */
+  def residualTable(pmap: State, res: Column): Column = res.as("qres")
+  def residualDist(pmap: State): Column = IvfSq8Index.adcDistExpr(pmap)
+
+  /** [[IvfSq8Index.adcDistExpr]] with the TRUE residual as the query. */
+  def quantizationError(ctx: IndexContext): DataFrame = {
+    if (!ctx.exists("ivfsq8_codes") || !ctx.exists("ivfsq8_params"))
+      throw new NotFoundError(s"ivfsq8 index for library ${ctx.libId}")
+    val pmap = IvfSq8Index.collectParams(ctx.part("ivfsq8_params"))
+    if (pmap.isEmpty) throw new NotFoundError(s"ivfsq8 index for library ${ctx.libId}")
+    val cents = broadcast(ctx.part("ivf_centroids")
+      .select(col("centroid_id"), col("vector").as("cvec")))
+    IndexFamily.errorSummary(ctx.part("ivfsq8_codes")
+      .join(IndexFamily.truthNorms(ctx), "chunk_id").join(cents, "centroid_id")
+      .select(col("codes"), col("centroid_id"),
+        zip_with(col("vnorm"), col("cvec"), (a, b) => a - b).as("qres"))
+      .select(IvfSq8Index.adcDistExpr(pmap).as("err_u")))
   }
 }

@@ -186,3 +186,104 @@ object LshIndex {
     if (n == 0.0) None else Some(v.map(x => (x / n).toFloat))
   }
 }
+
+/** The LSH family (`lsh`: seeded random planes; `lsh_det`: md5-derived
+  * planes): per-library planes plus the bucket table.
+  */
+object LshFamily extends IndexFamily("lsh", Seq("lsh", "lsh_det"))
+    with BalanceAudit {
+  type State = Seq[(Int, Seq[Array[Float]])]
+
+  override def markers: Seq[(String, String)] = Seq("lsh_planes" -> "lsh")
+
+  def build(ctx: IndexContext): Unit = {
+    val c = ctx.config
+    val h = math.min(c.lshHyperplanesPerTable, 63)
+    val planes =
+      if (det(ctx)) LshIndex.makePlanesDet(ctx.spark, ctx.libId, c.lshNumTables, h, ctx.dim)
+      else LshIndex.makePlanes(ctx.spark, ctx.libId, c.lshNumTables, h, ctx.dim, ctx.lshSeed)
+    ctx.write("lsh_planes", planes)
+    ctx.write("lsh_buckets", LshIndex.buildBuckets(ctx.chunks, planes, ctx.libId))
+  }
+
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("lsh_planes").foreach { case Seq(planes) =>
+      ctx.append("lsh_buckets", LshIndex.buildBuckets(newChunks, planes, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[State] =
+    if (!ctx.exists("lsh_planes")) None
+    else Some(LshIndex.collectPlanes(ctx.part("lsh_planes"))).filter(_.nonEmpty)
+
+  def candidates(ctx: IndexContext, planes: State, q: Query): Option[DataFrame] =
+    Some(LshIndex.candidates(q.restrict(ctx.part("lsh_buckets")), q.raw, planes, q.k))
+
+  /** Multi-probe signatures as EXPRESSIONS (the bucket build's sign-bit
+    * pack; the Hamming-1 flips are xors of the bound base signature), ONE
+    * bucket equi-join, per-query multiplicity cap, and the reference's <k
+    * pad (lsh.py:101-110) DISTRIBUTED from the globally-lowest
+    * (2k + Oversample*k) ids, which cover any query's deficit; planned
+    * only when some query is short (one isEmpty over the checkpointed cap).
+    */
+  def candidates(ctx: IndexContext, planes: State, b: Batch): BatchCandidates = {
+    val k = b.k
+    val sigStructs = planes.map { case (t, ps) =>
+      val bits = ps.zipWithIndex.map { case (p, i) =>
+        when(dotProduct(col("qnorm"), typedLit(p.toSeq)) >= 0.0,
+          lit(1L << i)).otherwise(lit(0L))
+      }
+      struct(lit(t).as("table_id"), bits.reduce(_ + _).as("sig"))
+    }
+    val nBits = planes.head._2.length
+    val baseSigs = b.qn
+      .select(col("query_id"), explode(array(sigStructs: _*)).as("ts"))
+      .select(col("query_id"), col("ts.table_id").as("table_id"),
+        col("ts.sig").as("sig"))
+    val flips = col("sig") +: (0 until nBits).map(i =>
+      col("sig").bitwiseXOR(lit(1L << i)))
+    val probes = baseSigs.select(col("query_id"), col("table_id"),
+      explode(array(flips: _*)).as("signature"))
+    val buckets = b.restrict(ctx.part("lsh_buckets"))
+    val ranked = buckets
+      .join(probes, Seq("table_id", "signature"))
+      .groupBy(col("query_id"), col("chunk_id"))
+      .agg(count(lit(1)).as("n_matches"))
+    // the pad's count-agg, anti-join and union all read it
+    val capped = graft.Caches.track(
+      b.capPerQuery(ranked, col("n_matches"), LshIndex.Oversample * k)
+        .localCheckpoint())
+    val norms = buckets.select(col("chunk_id"), col("embedding_norm"))
+      .dropDuplicates("chunk_id")
+    // zero-candidate queries count too: the live ids join the count
+    val deficient = b.qn.select(col("query_id"), lit(0L).as("one"))
+      .unionAll(capped.select(col("query_id"), lit(1L).as("one")))
+      .groupBy(col("query_id"))
+      .agg(sum(col("one")).as("have"))
+      .filter(col("have") < k)
+      .withColumn("need", lit(2L * k) - col("have"))
+    val pool = norms.select(col("chunk_id"))
+      .orderBy(col("chunk_id").asc)
+      .limit(2 * k + LshIndex.Oversample * k)
+    val padW = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("chunk_id").asc)
+    val pad = deficient.crossJoin(broadcast(pool))
+      .join(capped, Seq("query_id", "chunk_id"), "left_anti")
+      .withColumn("rn", row_number().over(padW))
+      .filter(col("rn") <= col("need"))
+      .select(col("query_id"), col("chunk_id"))
+    val withPad = if (deficient.isEmpty) capped else capped.unionAll(pad)
+    BatchCandidates(norms.join(withPad, Seq("chunk_id")))
+  }
+
+  /** Unit = a bucket, share measured WITHIN its hash table (a degenerate
+    * table's probes are near-linear scans).
+    */
+  def balanceUnits(ctx: IndexContext): DataFrame = {
+    if (!ctx.exists("lsh_buckets"))
+      throw new graft.engine.EngineErrors.NotFoundError(
+        s"lsh index for library ${ctx.libId}")
+    ctx.part("lsh_buckets").groupBy(col("table_id"), col("signature"))
+      .agg(count(lit(1)).as("m"))
+      .select(col("table_id").as("grp"), col("m"))
+  }
+}

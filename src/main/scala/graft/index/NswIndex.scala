@@ -182,3 +182,92 @@ object NswIndex {
   private def emptyEdges(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.nswEdges)
 }
+
+/** The graph family (`nsw_det`; `hnsw_det` adds [[HnswIndex]]'s upper
+  * layers): cells and postings SHARED with ivf (cells block the edge
+  * build and seed the walk; postings hold the vectors) plus adjacency.
+  */
+object GraphFamily extends IndexFamily("graph", Seq("nsw_det", "hnsw_det"))
+    with BalanceAudit {
+  type State = Unit
+
+  /** Whether a spelling is the layered (hnsw) mode. */
+  def layered(spelling: String): Boolean = spelling == "hnsw_det"
+
+  override def markers: Seq[(String, String)] =
+    Seq("hnsw_edges" -> "hnsw_det", "nsw_edges" -> "nsw_det")
+
+  def build(ctx: IndexContext): Unit = {
+    val c = ctx.config
+    val cents = IvfIndex.seedCentroids(ctx.chunks, ctx.libId, c.ivfNumCentroids)
+    ctx.write("ivf_centroids", cents)
+    ctx.write("ivf_postings", IvfIndex.assignToCentroids(ctx.chunks, cents, ctx.libId))
+    ctx.write("nsw_edges", NswIndex.buildEdges(ctx.chunks, cents,
+      ctx.part("ivf_postings"), ctx.libId, c.ivfNprobe, c.nswDegree))
+    if (layered(ctx.spelling))
+      ctx.write("hnsw_edges", HnswIndex.buildLayers(ctx.chunks, cents,
+        ctx.part("ivf_postings"), ctx.libId, c.ivfNprobe, c.nswDegree))
+  }
+
+  /** Edges first: they probe the PRE-BATCH postings (the add-after-build
+    * contract), each write materializing its probe before the posting
+    * append makes the batch visible.
+    */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("ivf_centroids").foreach { case Seq(cents) =>
+      val c = ctx.config
+      ctx.append("nsw_edges", NswIndex.edgesForNew(newChunks, cents,
+        ctx.part("ivf_postings"), ctx.libId, c.ivfNprobe, c.nswDegree))
+      if (layered(ctx.spelling))
+        ctx.append("hnsw_edges", HnswIndex.layersForNew(newChunks, cents,
+          ctx.part("ivf_postings"), ctx.libId, c.ivfNprobe, c.nswDegree))
+      ctx.append("ivf_postings", IvfIndex.assignToCentroids(newChunks, cents, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[Unit] =
+    Some(()).filter(_ => ctx.exists("nsw_edges") && ctx.cellsBuilt)
+
+  /** The walk's visited ids as a pushed `isin`. A pre-filter gates what
+    * the walk SCORES (post-filtering starved the beam: 0.188 vs 0.400
+    * recall); None (an emptied entry cell, no reachable allowed node)
+    * falls back to flat.
+    */
+  def candidates(ctx: IndexContext, st: Unit, q: Query): Option[DataFrame] = {
+    val beamW = math.max(q.beam.getOrElse(ctx.config.nswBeam), q.k)
+    val walked = ctx.graphWalk(beamW, Seq(0L -> q.qn), layered(ctx.spelling),
+      q.allowed).head._2
+    if (walked.isEmpty) None
+    else Some(q.restrict(ctx.part("ivf_postings")
+      .filter(col("chunk_id").isin(walked: _*))
+      .select(col("chunk_id"), col("embedding_norm"))))
+  }
+
+  /** The lockstep driver walk up to the local-finish cap, else the
+    * distributed frontier walk; a query that visits nothing takes the
+    * flat scan.
+    */
+  def candidates(ctx: IndexContext, st: Unit, b: Batch): BatchCandidates = {
+    val beamW = math.max(ctx.config.nswBeam, b.k)
+    val hnsw = layered(ctx.spelling)
+    if (ctx.localFinish(b.nq)) {
+      val spark = ctx.spark
+      import spark.implicits._
+      val qRows = b.qn.collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      val walked = ctx.graphWalk(beamW, qRows, hnsw, b.allowed)
+      val pairs = walked.flatMap { case (qid, ids) => ids.map(id => (qid, id)) }
+      val rows = ctx.spark.createDataset(pairs).toDF("query_id", "chunk_id")
+        .join(ctx.part("ivf_postings").select(col("chunk_id"), col("embedding_norm")),
+          Seq("chunk_id"))
+      val missed = walked.collect { case (qid, ids) if ids.isEmpty => Long.box(qid) }
+      BatchCandidates(rows,
+        Some(missed).filter(_.nonEmpty).map(m => b.q.filter(col("query_id").isin(m: _*))))
+    } else {
+      val (rows, missing) = ctx.frontierWalk(b, beamW, hnsw)
+      BatchCandidates(rows, Some(missing).filterNot(_.isEmpty))
+    }
+  }
+
+  /** Unit = a node's layer-0 adjacency list (a hub taxes every beam). */
+  def balanceUnits(ctx: IndexContext): DataFrame = units(ctx, "nsw_edges", "src_id")
+}

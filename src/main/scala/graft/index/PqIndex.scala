@@ -1,9 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Schemas
+import graft.engine.EngineErrors.NotFoundError
 import graft.functions.VectorFunctions._
 
 /** PRODUCT-QUANTIZATION index: vectors are compressed to M small codes
@@ -205,6 +206,21 @@ object PqIndex {
       graft.functions.PqExpressions.pqEncode(col("vnf"), cb).as("codes"),
       col("vnf").as("embedding_norm"))
 
+  /** Decode-error fold of the quantization audits: sum over dims of
+    * floor((cb[m][codes[m]][j] - truth(d))^2 * 1e6 + 0.5) as exact BIGINT
+    * micro-units, the per-(m,j) codeword component lookup a K-length plan
+    * literal.
+    */
+  def reconErr(cb: Array[Array[Array[Float]]], truthAt: Int => Column): Column = {
+    val dsub = cb(0)(0).length
+    (for (mi <- cb.indices; j <- 0 until dsub) yield {
+      val lut = typedLit(cb(mi).map(_(j).toDouble).toIndexedSeq)
+      val dec = element_at(lut, element_at(col("codes"), mi + 1) + 1)
+      val diff = dec - truthAt(mi * dsub + j)
+      floor(diff * diff * lit(1000000.0) + lit(0.5)).cast("long")
+    }).reduce(_ + _)
+  }
+
   /** ADC candidate generation: the distance table from the (normalized)
     * query to every codeword is computed DRIVER-side in integer
     * micro-units and broadcast as literals; per candidate the score is M
@@ -225,5 +241,59 @@ object PqIndex {
       .orderBy(col("dist_u").asc, col("chunk_id").asc)
       .limit(Oversample * k)
       .select(col("chunk_id"), col("embedding_norm"))
+  }
+}
+
+/** The PQ family (`pq`: md5 codebooks; `pq_trained`: Lloyd). */
+object PqFamily extends IndexFamily("pq", Seq("pq", "pq_trained"))
+    with QuantizationAudit {
+  type State = Array[Array[Array[Float]]]
+
+  override def markers: Seq[(String, String)] = Seq("pq_codes" -> "pq")
+
+  def build(ctx: IndexContext): Unit = {
+    val c = ctx.config
+    val (codebooks, codes) = PqIndex.build(ctx.chunks, ctx.libId, ctx.dim,
+      c.pqSubspaces, c.pqCodewords, trained = trained(ctx))
+    ctx.write("pq_codebooks", codebooks)
+    ctx.write("pq_codes", codes)
+  }
+
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("pq_codebooks").foreach { case Seq(cb) =>
+      ctx.append("pq_codes", PqIndex.encode(newChunks, cb, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[State] =
+    if (!ctx.exists("pq_codebooks")) None
+    else Some(PqIndex.collectCodebooks(ctx.part("pq_codebooks"))).filter(_.nonEmpty)
+
+  /** ADC over the codes scan (integer micro-unit distances, cap 6k). */
+  def candidates(ctx: IndexContext, cb: State, q: Query): Option[DataFrame] =
+    Some(PqIndex.candidates(q.restrict(ctx.part("pq_codes")), cb, q.qn, q.k))
+
+  /** Flat ADC with the single path's micro-unit floors; the query frame
+    * is broadcast explicitly (a stats-less plan would otherwise fall to a
+    * CartesianProduct over the codes).
+    */
+  def candidates(ctx: IndexContext, cb: State, b: Batch): BatchCandidates = {
+    val qrs = b.qn.select(col("query_id"),
+      IvfPqIndex.adcDtabExpr(col("qnorm"), cb).as("dtab"))
+    val dists = b.restrict(ctx.part("pq_codes"))
+      .crossJoin(broadcast(qrs))
+      .select(col("query_id"), col("chunk_id"),
+        IvfPqIndex.adcDistExpr(cb.length, cb(0).length).as("dist_u"))
+    val capped = b.capPerQuery(dists, -col("dist_u"), PqIndex.Oversample * b.k)
+    BatchCandidates(ctx.part("pq_codes").select(col("chunk_id"), col("embedding_norm"))
+      .join(capped, Seq("chunk_id")))
+  }
+
+  /** Codes decoded against the vector stored beside them: no join. */
+  def quantizationError(ctx: IndexContext): DataFrame = {
+    val cb = PqIndex.collectCodebooks(ctx.part("pq_codebooks"))
+    if (cb.isEmpty) throw new NotFoundError(s"pq index for library ${ctx.libId}")
+    IndexFamily.errorSummary(ctx.part("pq_codes")
+      .select(PqIndex.reconErr(cb, d => element_at(col("embedding_norm"), d + 1)
+        .cast("double")).as("err_u")))
   }
 }

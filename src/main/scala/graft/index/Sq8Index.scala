@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Schemas
+import graft.engine.EngineErrors.NotFoundError
 
 /** Scalar-quantization index — the FAISS `ScalarQuantizer` (SQ8) family:
   * every dimension of the L2-normalized vector is quantized to ONE BYTE
@@ -138,4 +139,48 @@ object Sq8Index {
       .orderBy(col("dist_u").asc, col("chunk_id").asc)
       .limit(Oversample * k)
       .select(col("chunk_id"))
+}
+
+/** The SQ8 family: per-dim ranges plus one byte code per (chunk, dim). */
+object Sq8Family extends IndexFamily("sq8", Seq("sq8")) with QuantizationAudit {
+  type State = Array[(Double, Double)]
+
+  override def markers: Seq[(String, String)] = Seq("sq8_codes" -> "sq8")
+
+  def build(ctx: IndexContext): Unit = {
+    val (params, codes) = Sq8Index.build(ctx.chunks, ctx.libId, ctx.dim)
+    ctx.write("sq8_params", params)
+    ctx.write("sq8_codes", codes)
+  }
+
+  /** Encode against the FROZEN ranges (clamped). */
+  def add(ctx: IndexContext, newChunks: DataFrame): Unit =
+    ctx.built("sq8_params").foreach { case Seq(params) =>
+      ctx.append("sq8_codes", Sq8Index.encode(newChunks, params, ctx.libId))
+    }
+
+  def load(ctx: IndexContext): Option[State] =
+    if (!ctx.exists("sq8_params")) None
+    else Some(Sq8Index.collectParams(ctx.part("sq8_params"))).filter(_.nonEmpty)
+
+  /** Byte-code scan: decode-approx L2 against plan-literal ranges, cap 6k. */
+  def candidates(ctx: IndexContext, p: State, q: Query): Option[DataFrame] =
+    Some(hydrate(ctx, Sq8Index.candidates(q.restrict(ctx.part("sq8_codes")), p, q.qn, q.k)))
+
+  /** [[Sq8Index.distExpr]] reading the broadcast `qnorm` column. */
+  def candidates(ctx: IndexContext, p: State, b: Batch): BatchCandidates =
+    BatchCandidates(capHydrate(ctx, b, b.restrict(ctx.part("sq8_codes"))
+      .crossJoin(broadcast(b.qn))
+      .select(col("query_id"), col("chunk_id"), Sq8Index.distExpr(p,
+        i => element_at(col("qnorm"), i + 1).cast("double")).as("dist_u")),
+      Sq8Index.Oversample))
+
+  /** [[Sq8Index.distExpr]] with the truth as the "query" side. */
+  def quantizationError(ctx: IndexContext): DataFrame = {
+    val p = load(ctx).getOrElse(
+      throw new NotFoundError(s"sq8 index for library ${ctx.libId}"))
+    IndexFamily.errorSummary(ctx.part("sq8_codes").join(IndexFamily.truthNorms(ctx), "chunk_id")
+      .select(Sq8Index.distExpr(p,
+        i => element_at(col("vnorm"), i + 1).cast("double")).as("err_u")))
+  }
 }

@@ -439,11 +439,10 @@ class EngineSpec extends AnyFunSuite {
     intercept[EngineErrors.NotFoundError] { eng.getLibraryRow("nope") }
     val before = eng.libraryStats(lib)
     assert(before.nDocuments == 1 && before.nChunks == 2 &&
-      before.nEmbedded == 1 && !before.hasLshIndex && !before.hasIvfIndex)
+      before.nEmbedded == 1 && before.builtIndex.isEmpty)
     eng.rebuildIndex(lib)
     val after = eng.libraryStats(lib)
-    assert(after.hasLshIndex && !after.hasIvfIndex &&
-      after.indexType == "lsh")
+    assert(after.builtIndex.contains("lsh") && after.indexType == "lsh")
   }
 
   test("listLibraries paginates with has_more (reference router shape)") {
@@ -498,8 +497,8 @@ class EngineSpec extends AnyFunSuite {
       ChunkIn("fresh", Some(Array(0.95f, 0.05f, 0f, 0f)), id = Some("zz"))))
     assert(eng.search(pqLib, q, k = 1).collect().head.getString(0) == "zz")
     // stats see the PQ tables; flat library does not
-    assert(eng.libraryStats(pqLib).hasPqIndex)
-    assert(!eng.libraryStats(flatLib).hasPqIndex)
+    assert(eng.libraryStats(pqLib).builtIndex.contains("pq"))
+    assert(eng.libraryStats(flatLib).builtIndex.isEmpty)
     // dim not divisible by subspaces fails loudly — BEFORE any state is
     // written (createLibrary and updateIndexConfig both pre-check)
     intercept[ValidationError] {
@@ -567,7 +566,7 @@ class EngineSpec extends AnyFunSuite {
       .map(_.getString(0)).contains("zz"))
     // stats see the shared centroid/codebook tables + the codes table
     val st = eng.libraryStats(pqLib)
-    assert(st.hasIvfPqIndex && !st.hasLshIndex && !st.hasIvfIndex)
+    assert(st.builtIndex.contains("ivfpq"))
     // dim % subspaces validated for the combined family too
     intercept[ValidationError] {
       eng.createLibrary("bad", 4, IndexConfig("ivfpq", pqSubspaces = 3))
@@ -583,7 +582,7 @@ class EngineSpec extends AnyFunSuite {
     // family swap drops the codes table (and search keeps working)
     eng.updateIndexConfig(pqLib, IndexConfig("ivf", ivfNumCentroids = 2))
     val swapped = eng.libraryStats(pqLib)
-    assert(!swapped.hasIvfPqIndex && swapped.hasIvfIndex)
+    assert(swapped.builtIndex.contains("ivf"))
     assert(hits(pqLib).map(_._1) == flatHits.map(_._1))
   }
 
@@ -786,12 +785,16 @@ class EngineSpec extends AnyFunSuite {
     for (cfg <- Seq(
         IndexConfig("flat"),
         IndexConfig("ivf_det", ivfNumCentroids = 4, ivfNprobe = 2),
+        IndexConfig("ivf", ivfNumCentroids = 4, ivfNprobe = 2),
         IndexConfig("ivfpq", ivfNumCentroids = 4, ivfNprobe = 2,
+          pqSubspaces = 2, pqCodewords = 8),
+        IndexConfig("ivfpq_trained", ivfNumCentroids = 4, ivfNprobe = 2,
           pqSubspaces = 2, pqCodewords = 8),
         IndexConfig("lsh", lshNumTables = 2, lshHyperplanesPerTable = 3),
         // high-H det config drives some queries under k candidates -> pad path
         IndexConfig("lsh_det", lshNumTables = 2, lshHyperplanesPerTable = 12),
         IndexConfig("pq", pqSubspaces = 2, pqCodewords = 8),
+        IndexConfig("pq_trained", pqSubspaces = 2, pqCodewords = 8),
         IndexConfig("sq8"),
         IndexConfig("ivfbq", ivfNumCentroids = 4, ivfNprobe = 2),
         IndexConfig("bq"),
@@ -1258,7 +1261,7 @@ class EngineSpec extends AnyFunSuite {
       store.read("ivfsq8_params", Schemas.ivfsq8Params)
         .collect().map(_.toString).sorted.toSeq)
     assert(codes.count() == 20)
-    assert(eng.libraryStats(lib).hasIvfSq8Index)
+    assert(eng.libraryStats(lib).builtIndex.contains("ivfsq8"))
     // self-query: the vector's own chunk must rank first at full recall
     // of its cell (nprobe = num_centroids here, so no prune loss)
     val top = eng.search(lib, Array(math.cos(2.1).toFloat, math.sin(2.1).toFloat,
@@ -1277,7 +1280,7 @@ class EngineSpec extends AnyFunSuite {
     // config swap to flat drops this library's ivfsq8 state
     eng.updateIndexConfig(lib, IndexConfig("flat"))
     assert(codes.filter(col("library_id") === lib).isEmpty)
-    assert(!eng.libraryStats(lib).hasIvfSq8Index)
+    assert(eng.libraryStats(lib).builtIndex.isEmpty)
     assert(eng.search(lib, Array(1f, 0f, 1f, 0f), k = 5).count() == 5)
   }
 
@@ -1317,37 +1320,41 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = graft.TempDirs.scratch("graft-skew-test").toString
     val eng = new VectorEngine(spark, dir, fixedClock)
-    val lib = eng.createLibrary("skew", 2,
-      IndexConfig("ivf", ivfNumCentroids = 2, ivfNprobe = 2))
-    val doc = eng.createDocument(lib)
     def arc(prefix: String, baseDeg: Int) = (0 until 20)
       .map { i =>
         val a = math.toRadians(baseDeg + i)
         (f"$prefix$i%04d", s"t$prefix$i",
           Array(math.cos(a).toFloat, math.sin(a).toFloat))
       }.toDF("id", "text", "embedding")
-    // build corpus: one 20-vector arc at 0..19 degrees; k=2 splits it in
-    // two roughly-even cells
-    eng.bulkIngest(lib, doc, arc("a", 0))
-    eng.rebuildIndex(lib)
-    val clean = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
-    assert(!clean.rebuilt && clean.family == "ivf" && clean.nEntries == 20,
-      s"unexpected clean decision: $clean")
-    // a NEW cluster at 120..139 degrees arrives incrementally: every
-    // vector assigns to the SAME frozen centroid (both trained centroids
-    // sit inside the 0..19-degree arc, and the new arc is single-sidedly
-    // closer to the higher-angle one) -> that cell now holds 30/40
-    eng.bulkIngest(lib, doc, arc("b", 120))
-    val skewed = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
-    assert(skewed.rebuilt && skewed.nEntries == 40, s"expected skew rebuild: $skewed")
-    assert(skewed.maxSharePpm == 750000L,
-      s"30-of-40 pile-up should read exactly 750000 ppm: $skewed")
-    // the rebuild re-trained on the full corpus: two far clusters, one
-    // centroid each -> exactly 20/20 (500000 ppm), policy clean again
-    val after = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
-    assert(!after.rebuilt && after.nEntries == 40, s"post-rebuild still skewed: $after")
-    assert(after.maxSharePpm == 500000L,
-      s"two equal clusters should split 20/20: $after")
+    // trained (Lloyd) and md5-seeded cells: both modes audit their cells.
+    // Expected worst-cell shares in ppm (clean, skewed, after rebuild):
+    // ivf splits the arc 10/10, then 30 of 40 pile up; ivf_det's md5
+    // seeds split it 11/9, then 31 of 40. Both rebuilds give 20/20.
+    for ((family, (cleanPpm, skewPpm)) <- Seq(
+        "ivf" -> (500000L, 750000L), "ivf_det" -> (550000L, 775000L))) {
+      val lib = eng.createLibrary("skew-" + family, 2,
+        IndexConfig(family, ivfNumCentroids = 2, ivfNprobe = 2))
+      val doc = eng.createDocument(lib)
+      // build corpus: one 20-vector arc at 0..19 degrees, split in two cells
+      eng.bulkIngest(lib, doc, arc("a", 0))
+      eng.rebuildIndex(lib)
+      val clean = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
+      assert(!clean.rebuilt && clean.family == family && clean.nEntries == 20 &&
+        clean.maxSharePpm == cleanPpm, s"unexpected clean decision: $clean")
+      // a NEW cluster at 120..139 degrees arrives incrementally: every
+      // vector assigns to the SAME frozen centroid (both built centroids
+      // sit inside the 0..19-degree arc, and the new arc is single-sidedly
+      // closer to the higher-angle one)
+      eng.bulkIngest(lib, doc, arc("b", 120))
+      val skewed = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
+      assert(skewed.rebuilt && skewed.nEntries == 40 && skewed.maxSharePpm == skewPpm,
+        s"expected skew rebuild: $skewed")
+      // the rebuild re-placed the cells on the full corpus: two far
+      // clusters, one centroid each -> exactly 20/20, policy clean again
+      val after = eng.rebalanceIfSkewed(lib, maxSharePpm = 700000L)
+      assert(!after.rebuilt && after.nEntries == 40 && after.maxSharePpm == 500000L,
+        s"post-rebuild still skewed: $after")
+    }
     // families with no balance-audited units refuse the audit
     val flatLib2 = eng.createLibrary("flatlib-skew", 2)
     intercept[EngineErrors.ValidationError] {

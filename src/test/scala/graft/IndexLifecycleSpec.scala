@@ -30,11 +30,14 @@ class IndexLifecycleSpec extends AnyFunSuite {
     "flat" -> Set(),
     "lsh_det" -> Set("lsh_planes", "lsh_buckets"),
     "ivf_det" -> Set("ivf_centroids", "ivf_postings"),
+    "ivf" -> Set("ivf_centroids", "ivf_postings"),
     "nsw_det" -> Set("ivf_centroids", "ivf_postings", "nsw_edges"),
     "hnsw_det" -> Set("ivf_centroids", "ivf_postings", "nsw_edges",
       "hnsw_edges"),
     "pq" -> Set("pq_codebooks", "pq_codes"),
+    "pq_trained" -> Set("pq_codebooks", "pq_codes"),
     "ivfpq" -> Set("ivf_centroids", "pq_codebooks", "ivfpq_codes"),
+    "ivfpq_trained" -> Set("ivf_centroids", "pq_codebooks", "ivfpq_codes"),
     "bq" -> Set("bq_codes"),
     "ivfbq" -> Set("ivf_centroids", "ivfbq_codes"),
     "sq8" -> Set("sq8_params", "sq8_codes"),
@@ -70,13 +73,19 @@ class IndexLifecycleSpec extends AnyFunSuite {
     // a bystander library whose partitions no transition may touch
     val other = library(eng, "other", "hnsw_det", 8, "o")
     val lib = library(eng, "moving", "flat", 12, "m")
-    val forward = Seq("flat", "lsh_det", "ivf_det", "nsw_det", "hnsw_det",
-      "pq", "ivfpq", "bq", "ivfbq", "sq8", "ivfsq8")
+    val forward = Seq("flat", "lsh_det", "ivf_det", "ivf", "nsw_det",
+      "hnsw_det", "pq", "pq_trained", "ivfpq", "ivfpq_trained", "bq", "ivfbq",
+      "sq8", "ivfsq8")
     assert(forward.toSet == owned.keySet)
     (forward ++ forward.reverse).sliding(2).foreach { case Seq(from, to) =>
       eng.updateIndexConfig(lib, config(to))
       assert(partitions(store, lib) == owned(to), s"$from -> $to")
       assert(partitions(store, other) == owned("hnsw_det"), s"$from -> $to")
+      // each family reports its own index once built, and only its own
+      // (a graph library is not an ivf one); flat has none
+      assert(eng.libraryStats(lib).builtIndex == Some(to).filter(_ != "flat"),
+        s"$from -> $to")
+      assert(eng.libraryStats(other).builtIndex.contains("hnsw_det"), s"$from -> $to")
       assert(eng.search(lib, Array(1f, 0f, 0f, 0f), k = 3).collect().nonEmpty,
         s"$from -> $to")
     }
@@ -111,5 +120,36 @@ class IndexLifecycleSpec extends AnyFunSuite {
     assert(parts.isEmpty, s"delete left partitions in ${parts.mkString(", ")}")
     assert(jobs == bareJobs,
       s"delete ran $jobs jobs beside other families' tables, $bareJobs without")
+  }
+  test("ingest into a built index indexes the stored vectors of a nondeterministic batch") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = graft.TempDirs.scratch("graft-ingest-ckpt").toString
+    val eng = new VectorEngine(spark, dir, fixedClock)
+    val store = new StateStore(spark, dir)
+    val lib = library(eng, "built", "ivf_det", 12, "b")
+    val doc = eng.createDocument(lib)
+    // every evaluation of the batch draws fresh vectors: an index add
+    // that re-ran the ingest plan would index vectors the chunk table
+    // does not hold
+    val draw = udf(() => Array.fill(4)(scala.util.Random.nextGaussian().toFloat))
+      .asNondeterministic()
+    val batch = (0 until 20).map(i => (f"n$i%03d", s"n $i")).toDF("id", "text")
+      .withColumn("embedding", draw())
+    eng.bulkIngest(lib, doc, batch)
+    val stored = eng.chunks.filter(col("id").startsWith("n"))
+      .select(col("id"), col("embedding")).collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap
+    val posted = store.read("ivf_postings", Schemas.ivfPostings)
+      .filter(col("library_id") === lib && col("chunk_id").startsWith("n"))
+      .select(col("chunk_id"), col("embedding_norm")).collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap
+    assert(stored.size == 20 && posted.keySet == stored.keySet)
+    posted.foreach { case (id, v) =>
+      val e = stored(id)
+      val n = math.sqrt(e.map(x => x.toDouble * x).sum)
+      e.indices.foreach(j => assert(math.abs(v(j) - e(j) / n) < 1e-6,
+        s"$id: posting vector is not the stored chunk vector"))
+    }
   }
 }
